@@ -15,18 +15,48 @@ oracle's) carry DuckDB oracles and are ORACLE-tier — the UDF machinery
 is the thing demonstrated, but the VALUES are still hash-checkable.
 Only genuinely engine-specific bodies (order-dependent float
 recurrences like EWMA, quantile-boundary subsets) stay ROWS-tier.
+
+Per-call cost: every grouped-map call (applyInPandas, cogrouped
+applyInPandas) pays a fixed toll at the Python boundary — one pandas
+frame build per side, one Arrow stream per side with its own schema,
+one result frame — whatever its row count. Grouping on a high-
+cardinality key with a few dozen rows per key (users) is therefore
+dominated by that toll, not by the body. The per-key ops here group on
+`key_bucket(...)` instead and run the unchanged per-key logic over
+every key in the bucket, so the boundary is crossed once per bucket.
+Bucket sizing: the bucket count is the session's
+`spark.sql.shuffle.partitions`, so a bucket holds about one shuffle
+partition of rows at any scale — the call count is fixed by the
+shuffle width, not by the key count.
 """
+
+import sys
 
 # NOTE: no `from __future__ import annotations` here — pandas_udf
 # resolves signature type hints at decoration time, and stringified
 # annotations ('pd.Series') break that inference.
 import pandas as pd  # noqa: F401  (needed for pandas_udf signatures)
-
+from pyspark import cloudpickle
+from pyspark.sql import Column, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql.types import DoubleType, IntegerType
 
 from sparkml_spark.registry import query
 from sparkml_spark.sources.loader import load_table
+
+# Module-level UDF bodies (cogroup_user_totals) ship to the Python
+# workers by value: a worker need not be able to import this package
+# (__spark_entry__.py may be loaded by path from any directory).
+cloudpickle.register_pickle_by_value(sys.modules[__name__])
+
+
+def key_bucket(spark: SparkSession, key: str) -> Column:
+    """`pmod(xxhash64(key), n)` with n = the session's
+    `spark.sql.shuffle.partitions`: the grouping column that batches
+    many keys into one grouped-map call (module docstring). Read the
+    conf after `load_table`, which applies the engine's confs."""
+    n = int(spark.conf.get("spark.sql.shuffle.partitions"))
+    return F.pmod(F.xxhash64(key), F.lit(n))
 
 
 @query(
@@ -323,7 +353,7 @@ def udaf_ewma_apply_in_pandas(spark, sf_dir):
     """Exponentially-weighted moving average per user — the canonical
     ORDER-DEPENDENT recurrence (s_t = a*v_t + (1-a)*s_{t-1}) that no
     built-in window frame expresses; applyInPandas is the right escape
-    hatch: one Arrow batch per user, sorted inside the group.
+    hatch.
 
     ORACLE-tier (r6): the UDF runs the recurrence EXPLICITLY with the
     literal op order `(1-a)*s + a*v`, which a recursive-CTE oracle
@@ -335,24 +365,32 @@ def udaf_ewma_apply_in_pandas(spark, sf_dir):
     `round(x, 6)` is half-even in numpy but half-away in DuckDB and
     ~2e-4 of rows land exactly on a representable n+0.5 tie after
     scaling (measured r6, 19/100k rows at sf0.1).
-    Deterministic: groups are hash-partitioned by user_id, rows sorted
-    by (ts, event_id) inside the group, fixed alpha.
 
-    Scale: state per group is O(1); groups are independent — this is
+    Per-call cost: a user has a few dozen events, so one call per user
+    is all boundary toll (module docstring). The groups are
+    `key_bucket(user_id)` buckets instead — one call per bucket, about
+    one shuffle partition of rows each. Inside a call the rows are
+    sorted by (user_id, ts, event_id) and the recurrence restarts at
+    every user boundary, so each user's series is exactly the per-user
+    one. Deterministic: fixed alpha, total order inside each user.
+
+    Scale: state per user is O(1); users are independent — this is
     exactly the batch twin of `stream_stateful_custom`'s running
-    state, and at 100 TB it shards by user across executors with one
-    shuffle."""
+    state, and at 100 TB it shards by user bucket across executors
+    with one shuffle."""
     import numpy as np
     import pandas as pd
 
     def ewma(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values(["ts", "event_id"])
-        v = pdf["value"].to_numpy()
-        out = np.empty_like(v, dtype="float64")
+        pdf = pdf.sort_values(["user_id", "ts", "event_id"])
+        users = pdf["user_id"].to_numpy()
+        starts = np.ones(len(users), dtype=bool)
+        starts[1:] = users[1:] != users[:-1]
+        out = np.empty(len(users), dtype="float64")
         a = 0.3
         s = 0.0
-        for i, x in enumerate(v):
-            s = x if i == 0 else (1 - a) * s + a * x
+        for i, (x, first) in enumerate(zip(pdf["value"].tolist(), starts.tolist())):
+            s = x if first else (1 - a) * s + a * x
             out[i] = s
         return pd.DataFrame(
             {
@@ -364,8 +402,12 @@ def udaf_ewma_apply_in_pandas(spark, sf_dir):
         )
 
     e = load_table(spark, sf_dir, "events").select("event_id", "user_id", "ts", "value")
-    return e.groupBy("user_id").applyInPandas(
-        ewma, "event_id BIGINT, user_id BIGINT, value DOUBLE, ewma_micro BIGINT"
+    return (
+        e.withColumn("user_bucket", key_bucket(spark, "user_id"))
+        .groupBy("user_bucket")
+        .applyInPandas(
+            ewma, "event_id BIGINT, user_id BIGINT, value DOUBLE, ewma_micro BIGINT"
+        )
     )
 
 
@@ -431,6 +473,28 @@ def map_in_arrow(spark, sf_dir):
     ).select("doc_id", "n_chars_x2")
 
 
+def cogroup_user_totals(left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
+    """Merge one cogrouped bucket of (user_id, value) purchase rows
+    (`left`) and view rows (`right`) into one row per user: counts and
+    `round(float(sum), 2)` per side. Users are the union of both sides;
+    a user absent from a side gets 0 / 0.0 for it. A side the bucket
+    does not reach arrives as an empty frame that may carry no columns
+    at all."""
+
+    def side(df):
+        if "user_id" not in df:
+            return pd.Series(dtype="int64"), pd.Series(dtype="float64")
+        g = df.groupby("user_id")["value"]
+        return g.size(), g.sum().map(lambda x: round(float(x), 2))
+
+    (n_p, s_p), (n_v, s_v) = side(left), side(right)
+    out = pd.DataFrame(
+        {"n_purchases": n_p, "n_views": n_v, "purchase_value": s_p, "view_value": s_v}
+    )
+    out = out.fillna(0).astype({"n_purchases": "int64", "n_views": "int64"})
+    return out.rename_axis("user_id").reset_index()
+
+
 @query(
     "udaf_cogroup_pandas",
     section="2.L",
@@ -452,42 +516,30 @@ FROM p FULL JOIN v ON p.user_id = v.user_id
 )
 def udaf_cogroup_pandas(spark, sf_dir):
     """Cogrouped applyInPandas — the two-table Arrow escape hatch:
-    purchases and views cogrouped per user, merged in one pandas
-    call (the asof/custom-merge seam when DataFrame joins can't
-    express the pairing). Grouped Arrow batches in; per-user counts +
-    value sums out. ORACLE-tier: counts are exact and the per-user
-    sums are over few 2-decimal values, so the round(2) recovers the
-    exact cent on both engines (the oracle is the FULL JOIN of the
-    two per-side aggregates, null-filled like the empty cogroup
-    frames). One shuffle per side on the cogroup key, same as a
-    join."""
-    import pandas as pd
+    purchases and views cogrouped, merged in pandas (the asof/custom-
+    merge seam when DataFrame joins can't express the pairing).
+    Grouped Arrow batches in; per-user counts + value sums out.
+    ORACLE-tier: counts are exact and the per-user sums are over few
+    2-decimal values, so the round(2) recovers the exact cent on both
+    engines (the oracle is the FULL JOIN of the two per-side
+    aggregates, 0-filled like a user missing from one side).
 
+    Per-call cost: a user has a few dozen events, so one call per user
+    pays two Arrow streams and three frame builds for a handful of
+    rows (module docstring). The cogroup key is `key_bucket(user_id)`
+    instead — one call per bucket, about one shuffle partition of rows
+    each — and `cogroup_user_totals` runs the per-user merge over
+    every user in the bucket. One shuffle per side on the bucket, same
+    as a join."""
     e = load_table(spark, sf_dir, "events")
-    p = e.filter(F.col("event_type") == "purchase").select("user_id", "value")
-    v = e.filter(F.col("event_type") == "view").select("user_id", "value")
-
-    def merge(key, left: pd.DataFrame, right: pd.DataFrame) -> pd.DataFrame:
-        # A key present on only one side arrives with an EMPTY frame —
-        # which may carry no columns at all, so guard the lookups.
-        def vsum(df):
-            return round(float(df["value"].sum()), 2) if "value" in df else 0.0
-
-        return pd.DataFrame(
-            {
-                "user_id": [key[0]],
-                "n_purchases": [len(left)],
-                "n_views": [len(right)],
-                "purchase_value": [vsum(left)],
-                "view_value": [vsum(right)],
-            }
-        )
-
+    bucket = key_bucket(spark, "user_id").alias("user_bucket")
+    p = e.filter(F.col("event_type") == "purchase").select(bucket, "user_id", "value")
+    v = e.filter(F.col("event_type") == "view").select(bucket, "user_id", "value")
     return (
-        p.groupBy("user_id")
-        .cogroup(v.groupBy("user_id"))
+        p.groupBy("user_bucket")
+        .cogroup(v.groupBy("user_bucket"))
         .applyInPandas(
-            merge,
+            cogroup_user_totals,
             "user_id long, n_purchases long, n_views long, "
             "purchase_value double, view_value double",
         )

@@ -140,21 +140,66 @@ def test_hll_union_estimate_close(spark):
     assert abs(row["est_total_users"] - exact) / exact < 0.05, (row, exact)
 
 
-def test_ewma_recurrence(spark):
-    # s_0 = v_0 and s_t = a*v_t + (1-a)*s_{t-1}; recompute one user's
+def test_ewma_recurrence(spark, duck):
+    # s_0 = v_0 and s_t = a*v_t + (1-a)*s_{t-1}; recompute EVERY user's
     # series in plain Python and compare the fixed-point micro output.
-    rows = QUERIES["udaf_ewma_apply_in_pandas"](spark, SF_DIR).collect()
-    by_user = {}
-    for r in rows:
-        by_user.setdefault(r["user_id"], []).append(r)
-    uid, series = sorted(by_user.items())[0]
-    series.sort(key=lambda r: r["event_id"])  # event_id monotonic with ts
-    s = None
-    for r in series:
-        s = r["value"] if s is None else (1 - 0.3) * s + 0.3 * r["value"]
+    # The UDF runs many users per call (one per user bucket), so a
+    # recurrence that leaked across a user boundary would break the
+    # series of the second user in a shared bucket.
+    from sparkml_spark.operators.udfs import key_bucket
+    from sparkml_spark.sources.loader import load_table
+
+    events = load_table(spark, SF_DIR, "events")
+    per_bucket = (
+        events.groupBy(key_bucket(spark, "user_id").alias("b"))
+        .agg(F.countDistinct("user_id").alias("n"))
+        .agg(F.max("n"))
+        .first()[0]
+    )
+    assert per_bucket >= 2, "no bucket holds two users: the check cannot bite"
+
+    got = {
+        r["event_id"]: r
+        for r in QUERIES["udaf_ewma_apply_in_pandas"](spark, SF_DIR).collect()
+    }
+    ordered = duck.sql(
+        "SELECT event_id, user_id, value FROM events ORDER BY user_id, ts, event_id"
+    ).fetchall()
+    assert len(got) == len(ordered)
+    prev_user, s = None, None
+    for event_id, uid, value in ordered:
+        s = value if uid != prev_user else (1 - 0.3) * s + 0.3 * value
+        prev_user = uid
+        r = got[event_id]
+        assert r["user_id"] == uid and r["value"] == value, (r, uid, value)
         # floor, not int(): int() truncates toward zero and diverges
         # from the UDF/oracle on negative EWMA values (code-review r6)
         assert r["ewma_micro"] == math.floor(s * 1e6 + 0.5), (uid, r, s)
+
+
+def test_cogroup_user_totals_merge():
+    # The per-bucket merge of udaf_cogroup_pandas, on literal frames.
+    import pandas as pd
+
+    from sparkml_spark.operators.udfs import cogroup_user_totals
+
+    cols = ["user_id", "n_purchases", "n_views", "purchase_value", "view_value"]
+    views = pd.DataFrame({"user_id": [7, 7, 9], "value": [1.10, 2.25, 0.5]})
+    # a bucket with no purchase rows: that side arrives with no columns
+    out = cogroup_user_totals(pd.DataFrame(), views).sort_values("user_id")
+    assert list(out.columns) == cols
+    assert out.values.tolist() == [[7, 0, 2, 0.0, 3.35], [9, 0, 1, 0.0, 0.5]]
+    assert out.dtypes.tolist() == ["int64"] * 3 + ["float64"] * 2
+
+    # user 3 buys but never views, user 9 views but never buys
+    buys = pd.DataFrame({"user_id": [3, 3, 7], "value": [0.1, 0.2, 5.0]})
+    out = cogroup_user_totals(buys, views).sort_values("user_id")
+    assert out.values.tolist() == [
+        [3, 2, 0, 0.3, 0.0],
+        [7, 1, 2, 5.0, 3.35],
+        [9, 0, 1, 0.0, 0.5],
+    ]
+    assert out.dtypes.tolist() == ["int64"] * 3 + ["float64"] * 2
 
 
 def test_stream_sketch_rollup_close_to_exact(spark):

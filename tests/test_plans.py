@@ -335,6 +335,27 @@ def test_semdedup_pairs_meet_inside_cluster_only(spark):
     ), plan[:1500]
 
 
+def test_per_user_udfs_group_on_user_bucket(spark):
+    """udaf_cogroup_pandas and udaf_ewma_apply_in_pandas cross the
+    Python boundary once per user BUCKET, not once per user: their
+    grouped-map nodes (and the shuffles under them) must key on the
+    bucket column. A revert to per-user groups keys on user_id and
+    fails here."""
+    import re
+
+    def plan(qid):
+        return QUERIES[qid](spark, SF_DIR)._jdf.queryExecution().executedPlan().toString()
+
+    cog = plan("udaf_cogroup_pandas")
+    assert re.search(
+        r"FlatMapCoGroupsInPandas \[user_bucket#\w+\], \[user_bucket#\w+\],", cog
+    ), cog[:1500]
+    assert "Exchange hashpartitioning(user_id" not in cog, cog[:1500]
+    ewma = plan("udaf_ewma_apply_in_pandas")
+    assert re.search(r"FlatMapGroupsInPandas \[user_bucket#\w+\],", ewma), ewma[:1500]
+    assert "Exchange hashpartitioning(user_id" not in ewma, ewma[:1500]
+
+
 def test_exact_substring_no_window_on_gram_key(spark):
     """VERDICT r7 #2: the corpus-wide gram repeat test must be a
     partial aggregation + semi-join, never a window partitioned on the
@@ -1041,11 +1062,13 @@ def test_r11_wave16_plan_shapes(spark):
     # count exchanges on the simple plan string: the formatted
     # explain (shuffle_count) truncates plans carrying the folded
     # 128/136-element ring literals and loses the Exchange line.
-    # ADVICE r13: a ReusedExchange line embeds the text "Exchange
-    # hashpartitioning" without adding a shuffle, so count only
-    # non-reuse occurrences (lookbehind), keeping the gate meaningful
-    # under exchange reuse or AQE replanning.
-    n_shuffles = len(re.findall(r"(?<!Reused)Exchange hashpartitioning", plan))
+    # A reuse line reads "ReusedExchange [..], Exchange hashpartitioning"
+    # without adding a shuffle, so count per line and skip those lines,
+    # keeping the gate meaningful under exchange reuse or AQE replanning.
+    n_shuffles = sum(
+        "Exchange hashpartitioning" in line and "ReusedExchange" not in line
+        for line in plan.splitlines()
+    )
     assert n_shuffles == 1, plan[:2000]
     assert has_partial_aggregate(ring)
 
