@@ -6,7 +6,8 @@
 # under a hard timeout so a hang can't block the one-shot forever.
 #
 # Usage: bash scripts/verify_all.sh [--quick]
-#   --quick: sf0.01 sim + bench only (skips pytest and the other scales)
+#   --quick: fit-memo pair test + sf0.01 sim + bench only (skips the
+#            rest of pytest and the other scales)
 set -u
 cd "$(dirname "$0")/.."
 
@@ -48,6 +49,12 @@ if [ $quick -eq 0 ]; then
   # the 2-batch streaming feeds); the old 1200s cap was sized for the
   # r7-era suite and started killing healthy runs at ~43%.
   run "pytest" timeout 2400 python -m pytest tests/ -q -x
+else
+  # Fitted-model sharing: every *_bound sibling must reuse its base
+  # queries' fits (tests/test_memo.py), so a memo-key regression shows
+  # up without the full suite.
+  run "memo pairs" timeout 900 python -m pytest tests/test_memo.py -q -x \
+    -k memo_pair -p no:cacheprovider
 fi
 run "sim sf0.01" timeout 1800 python scripts/driver_sim.py
 if [ $quick -eq 0 ]; then

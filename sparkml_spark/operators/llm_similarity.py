@@ -158,7 +158,6 @@ def sim_lsh_ann(spark, sf_dir):
     e = load_table(spark, sf_dir, "embeddings")
     vecs = e.select("vec_id", array_to_vector("embedding").alias("features"))
     q = vecs.filter(F.col("vec_id") < _N_QUERIES)
-    # r14: the seeded fit is shared across the sim family's session
     model = _brp_lsh_model(spark, sf_dir)
     pairs = model.approxSimilarityJoin(q, vecs, 1.2, distCol="euclid")
     w = Window.partitionBy("query_id").orderBy(F.col("euclid").asc(), F.col("neighbor_id").asc())
@@ -180,44 +179,23 @@ def build_ivf_index(spark, sf_dir):
     """Fit the IVF coarse quantizer (KMeans k=16, seed=42) and return
     the index as two RELATIONS: `assign` (vec_id, embedding, cell) —
     the inverted file — and `centroids` (cell, centroid). Pure data,
-    so the index persists as plain parquet (save/load_ivf_index).
-
-    r14 (VERDICT r13 #1): the quantizer fit is memoized per session —
-    five sim queries (sim_ivf_ann, the persisted twin, both recall
-    bounds, the rrf-ann pair) each refit the identical seeded KMeans
-    on the identical embeddings table. One build per session per
-    artifact; a fresh process always refits from parquet (the memo is
-    keyed by the live applicationId — nothing keyed on the input path
-    survives the process)."""
-    import os
-
-    from sparkml_spark.session import session_artifact
-
-    return session_artifact(
-        spark,
-        ("sim_ivf_index", os.path.realpath(sf_dir)),
-        lambda: build_ivf_index_from(
-            spark, load_table(spark, sf_dir, "embeddings")
-        ),
-    )
+    so the index persists as plain parquet (save/load_ivf_index)."""
+    return build_ivf_index_from(spark, load_table(spark, sf_dir, "embeddings"))
 
 
 def build_ivf_index_from(spark, e):
     """build_ivf_index over an arbitrary (vec_id, embedding) frame —
     lets the incremental-ingest op fit the quantizer on the STANDING
-    subset only."""
+    subset only. The quantizer is a session-shared fit (_shared_fit)."""
     from pyspark.ml.clustering import KMeans
     from pyspark.ml.functions import array_to_vector
 
-    vecs = e.select("vec_id", "embedding", array_to_vector("embedding").alias("features"))
-    from sparkml_spark.operators.ml import _strip_summary
+    from sparkml_spark.operators.ml import _shared_fit
 
-    km = KMeans(k=16, seed=42, featuresCol="features", predictionCol="cell")
-    # Strip the training summary before transform: KMeansModel carries
-    # a session-referencing summary, and serializing it into the
-    # transform closure dies once the session has served an observe()
-    # query (see operators/ml.py `_strip_summary`).
-    model = _strip_summary(km.fit(vecs))
+    vecs = e.select("vec_id", "embedding", array_to_vector("embedding").alias("features"))
+    model = _shared_fit(
+        KMeans(k=16, seed=42, featuresCol="features", predictionCol="cell"), vecs
+    )
     assign = model.transform(vecs).select("vec_id", "embedding", "cell")
     centroids = spark.createDataFrame(
         [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())],
@@ -913,11 +891,10 @@ def ensure_ivf_index(spark, sf_dir) -> str:
         centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
         return path
 
-    # r14 (VERDICT r13 #1): write the artifact once per SESSION, not
-    # once per caller — the three persisted-index queries each
-    # re-materialized identical parquet. Keyed by applicationId, so a
-    # fresh process always rebuilds+rewrites from source (a stale
-    # on-disk artifact from an earlier process is never trusted).
+    # Written once per SparkContext, not once per caller. The memo is
+    # keyed by applicationId, so a fresh process always rebuilds and
+    # rewrites from source (a stale on-disk artifact from an earlier
+    # process is never trusted).
     from sparkml_spark.session import session_artifact
 
     return session_artifact(
@@ -950,7 +927,7 @@ def ensure_lsh_model(spark, sf_dir) -> str:
         _brp_lsh_model(spark, sf_dir).write().overwrite().save(path)
         return path
 
-    # r14: one MLWriter materialization per session (see
+    # One MLWriter materialization per SparkContext (see
     # ensure_ivf_index for the scope rules).
     from sparkml_spark.session import session_artifact
 
@@ -961,26 +938,19 @@ def ensure_lsh_model(spark, sf_dir) -> str:
 
 def _brp_lsh_model(spark, sf_dir):
     """The family's one BucketedRandomProjectionLSH fit (bucketLength
-    0.5, 4 tables, seed 42) — memoized per session (r14): sim_lsh_ann,
-    sim_ann_recall_bound, sim_ann_recall_reload_bound and
-    ensure_lsh_model all fit the identical seeded model."""
-    import os
-
+    0.5, 4 tables, seed 42), shared across the session (_shared_fit)."""
     from pyspark.ml.feature import BucketedRandomProjectionLSH
     from pyspark.ml.functions import array_to_vector
 
-    from sparkml_spark.session import session_artifact
+    from sparkml_spark.operators.ml import _shared_fit
 
-    def _fit():
-        e = load_table(spark, sf_dir, "embeddings")
-        vecs = e.select("vec_id", array_to_vector("embedding").alias("features"))
-        return BucketedRandomProjectionLSH(
+    e = load_table(spark, sf_dir, "embeddings")
+    return _shared_fit(
+        BucketedRandomProjectionLSH(
             inputCol="features", outputCol="hashes",
             bucketLength=0.5, numHashTables=4, seed=42,
-        ).fit(vecs)
-
-    return session_artifact(
-        spark, ("sim_brp_lsh_model", os.path.realpath(sf_dir)), _fit
+        ),
+        e.select("vec_id", array_to_vector("embedding").alias("features")),
     )
 
 
@@ -1072,7 +1042,7 @@ def sim_ann_recall_reload_bound(spark, sf_dir):
             ).alias("v_integrity")
         )
     )
-    # --- LSH: fresh vs reloaded (MLWriter round trip). r14: the
+    # --- LSH: fresh vs reloaded (MLWriter round trip). The
     # "fresh" side is the session's shared seeded fit — identical to
     # the refit it replaces (seed 42 draw); the reload side still
     # exercises the full MLWriter round trip per run.

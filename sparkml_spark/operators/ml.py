@@ -35,6 +35,16 @@ def _features(spark, sf_dir):
     )
 
 
+def _nchars_data(spark, sf_dir):
+    """Regression frame: each embedding's features against its
+    document's n_chars as the label."""
+    d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
+    vecs = _features(spark, sf_dir).withColumnRenamed("label", "cls")
+    return vecs.join(d, vecs.vec_id == d.doc_id).select(
+        "vec_id", F.col("n_chars").cast("double").alias("label"), "features"
+    )
+
+
 def _train_test(df):
     """Deterministic split on the key — reproducible without RNG."""
     return df.filter(F.col("vec_id") % 5 != 0), df.filter(F.col("vec_id") % 5 == 0)
@@ -65,28 +75,72 @@ def _strip_summary(model):
         shutil.rmtree(path, ignore_errors=True)
 
 
-def _shared_fit(spark, sf_dir, name: str, build):
-    """Session-scoped fitted-model memo (r14, VERDICT r13 #3 — guide
-    §1.2 "don't compute things you throw away"): the *_bound pin
-    queries audit the SAME seeded, deterministic fits their base
-    queries produce — ml_mlp_linear_fit_bound refits the exact
-    MLP/OneVsRest/NaiveBayes/FM estimators ml_classify_mlp /
-    ml_classify_linear / ml_isotonic_aft_fm already fit in the same
-    session (25-30 s of pure scheduler round-trips on a 2,080-row
-    train set). Fitting once per session and auditing that one model
-    is evaluate-once, not caching: keyed by the live applicationId so
-    a fresh process always refits from parquet; within a session the
-    refit it replaces was bit-identical (same seed, same key-split,
-    same partitioning) — no declared output changes. The fitted-data
-    partitioning is deliberately untouched (coalescing the train set
-    would change treeAggregate order and could flip predictions)."""
-    import os
+def _fingerprint(value):
+    """Uid-free, hashable digest of a param value: a Params object
+    (estimator, Pipeline stage, evaluator) is its class plus its
+    extractParamMap() keyed by param name, recursively; a tuning grid
+    is a list of such name-keyed maps."""
+    from pyspark.ml.param import Params
 
+    if isinstance(value, Params):
+        return (type(value), _fingerprint(value.extractParamMap()))
+    if isinstance(value, dict):
+        return tuple(sorted((p.name, _fingerprint(v)) for p, v in value.items()))
+    if isinstance(value, (list, tuple)):
+        return tuple(_fingerprint(v) for v in value)
+    return repr(value)
+
+
+def _has_summary(model) -> bool:
+    """Does `model`, or a PipelineModel stage / OneVsRest sub-model of
+    it, carry a training summary (see _strip_summary)?"""
+    from pyspark.ml import PipelineModel
+    from pyspark.ml.classification import OneVsRestModel
+    from pyspark.ml.util import HasTrainingSummary
+
+    if isinstance(model, PipelineModel):
+        subs = model.stages
+    elif isinstance(model, OneVsRestModel):
+        subs = model.models
+    else:
+        subs = []
+    return (isinstance(model, HasTrainingSummary) and model.hasSummary) or any(
+        _has_summary(m) for m in subs
+    )
+
+
+def _fit(estimator, df):
+    model = estimator.fit(df)
+    return _strip_summary(model) if _has_summary(model) else model
+
+
+def _shared_fit(estimator, df):
+    """`estimator.fit(df)`, fitted once per SparkContext.
+
+    The memo key is derived from the inputs: the estimator's class and
+    param map (`_fingerprint`) plus the semanticHash() of `df`'s
+    analyzed plan, which is invariant to expression ids, so sibling
+    queries that build the same training frame independently share one
+    fit. A hit is served only if the stored plan also `sameResult`s the
+    caller's; otherwise the model is refit, so a hash collision cannot
+    serve a model fit on other data. Frames whose plans hold a new
+    closure or LogicalRDD per build (an MLlib `transform`, a
+    checkpoint) never hit: fit them as one Pipeline on the source frame
+    instead.
+
+    A model carrying a training summary comes back stripped
+    (_strip_summary). The training frame's partitioning is untouched:
+    coalescing it would change treeAggregate order and could flip
+    predictions."""
     from sparkml_spark.session import session_artifact
 
-    return session_artifact(
-        spark, ("ml_fit", os.path.realpath(sf_dir), name), build
+    plan = df._jdf.queryExecution().analyzed()
+    stored, model = session_artifact(
+        df.sparkSession,
+        (_fingerprint(estimator), plan.semanticHash()),
+        lambda: (plan, _fit(estimator, df)),
     )
+    return model if stored.sameResult(plan) else _fit(estimator, df)
 
 
 @query("ml_feature_text_pipeline", section="2.J")
@@ -222,10 +276,7 @@ def ml_feature_pca(spark, sf_dir):
     from pyspark.ml.functions import vector_to_array
 
     vecs = _features(spark, sf_dir)
-    pca = _shared_fit(
-        spark, sf_dir, "pca8",
-        lambda: PCA(k=8, inputCol="features", outputCol="pca").fit(vecs),
-    )
+    pca = _shared_fit(PCA(k=8, inputCol="features", outputCol="pca"), vecs)
     out = Normalizer(inputCol="pca", outputCol="pca_unit", p=2.0).transform(
         pca.transform(vecs)
     )
@@ -296,10 +347,7 @@ def ml_classify_logistic(spark, sf_dir):
     from pyspark.ml.classification import LogisticRegression
 
     train, test = _train_test(_features(spark, sf_dir))
-    model = _shared_fit(
-        spark, sf_dir, "lr25_reg01",
-        lambda: _strip_summary(LogisticRegression(maxIter=25, regParam=0.01).fit(train)),
-    )
+    model = _shared_fit(LogisticRegression(maxIter=25, regParam=0.01), train)
     return model.transform(test).select(
         "vec_id",
         F.col("label").cast("int").alias("label"),
@@ -327,12 +375,7 @@ def ml_fit_quality_bound(spark, sf_dir):
 
     feats = _features(spark, sf_dir)
     train, _test = _train_test(feats)
-    # r14: same estimator+params+split as ml_classify_logistic — audit
-    # the session's one fitted model (_shared_fit) instead of refitting
-    lr = _shared_fit(
-        spark, sf_dir, "lr25_reg01",
-        lambda: _strip_summary(LogisticRegression(maxIter=25, regParam=0.01).fit(train)),
-    )
+    lr = _shared_fit(LogisticRegression(maxIter=25, regParam=0.01), train)
     acc = lr.transform(train).agg(
         (
             F.count_if(F.col("prediction") == F.col("label"))
@@ -375,10 +418,7 @@ def ml_classify_trees(spark, sf_dir):
             (F.col("label") == F.col("prediction")).cast("long").alias("correct"),
         )
 
-    dt = _shared_fit(
-        spark, sf_dir, "dtc_depth8",
-        lambda: DecisionTreeClassifier(seed=SEED, maxDepth=8).fit(train),
-    )
+    dt = _shared_fit(DecisionTreeClassifier(seed=SEED, maxDepth=8), train)
     preds = (
         scored("decision_tree", dt, test)
         .unionByName(
@@ -406,16 +446,8 @@ def ml_classify_linear(spark, sf_dir):
     from pyspark.ml.classification import LinearSVC, NaiveBayes, OneVsRest
 
     train, test = _train_test(_features(spark, sf_dir))
-    ovr = _shared_fit(
-        spark, sf_dir, "ovr_svc15_reg05",
-        lambda: _strip_summary(
-            OneVsRest(classifier=LinearSVC(maxIter=15, regParam=0.05)).fit(train)
-        ),
-    )
-    nb = _shared_fit(
-        spark, sf_dir, "nb_gaussian",
-        lambda: _strip_summary(NaiveBayes(modelType="gaussian").fit(train)),
-    )
+    ovr = _shared_fit(OneVsRest(classifier=LinearSVC(maxIter=15, regParam=0.05)), train)
+    nb = _shared_fit(NaiveBayes(modelType="gaussian"), train)
     a = ovr.transform(test).select(
         F.col("vec_id"), F.col("prediction").alias("svc_pred")
     )
@@ -439,10 +471,7 @@ def ml_classify_mlp(spark, sf_dir):
 
     train, test = _train_test(_features(spark, sf_dir))
     mlp = _shared_fit(
-        spark, sf_dir, "mlp_64_32_10_it40",
-        lambda: _strip_summary(
-            MultilayerPerceptronClassifier(layers=[64, 32, 10], seed=SEED, maxIter=40).fit(train)
-        ),
+        MultilayerPerceptronClassifier(layers=[64, 32, 10], seed=SEED, maxIter=40), train
     )
     return mlp.transform(test).select(
         "vec_id",
@@ -465,21 +494,10 @@ def ml_regression(spark, sf_dir):
         RandomForestRegressor,
     )
 
-    d = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    vecs = _features(spark, sf_dir).withColumnRenamed("label", "cls")
-    data = vecs.join(d, vecs.vec_id == d.doc_id).select(
-        "vec_id", F.col("n_chars").cast("double").alias("label"), "features"
-    )
-    train, test = _train_test(data)
+    train, test = _train_test(_nchars_data(spark, sf_dir))
     ev = RegressionEvaluator(metricName="rmse")
     models = [
-        (
-            "linear",
-            _shared_fit(
-                spark, sf_dir, "linreg25_nchars",
-                lambda: _strip_summary(LinearRegression(maxIter=25).fit(train)),
-            ),
-        ),
+        ("linear", _shared_fit(LinearRegression(maxIter=25), train)),
         ("glm_gaussian", _strip_summary(GeneralizedLinearRegression(family="gaussian").fit(train))),
         ("decision_tree", DecisionTreeRegressor(seed=SEED, maxDepth=8).fit(train)),
         ("random_forest", RandomForestRegressor(seed=SEED, numTrees=20).fit(train)),
@@ -541,6 +559,7 @@ def ml_clustering(spark, sf_dir):
 def ml_lda_topics(spark, sf_dir):
     """LDA (k=5, seed=42) over CountVectorizer token counts; emits the
     top-5 term indices per topic."""
+    from pyspark.ml import Pipeline
     from pyspark.ml.clustering import LDA
     from pyspark.ml.feature import CountVectorizer
 
@@ -548,17 +567,15 @@ def ml_lda_topics(spark, sf_dir):
     toks = d.select(
         "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("tokens")
     )
-    cv = _shared_fit(
-        spark, sf_dir, "lda_cv_vocab",
-        lambda: CountVectorizer(inputCol="tokens", outputCol="features").fit(toks),
-    )
-    counts = cv.transform(toks)
-    # r14: ml_embed_models_bound re-runs this whole query — share the
-    # session's one seeded EM fit (the expensive half)
     lda = _shared_fit(
-        spark, sf_dir, "lda5_em10",
-        lambda: LDA(k=5, seed=SEED, maxIter=10, optimizer="em").fit(counts),
-    )
+        Pipeline(
+            stages=[
+                CountVectorizer(inputCol="tokens", outputCol="features"),
+                LDA(k=5, seed=SEED, maxIter=10, optimizer="em"),
+            ]
+        ),
+        toks,
+    ).stages[1]
     # Flat scalar output by contract: the driver canonicalizer cannot
     # hash array-valued cells (VERDICT r5 "What's wrong" #1), so the
     # top-5 term indices are serialized to CSV inside the plan.
@@ -580,11 +597,11 @@ def ml_word2vec(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     toks = d.select(F.split(F.lower(F.trim("text")), r"\s+").alias("tokens"))
     w2v = _shared_fit(
-        spark, sf_dir, "w2v16_it2",
-        lambda: Word2Vec(
+        Word2Vec(
             vectorSize=16, seed=SEED, minCount=1, inputCol="tokens",
             outputCol="vec", maxIter=2,
-        ).fit(toks),
+        ),
+        toks,
     )
     return w2v.getVectors().select(
         "word",
@@ -603,28 +620,26 @@ def ml_als_recommend(spark, sf_dir):
     a distinct().collect() dictionary produced, but the vocabulary
     never passes through the driver, so unknown item cardinality at
     100 TB is safe; VERDICT r4 minor #4)."""
-    from pyspark.ml.feature import StringIndexer
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import SQLTransformer, StringIndexer
     from pyspark.ml.recommendation import ALS
 
-    e = load_table(spark, sf_dir, "events")
-    indexer = _shared_fit(
-        spark, sf_dir, "als_item_indexer",
-        lambda: StringIndexer(
-            inputCol="event_type", outputCol="item_idx", stringOrderType="alphabetAsc"
-        ).fit(e),
-    )
-    ratings = (
-        indexer.transform(e)
-        .withColumn("item", F.col("item_idx").cast("int"))
-        .groupBy(F.col("user_id").cast("int").alias("user"), "item")
-        .agg(F.count(F.lit(1)).cast("float").alias("rating"))
-    )
     als = _shared_fit(
-        spark, sf_dir, "als_r4_it8",
-        lambda: ALS(
-            rank=4, maxIter=8, seed=SEED, implicitPrefs=True, coldStartStrategy="drop"
-        ).fit(ratings),
-    )
+        Pipeline(
+            stages=[
+                StringIndexer(
+                    inputCol="event_type", outputCol="item_idx", stringOrderType="alphabetAsc"
+                ),
+                SQLTransformer(
+                    statement="SELECT CAST(user_id AS INT) AS user,"
+                    " CAST(item_idx AS INT) AS item, CAST(count(1) AS FLOAT) AS rating"
+                    " FROM __THIS__ GROUP BY CAST(user_id AS INT), CAST(item_idx AS INT)"
+                ),
+                ALS(rank=4, maxIter=8, seed=SEED, implicitPrefs=True, coldStartStrategy="drop"),
+            ]
+        ),
+        load_table(spark, sf_dir, "events"),
+    ).stages[-1]
     recs = als.recommendForAllUsers(2)
     return recs.select(
         "user",
@@ -747,49 +762,45 @@ def ml_embed_models_bound(spark, sf_dir):
     )
 
 
+def _lr_tuning(spark, sf_dir):
+    """CrossValidator (2-fold) and TrainValidationSplit (80/20), both
+    seed=42, over one LogisticRegression regParam grid: returns the
+    grid's regParam values and the two fitted tuning models."""
+    from pyspark.ml.classification import LogisticRegression
+    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
+    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder, TrainValidationSplit
+
+    data = _features(spark, sf_dir)
+    lr = LogisticRegression(maxIter=15)
+    grid = ParamGridBuilder().addGrid(lr.regParam, [0.01, 0.5]).build()
+    ev = MulticlassClassificationEvaluator(metricName="accuracy")
+    cv = _shared_fit(
+        CrossValidator(
+            estimator=lr, estimatorParamMaps=grid, evaluator=ev,
+            numFolds=2, seed=SEED, parallelism=2,
+        ),
+        data,
+    )
+    tvs = _shared_fit(
+        TrainValidationSplit(
+            estimator=lr, estimatorParamMaps=grid, evaluator=ev,
+            trainRatio=0.8, seed=SEED,
+        ),
+        data,
+    )
+    return [float(g[lr.regParam]) for g in grid], cv, tvs
+
+
 @query("ml_tuning_cv", section="2.J")
 def ml_tuning_cv(spark, sf_dir):
     """CrossValidator (2-fold) AND TrainValidationSplit (80/20), both
     seed=42, over an LR regParam grid — the two tuning strategies side
     by side with their metrics."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
-    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder
-
-    data = _features(spark, sf_dir)
-    lr = LogisticRegression(maxIter=15)
-    grid = ParamGridBuilder().addGrid(lr.regParam, [0.01, 0.5]).build()
-    from pyspark.ml.tuning import TrainValidationSplit
-
-    ev = MulticlassClassificationEvaluator(metricName="accuracy")
-    # r14: ml_cv_selection_bound audits these exact seeded tuning runs
-    # — fit once per session (_shared_fit), ~8 LR fits saved per reuse
-    cv, tvs = _shared_fit(
-        spark, sf_dir, "cv_tvs_lr15",
-        lambda: (
-            CrossValidator(
-                estimator=lr,
-                estimatorParamMaps=grid,
-                evaluator=ev,
-                numFolds=2,
-                seed=SEED,
-                parallelism=2,
-            ).fit(data),
-            TrainValidationSplit(
-                estimator=lr, estimatorParamMaps=grid, evaluator=ev,
-                trainRatio=0.8, seed=SEED,
-            ).fit(data),
-        ),
-    )
+    regs, cv, tvs = _lr_tuning(spark, sf_dir)
     best_reg = cv.bestModel.getRegParam()
     rows = [
-        (
-            float(g[lr.regParam]),
-            float(round(cm, 4)),
-            float(round(tm, 4)),
-            float(g[lr.regParam]) == best_reg,
-        )
-        for g, cm, tm in zip(grid, cv.avgMetrics, tvs.validationMetrics)
+        (reg, float(round(cm, 4)), float(round(tm, 4)), reg == best_reg)
+        for reg, cm, tm in zip(regs, cv.avgMetrics, tvs.validationMetrics)
     ]
     return spark.createDataFrame(
         rows, "reg_param DOUBLE, cv_accuracy DOUBLE, tvs_accuracy DOUBLE, is_best BOOLEAN"
@@ -808,11 +819,7 @@ def ml_pipeline_persist(spark, sf_dir):
     from pyspark.ml.classification import LogisticRegression
 
     train, test = _train_test(_features(spark, sf_dir))
-    pipe = Pipeline(stages=[LogisticRegression(maxIter=10, regParam=0.01)])
-    # r14: ml_persist_roundtrip_bound re-runs this query — share the
-    # one fitted PipelineModel; the save/load round trip (the op under
-    # test) still runs per invocation below.
-    model = _shared_fit(spark, sf_dir, "pipe_lr10", lambda: _strip_summary(pipe.fit(train)))
+    model = _shared_fit(Pipeline(stages=[LogisticRegression(maxIter=10, regParam=0.01)]), train)
     path = tempfile.mkdtemp(prefix="sparkml_pipe_", dir="/tmp")
     try:
         model.write().overwrite().save(path)
@@ -846,19 +853,13 @@ def ml_evaluation_metrics(spark, sf_dir):
     )
 
     train, test = _train_test(_features(spark, sf_dir))
-    m = _shared_fit(
-        spark, sf_dir, "lr20_reg01",
-        lambda: _strip_summary(LogisticRegression(maxIter=20, regParam=0.01).fit(train)),
-    )
+    m = _shared_fit(LogisticRegression(maxIter=20, regParam=0.01), train)
     pred = m.transform(test)
     acc = MulticlassClassificationEvaluator(metricName="accuracy").evaluate(pred)
     f1 = MulticlassClassificationEvaluator(metricName="f1").evaluate(pred)
     bin_train = train.withColumn("label", (F.col("label") < 5).cast("double"))
     bin_test = test.withColumn("label", (F.col("label") < 5).cast("double"))
-    bm = _shared_fit(
-        spark, sf_dir, "lr20_bin",
-        lambda: _strip_summary(LogisticRegression(maxIter=20).fit(bin_train)),
-    )
+    bm = _shared_fit(LogisticRegression(maxIter=20), bin_train)
     auc = BinaryClassificationEvaluator(metricName="areaUnderROC").evaluate(
         bm.transform(bin_test)
     )
@@ -929,6 +930,67 @@ def ml_feature_select_impute(spark, sf_dir):
     return numeric.unionByName(sel_stats)
 
 
+def _isotonic_deciles(o):
+    """IsotonicRegression of order count on average price per
+    o_totalprice decile (a monotone-ish signal): (fitted model, its
+    input frame)."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.regression import IsotonicRegression
+
+    from sparkml_spark.registry import ntile_two_phase
+
+    deciles = (
+        ntile_two_phase(
+            o, 10,
+            bucket=F.floor(F.col("o_totalprice") / 100),
+            order_cols=[F.col("o_totalprice").asc(), F.col("o_orderkey").asc()],
+            out="decile",
+        )
+        .groupBy("decile")
+        .agg(F.avg("o_totalprice").alias("avg_price"), F.count("*").cast("double").alias("n"))
+        .withColumn("label", F.col("n"))
+    )
+    pipe = Pipeline(
+        stages=[
+            VectorAssembler(inputCols=["avg_price"], outputCol="features"),
+            IsotonicRegression(isotonic=True),
+        ]
+    )
+    return _shared_fit(pipe, deciles), deciles
+
+
+def _aft_gaps(o):
+    """AFTSurvivalRegression of each customer's inter-order gap (days
+    + 1) on scaled price, the last gap censored at 30 days: (fitted
+    model, its input frame)."""
+    from pyspark.ml import Pipeline
+    from pyspark.ml.feature import VectorAssembler
+    from pyspark.ml.regression import AFTSurvivalRegression
+    from pyspark.sql import Window
+
+    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
+    gaps = (
+        o.withColumn("next_dt", F.lead("o_orderdate").over(w))
+        .withColumn(
+            "label",
+            F.coalesce(
+                F.datediff(F.col("next_dt"), F.col("o_orderdate")).cast("double"),
+                F.lit(30.0),
+            ) + F.lit(1.0),
+        )
+        .withColumn("censor", F.when(F.col("next_dt").isNull(), 0.0).otherwise(1.0))
+        .select("label", "censor", (F.col("o_totalprice") / 1e5).alias("price_scaled"))
+    )
+    pipe = Pipeline(
+        stages=[
+            VectorAssembler(inputCols=["price_scaled"], outputCol="features"),
+            AFTSurvivalRegression(censorCol="censor", maxIter=25),
+        ]
+    )
+    return _shared_fit(pipe, gaps), gaps
+
+
 @query("ml_isotonic_aft_fm", section="2.J")
 def ml_isotonic_aft_fm(spark, sf_dir):
     """The remaining MLlib regressor families in one operator:
@@ -948,71 +1010,20 @@ def ml_isotonic_aft_fm(spark, sf_dir):
     percentile_approx thresholds + width_bucket (SCALE.md
     global-order pattern)."""
     from pyspark.ml.classification import FMClassifier
-    from pyspark.ml.functions import vector_to_array
-    from pyspark.ml.regression import (
-        AFTSurvivalRegression,
-        FMRegressor,
-        IsotonicRegression,
-    )
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.sql.window import Window
+    from pyspark.ml.regression import FMRegressor
 
     o = load_table(spark, sf_dir, "orders")
-    # Isotonic: order count per totalprice decile (monotone-ish signal)
-    from sparkml_spark.registry import ntile_two_phase
-
-    deciles = (
-        ntile_two_phase(
-            o, 10,
-            bucket=F.floor(F.col("o_totalprice") / 100),
-            order_cols=[F.col("o_totalprice").asc(), F.col("o_orderkey").asc()],
-            out="decile",
-        )
-        .groupBy("decile")
-        .agg(F.avg("o_totalprice").alias("avg_price"), F.count("*").cast("double").alias("n"))
-    )
-    iso_in = VectorAssembler(inputCols=["avg_price"], outputCol="features").transform(
-        deciles.withColumn("label", F.col("n"))
-    )
-    iso = _shared_fit(
-        spark, sf_dir, "iso_deciles",
-        lambda: IsotonicRegression(isotonic=True).fit(iso_in),
-    )
-    iso_rows = iso.transform(iso_in).count()
-
-    # AFT: inter-order gap per customer as a duration; last gap censored
-    w = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gaps = (
-        o.withColumn("next_dt", F.lead("o_orderdate").over(w))
-        .withColumn(
-            "duration",
-            F.coalesce(
-                F.datediff(F.col("next_dt"), F.col("o_orderdate")).cast("double"),
-                F.lit(30.0),
-            ) + F.lit(1.0),
-        )
-        .withColumn("censor", F.when(F.col("next_dt").isNull(), 0.0).otherwise(1.0))
-        .select("duration", "censor", (F.col("o_totalprice") / 1e5).alias("price_scaled"))
-    )
-    aft_in = VectorAssembler(inputCols=["price_scaled"], outputCol="features").transform(
-        gaps.withColumnRenamed("duration", "label")
-    )
-    aft = _shared_fit(
-        spark, sf_dir, "aft25_gaps",
-        lambda: AFTSurvivalRegression(censorCol="censor", maxIter=25).fit(aft_in),
-    )
-    aft_pred = aft.transform(aft_in)
-    aft_mean = aft_pred.agg(F.avg("prediction")).first()[0]
+    iso, deciles = _isotonic_deciles(o)
+    iso_rows = iso.transform(deciles).count()
+    aft, gaps = _aft_gaps(o)
+    aft_mean = aft.transform(gaps).agg(F.avg("prediction")).first()[0]
 
     # FM over embeddings (seeded)
     train, test = _train_test(_features(spark, sf_dir))
     bin_train = train.withColumn("label", (F.col("label") < 5).cast("double"))
     bin_test = test.withColumn("label", (F.col("label") < 5).cast("double"))
     fmc = _shared_fit(
-        spark, sf_dir, "fmc_f4_s01_it30",
-        lambda: _strip_summary(
-            FMClassifier(factorSize=4, stepSize=0.1, maxIter=30, seed=SEED).fit(bin_train)
-        ),
+        FMClassifier(factorSize=4, stepSize=0.1, maxIter=30, seed=SEED), bin_train
     )
     fmc_acc = (
         fmc.transform(bin_test)
@@ -1066,10 +1077,7 @@ def ml_eval_metrics_bound(spark, sf_dir):
     from pyspark.sql import Window
 
     train, test = _train_test(_features(spark, sf_dir))
-    m = _shared_fit(
-        spark, sf_dir, "lr20_reg01",
-        lambda: _strip_summary(LogisticRegression(maxIter=20, regParam=0.01).fit(train)),
-    )
+    m = _shared_fit(LogisticRegression(maxIter=20, regParam=0.01), train)
     pred = m.transform(test).select("label", "prediction").cache()
     from sparkml_spark.session import register_reapable_cache
 
@@ -1105,10 +1113,7 @@ def ml_eval_metrics_bound(spark, sf_dir):
 
     bin_train = train.withColumn("label", (F.col("label") < 5).cast("double"))
     bin_test = test.withColumn("label", (F.col("label") < 5).cast("double"))
-    bm = _shared_fit(
-        spark, sf_dir, "lr20_bin",
-        lambda: _strip_summary(LogisticRegression(maxIter=20).fit(bin_train)),
-    )
+    bm = _shared_fit(LogisticRegression(maxIter=20), bin_train)
     auc_ev = BinaryClassificationEvaluator(metricName="areaUnderROC").evaluate(
         bm.transform(bin_test)
     )
@@ -1175,39 +1180,15 @@ def ml_cv_selection_bound(spark, sf_dir):
     (c) every metric is a probability in [0, 1], and (d) the same
     three hold for TrainValidationSplit. Deterministic under seed=42.
     Violations pinned to 0."""
-    from pyspark.ml.classification import LogisticRegression
-    from pyspark.ml.evaluation import MulticlassClassificationEvaluator
-    from pyspark.ml.tuning import CrossValidator, ParamGridBuilder, TrainValidationSplit
-
-    data = _features(spark, sf_dir)
-    lr = LogisticRegression(maxIter=15)
-    grid = ParamGridBuilder().addGrid(lr.regParam, [0.01, 0.5]).build()
-    ev = MulticlassClassificationEvaluator(metricName="accuracy")
-    # r14: identical seeded tuning runs as ml_tuning_cv — audit the
-    # session's one pair of fits (the local grid/lr are only used for
-    # regParam VALUES below, so estimator identity never crosses)
-    cv, tvs = _shared_fit(
-        spark, sf_dir, "cv_tvs_lr15",
-        lambda: (
-            CrossValidator(
-                estimator=lr, estimatorParamMaps=grid, evaluator=ev,
-                numFolds=2, seed=SEED, parallelism=2,
-            ).fit(data),
-            TrainValidationSplit(
-                estimator=lr, estimatorParamMaps=grid, evaluator=ev,
-                trainRatio=0.8, seed=SEED,
-            ).fit(data),
-        ),
-    )
-
+    regs, cv, tvs = _lr_tuning(spark, sf_dir)
     v = 0
     for metrics, best in (
         (list(cv.avgMetrics), cv.bestModel.getRegParam()),
         (list(tvs.validationMetrics), tvs.bestModel.getRegParam()),
     ):
-        v += int(len(metrics) != len(grid))
+        v += int(len(metrics) != len(regs))
         v += sum(1 for x in metrics if not (0.0 <= x <= 1.0))
-        best_idx = [float(g[lr.regParam]) for g in grid].index(float(best))
+        best_idx = regs.index(float(best))
         v += int(metrics[best_idx] < max(metrics) - 1e-12)
     return spark.range(1).select(F.lit(v).cast("long").alias("n_violations"))
 
@@ -1224,10 +1205,8 @@ def ml_pca_bound(spark, sf_dir):
     model), not on data. Violations pinned to 0."""
     from pyspark.ml.feature import PCA
 
-    feats = _features(spark, sf_dir)
     model = _shared_fit(
-        spark, sf_dir, "pca8",
-        lambda: PCA(k=8, inputCol="features", outputCol="pca").fit(feats),
+        PCA(k=8, inputCol="features", outputCol="pca"), _features(spark, sf_dir)
     )
     pc = model.pc.toArray()  # 64 x 8
     ev = list(model.explainedVariance.toArray())
@@ -1306,28 +1285,14 @@ def ml_tree_regression_fit_bound(spark, sf_dir):
     from pyspark.ml.classification import DecisionTreeClassifier
     from pyspark.ml.regression import LinearRegression
 
-    feats = _features(spark, sf_dir)
-    train, _test = _train_test(feats)
-    dt = _shared_fit(
-        spark, sf_dir, "dtc_depth8",
-        lambda: DecisionTreeClassifier(seed=SEED, maxDepth=8).fit(train),
-    )
+    train, _test = _train_test(_features(spark, sf_dir))
+    dt = _shared_fit(DecisionTreeClassifier(seed=SEED, maxDepth=8), train)
     acc = dt.transform(train).agg(
         F.avg((F.col("label") == F.col("prediction")).cast("double")).alias("train_acc")
     )
 
-    docs = load_table(spark, sf_dir, "documents").select("doc_id", "n_chars")
-    data = (
-        feats.withColumnRenamed("label", "cls")
-        .join(docs, F.col("vec_id") == F.col("doc_id"))
-        .select("vec_id", F.col("n_chars").cast("double").alias("label"), "features")
-    )
-    rtrain, _ = _train_test(data)
-    # same estimator+input as ml_regression's "linear" row (r14)
-    lin = _shared_fit(
-        spark, sf_dir, "linreg25_nchars",
-        lambda: _strip_summary(LinearRegression(maxIter=25).fit(rtrain)),
-    )
+    rtrain, _ = _train_test(_nchars_data(spark, sf_dir))
+    lin = _shared_fit(LinearRegression(maxIter=25), rtrain)
     reg = lin.transform(rtrain).agg(
         F.sqrt(F.avg((F.col("label") - F.col("prediction")) ** 2)).alias("rmse"),
         F.stddev_pop("label").alias("sd"),
@@ -1367,37 +1332,14 @@ def ml_mlp_linear_fit_bound(spark, sf_dir):
             F.avg((F.col("label") == F.col("prediction")).cast("double")).alias(name)
         )
 
-    # Every fitted model transforms via a closure that serializes the
-    # model itself — strip training summaries (session references) or
-    # the task dies with `NotSerializableException: ObservationManager`
-    # once the suite's observe() query has run (see _strip_summary).
-    # r14: all four estimators here duplicate fits their base queries
-    # (ml_classify_mlp / ml_classify_linear / ml_isotonic_aft_fm) run
-    # with identical params on the identical split — audit the
-    # session's one fitted model apiece (_shared_fit), which is what
-    # this bound pins anyway.
     mlp = _shared_fit(
-        spark, sf_dir, "mlp_64_32_10_it40",
-        lambda: _strip_summary(
-            MultilayerPerceptronClassifier(layers=[64, 32, 10], seed=SEED, maxIter=40).fit(train)
-        ),
+        MultilayerPerceptronClassifier(layers=[64, 32, 10], seed=SEED, maxIter=40), train
     )
-    ovr = _shared_fit(
-        spark, sf_dir, "ovr_svc15_reg05",
-        lambda: _strip_summary(
-            OneVsRest(classifier=LinearSVC(maxIter=15, regParam=0.05)).fit(train)
-        ),
-    )
-    nb = _shared_fit(
-        spark, sf_dir, "nb_gaussian",
-        lambda: _strip_summary(NaiveBayes(modelType="gaussian").fit(train)),
-    )
+    ovr = _shared_fit(OneVsRest(classifier=LinearSVC(maxIter=15, regParam=0.05)), train)
+    nb = _shared_fit(NaiveBayes(modelType="gaussian"), train)
     bin_train = train.withColumn("label", (F.col("label") < 5).cast("double"))
     fmc = _shared_fit(
-        spark, sf_dir, "fmc_f4_s01_it30",
-        lambda: _strip_summary(
-            FMClassifier(factorSize=4, stepSize=0.1, maxIter=30, seed=SEED).fit(bin_train)
-        ),
+        FMClassifier(factorSize=4, stepSize=0.1, maxIter=30, seed=SEED), bin_train
     )
     a = train_acc(mlp, train, "mlp")
     b = train_acc(ovr, train, "ovr")
@@ -1424,37 +1366,14 @@ def ml_monotone_models_bound(spark, sf_dir):
     be non-decreasing in the feature (that IS the PAVA constraint),
     and AFT survival predictions are exp(linear) — strictly positive
     and finite for every row (a diverged solver emits NaN/inf).
-    Inputs are built exactly as in ml_isotonic_aft_fm. Violations
-    pinned to 0."""
-    from pyspark.ml.feature import VectorAssembler
-    from pyspark.ml.regression import AFTSurvivalRegression, IsotonicRegression
+    Violations pinned to 0."""
     from pyspark.sql import Window
 
     o = load_table(spark, sf_dir, "orders")
-    from sparkml_spark.registry import ntile_two_phase
-
-    deciles = (
-        ntile_two_phase(
-            o, 10,
-            bucket=F.floor(F.col("o_totalprice") / 100),
-            order_cols=[F.col("o_totalprice").asc(), F.col("o_orderkey").asc()],
-            out="decile",
-        )
-        .groupBy("decile")
-        .agg(F.avg("o_totalprice").alias("avg_price"), F.count("*").cast("double").alias("n"))
-    )
-    iso_in = VectorAssembler(inputCols=["avg_price"], outputCol="features").transform(
-        deciles.withColumn("label", F.col("n"))
-    )
-    # r14: identical estimator+input as ml_isotonic_aft_fm — audit the
-    # session's one fit (inputs are rebuilt identically either way)
-    iso = _shared_fit(
-        spark, sf_dir, "iso_deciles",
-        lambda: IsotonicRegression(isotonic=True).fit(iso_in),
-    )
+    iso, deciles = _isotonic_deciles(o)
     w = Window.orderBy("avg_price")
     iso_v = (
-        iso.transform(iso_in)
+        iso.transform(deciles)
         .withColumn("prev", F.lag("prediction").over(w))
         .agg(
             F.sum(
@@ -1463,25 +1382,8 @@ def ml_monotone_models_bound(spark, sf_dir):
         )
     )
 
-    wc = Window.partitionBy("o_custkey").orderBy("o_orderdate", "o_orderkey")
-    gaps = (
-        o.withColumn("next_dt", F.lead("o_orderdate").over(wc))
-        .withColumn(
-            "label",
-            F.coalesce(
-                F.datediff(F.col("next_dt"), F.col("o_orderdate")).cast("double"),
-                F.lit(30.0),
-            ) + F.lit(1.0),
-        )
-        .withColumn("censor", F.when(F.col("next_dt").isNull(), 0.0).otherwise(1.0))
-        .select("label", "censor", (F.col("o_totalprice") / 1e5).alias("price_scaled"))
-    )
-    aft_in = VectorAssembler(inputCols=["price_scaled"], outputCol="features").transform(gaps)
-    aft = _shared_fit(
-        spark, sf_dir, "aft25_gaps",
-        lambda: AFTSurvivalRegression(censorCol="censor", maxIter=25).fit(aft_in),
-    )
-    aft_v = aft.transform(aft_in).agg(
+    aft, gaps = _aft_gaps(o)
+    aft_v = aft.transform(gaps).agg(
         F.sum(
             (
                 ~(F.col("prediction") > 0)  # catches NaN, <=0

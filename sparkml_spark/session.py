@@ -93,25 +93,24 @@ def get_spark(app_name: str = "sparkml_spark", master: str | None = None) -> Spa
 
 
 # ---------------------------------------------------------------------------
-# Session-scoped artifact sharing (r14, guide §1.2 "don't compute things
-# you throw away"): sibling queries refit byte-identical DETERMINISTIC
-# artifacts — seeded MLlib models, the IVF coarse quantizer, persisted
-# index paths — once per query instead of once per SparkSession. The
-# bound twins (ml_mlp_linear_fit_bound etc.) audit the SAME fitted
-# models their base queries produce, so evaluating the fit once per
-# session is the evaluate-once pattern, not caching:
+# Session-scoped artifact sharing. Sibling queries (a base query and the
+# *_bound pin that audits it) need the same DETERMINISTIC artifacts:
+# seeded MLlib fits and the on-disk index paths written from them.
+# `session_artifact` builds each once per SparkContext. Only
+# deterministic artifacts belong here: the memoized object equals the
+# rebuild it replaces, so no output depends on which sibling ran first.
 #
-# - Keyed by the LIVE applicationId: a fresh process/session always
-#   rebuilds from the parquet inputs. Nothing survives the process and
-#   nothing on disk is keyed by input path across runs — every bench
-#   and oracle invocation recomputes from source.
-# - Only DETERMINISTIC artifacts belong here (seeded fits on a fixed
-#   key-split, pure-function index paths): the memoized object is
-#   bit-identical to the refit it replaces within the session, so no
-#   declared query output changes. Within one session the fit really
-#   is deterministic (same partitioning, same seeded init, same
-#   reduction tree); across sessions behaviour is exactly what it was
-#   before — one fit from parquet.
+# - Every key starts with the live applicationId, so a fresh process or
+#   session always rebuilds from the parquet inputs; nothing survives
+#   the process.
+# - Fitted models go through `operators/ml.py::_shared_fit`, whose key
+#   is derived from the inputs: the estimator's class and param map plus
+#   the training frame's analyzed-plan semanticHash, checked with
+#   sameResult on every hit. A builder that drifts gets a refit, never
+#   a model fit on other data.
+# - The two on-disk path memos (IVF index, LSH model) keep explicit keys
+#   of (artifact name, realpath(sf_dir)): their builders write files,
+#   which no plan describes.
 # ---------------------------------------------------------------------------
 
 _ARTIFACTS: dict[tuple, object] = {}
@@ -153,7 +152,17 @@ def session_artifact(spark: SparkSession, key: tuple, build):
 # ---------------------------------------------------------------------------
 
 _REAPABLE: list[tuple[str, int]] = []  # (applicationId, persistent RDD id)
-_REAPABLE_DFS: list = []  # cache-manager persists: unpersist() works
+_REAPABLE_DFS: list[tuple[str, object]] = []  # (applicationId, cached DataFrame)
+
+
+def _register(registry: list, app: str, item) -> None:
+    """Append (app, item), first dropping entries of other applications:
+    their SparkContext is stopped, so there is nothing left to free, and
+    a driver that never reaps must not keep them forever. Every append
+    goes through here, so all entries share one application."""
+    if registry and registry[0][0] != app:
+        registry.clear()
+    registry.append((app, item))
 
 
 def register_reapable_cache(df) -> None:
@@ -162,19 +171,18 @@ def register_reapable_cache(df) -> None:
     blocks these can always recompute, so freeing them is safe at any
     query boundary; the registry just makes it deterministic instead
     of GC-timed."""
-    _REAPABLE_DFS.append(df)
+    _register(_REAPABLE_DFS, df.sparkSession.sparkContext.applicationId, df)
 
 
 def register_reapable(df) -> None:
     """Record a checkpointed/persisted DataFrame's block-owning RDD id
     for sweep-boundary reaping. Best-effort: an unexpected plan shape
-    just leaves the block to the GC backstop (the pre-r14 behaviour)."""
+    just leaves the block to the GC/ContextCleaner backstop."""
     try:
-        sc = df.sparkSession.sparkContext
-        plan = df._jdf.queryExecution().analyzed()
-        _REAPABLE.append((sc.applicationId, int(plan.rdd().id())))
+        rid = int(df._jdf.queryExecution().analyzed().rdd().id())
     except Exception:
-        pass
+        return
+    _register(_REAPABLE, df.sparkSession.sparkContext.applicationId, rid)
 
 
 def reap_registered(spark: SparkSession) -> int:
@@ -194,13 +202,10 @@ def reap_registered(spark: SparkSession) -> int:
             jrdd.unpersist(False)
             n += 1
     _REAPABLE.clear()
-    for df in _REAPABLE_DFS:
-        try:
-            if df.sparkSession.sparkContext.applicationId == app:
-                df.unpersist(False)
-                n += 1
-        except Exception:
-            pass  # session gone — nothing to free
+    for a, df in _REAPABLE_DFS:
+        if a == app:
+            df.unpersist(False)
+            n += 1
     _REAPABLE_DFS.clear()
     return n
 
@@ -298,5 +303,5 @@ class CheckpointChain:
         app = self._sc.applicationId
         for gen in self._generations:
             for rid in gen:
-                _REAPABLE.append((app, rid))
+                _register(_REAPABLE, app, rid)
         self._generations.clear()

@@ -3,10 +3,8 @@ blocks and per-query `.cache()` entries must be freeable DETERMINISTICALLY
 at sweep boundaries — `session.reap_registered` frees what the query path
 registered, and a reaped query recomputes correctly when re-built.
 
-Also pins the r14 session-artifact memo (VERDICT r13 #1/#3): a second
-invocation of a fit-heavy query in the same session must reuse the
-session's fitted artifact (identity-equal model object), and its output
-must be identical to the first invocation's.
+The registries hold only the live application's entries: registering
+drops what a stopped SparkContext left behind.
 """
 
 from __future__ import annotations
@@ -62,23 +60,24 @@ def test_cache_blocks_register_and_reap(spark):
     assert sum(rows.values()) > 0
 
 
-def test_session_artifact_memo_shares_fits(spark):
-    from sparkml_spark.registry import QUERIES
-    from sparkml_spark.session import _ARTIFACTS, reap_registered
+def test_registries_drop_dead_app_entries(spark):
+    from sparkml_spark import session
 
+    session.reap_registered(spark)
     app = spark.sparkContext.applicationId
-    df1 = QUERIES["ml_classify_logistic"](spark, SF_DIR)
-    r1 = sorted(tuple(r) for r in df1.collect())
-    keys = [k for k in _ARTIFACTS if k[0] == app and "lr25_reg01" in k]
-    assert keys, "expected the lr25 fit to be memoized"
-    model_first = _ARTIFACTS[keys[0]]
+    # entries a stopped SparkContext left behind
+    session._REAPABLE.append(("app-dead", 1))
+    session._REAPABLE_DFS.append(("app-dead", object()))
 
-    # the bound twin audits the SAME fitted object, and the base query
-    # rebuilt in-session reuses it — outputs identical
-    df2 = QUERIES["ml_classify_logistic"](spark, SF_DIR)
-    r2 = sorted(tuple(r) for r in df2.collect())
-    assert _ARTIFACTS[keys[0]] is model_first
-    assert r1 == r2
-    bound = QUERIES["ml_fit_quality_bound"](spark, SF_DIR)
-    assert [r["n_violations"] for r in bound.collect()] == [0]
-    reap_registered(spark)
+    session.register_reapable(spark.range(3).localCheckpoint(eager=False))
+    session.register_reapable_cache(spark.range(4).cache())
+    assert [a for a, _ in session._REAPABLE] == [app]
+    assert [a for a, _ in session._REAPABLE_DFS] == [app]
+
+    session.reap_registered(spark)
+    session._REAPABLE.append(("app-dead", 2))
+    chain = session.CheckpointChain(spark)
+    chain.step(spark.range(5))
+    chain.release_to_registry()
+    assert [a for a, _ in session._REAPABLE] == [app]
+    assert session.reap_registered(spark) == 1
