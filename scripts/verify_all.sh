@@ -6,8 +6,8 @@
 # under a hard timeout so a hang can't block the one-shot forever.
 #
 # Usage: bash scripts/verify_all.sh [--quick]
-#   --quick: fit-memo pair test + sf0.01 sim + bench only (skips the
-#            rest of pytest and the other scales)
+#   --quick: fit-memo pair and ALS tests + sf0.01 sim + bench only
+#            (skips the rest of pytest and the other scales)
 set -u
 cd "$(dirname "$0")/.."
 
@@ -55,6 +55,10 @@ else
   # up without the full suite.
   run "memo pairs" timeout 900 python -m pytest tests/test_memo.py -q -x \
     -k memo_pair -p no:cacheprovider
+  # ALS blocking follows the input's partitions and matches MLlib's
+  # default-block fit row for row.
+  run "als blocks" timeout 600 python -m pytest tests/test_ml.py -q -x \
+    -k als -p no:cacheprovider
 fi
 run "sim sf0.01" timeout 1800 python scripts/driver_sim.py
 if [ $quick -eq 0 ]; then

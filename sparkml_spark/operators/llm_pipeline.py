@@ -1954,7 +1954,10 @@ def pipeline_dsir_select(spark, sf_dir):
     Scale: the corpus is tokenized ONCE (the genuinely heavy map); the
     bucket-weight table is B=1024 rows — broadcast onto the token
     stream, partial-agg per doc, and the top-100 is a
-    TakeOrderedAndProject. Nothing but the one doc_id shuffle."""
+    TakeOrderedAndProject. Three shuffles: the token stream's
+    partial bucket counts by `b`, the B-row bucket table to one
+    partition for the corpus-total window, and the per-doc partial
+    scores by doc_id."""
     d = load_table(spark, sf_dir, "documents")
     bt = d.select(
         "doc_id",
@@ -1978,25 +1981,22 @@ def pipeline_dsir_select(spark, sf_dir):
         F.count(F.lit(1)).cast("long").alias("cr"),
         F.count(F.when(F.col("lang") == "en", 1)).cast("long").alias("ct"),
     )
-    tot = g.agg(F.sum("ct").alias("nt"), F.sum("cr").alias("nr"))
-    w = (
-        g.crossJoin(F.broadcast(tot))
-        .select(
-            "b",
-            F.round(
-                F.log(
-                    (
-                        (F.col("ct") + 1).cast("double")
-                        * (F.col("nr") + _DSIR_B).cast("double")
-                    )
-                    / (
-                        (F.col("nt") + _DSIR_B).cast("double")
-                        * (F.col("cr") + 1).cast("double")
-                    )
-                ),
-                9,
-            ).alias("lw"),
-        )
+    # Corpus totals as a window over the B-row table, not a second
+    # aggregate of g joined back: that plan holds two
+    # `Exchange hashpartitioning(b)` differing by an inferred
+    # isnotnull(b), so AQE reuses neither and both tokenize the corpus.
+    w_tot = Window.partitionBy()
+    nt = F.sum("ct").over(w_tot)
+    nr = F.sum("cr").over(w_tot)
+    w = g.select(
+        "b",
+        F.round(
+            F.log(
+                ((F.col("ct") + 1).cast("double") * (nr + _DSIR_B).cast("double"))
+                / ((nt + _DSIR_B).cast("double") * (F.col("cr") + 1).cast("double"))
+            ),
+            9,
+        ).alias("lw"),
     )
     scored = (
         bt.join(F.broadcast(w), "b")

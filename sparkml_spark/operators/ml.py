@@ -11,7 +11,10 @@ Features come from `array_to_vector(embedding)` (64-d unit vectors,
 Scale: MLlib's estimators are themselves distributed (tree ensembles
 aggregate split stats per partition; ALS is block coordinate descent;
 KMeans is Lloyd's over partitioned points) — the operator layer adds
-no driver-side iteration beyond what the estimator owns.
+no driver-side iteration beyond what the estimator owns. ALS's user
+and item block counts follow the input's scan partitions (one per
+file split), so a small input is not cut into MLlib's default 10 × 10
+blocks of mostly empty tasks, and a large one still spreads.
 """
 
 from __future__ import annotations
@@ -619,11 +622,18 @@ def ml_als_recommend(spark, sf_dir):
     Item ids come from StringIndexer (alphabetical order — same mapping
     a distinct().collect() dictionary produced, but the vocabulary
     never passes through the driver, so unknown item cardinality at
-    100 TB is safe; VERDICT r4 minor #4)."""
+    100 TB is safe; VERDICT r4 minor #4).
+
+    User and item block counts are the events scan's partition count
+    (planning only, no job) rather than MLlib's default of 10: 1 × 1
+    on a one-file input, 4 × 4 on a 4-file one. Being params, they are
+    part of the fit's memo key."""
     from pyspark.ml import Pipeline
     from pyspark.ml.feature import SQLTransformer, StringIndexer
     from pyspark.ml.recommendation import ALS
 
+    events = load_table(spark, sf_dir, "events")
+    blocks = events.rdd.getNumPartitions()
     als = _shared_fit(
         Pipeline(
             stages=[
@@ -635,10 +645,13 @@ def ml_als_recommend(spark, sf_dir):
                     " CAST(item_idx AS INT) AS item, CAST(count(1) AS FLOAT) AS rating"
                     " FROM __THIS__ GROUP BY CAST(user_id AS INT), CAST(item_idx AS INT)"
                 ),
-                ALS(rank=4, maxIter=8, seed=SEED, implicitPrefs=True, coldStartStrategy="drop"),
+                ALS(
+                    rank=4, maxIter=8, seed=SEED, implicitPrefs=True,
+                    coldStartStrategy="drop", numUserBlocks=blocks, numItemBlocks=blocks,
+                ),
             ]
         ),
-        load_table(spark, sf_dir, "events"),
+        events,
     ).stages[-1]
     recs = als.recommendForAllUsers(2)
     return recs.select(

@@ -35,9 +35,38 @@ def test_pipeline_persist_roundtrip(spark):
     assert rows and all(r["roundtrip_equal"] for r in rows)
 
 
-def test_als_covers_users(spark):
-    recs = QUERIES["ml_als_recommend"](spark, SF_DIR)
+def test_als_covers_users(spark, monkeypatch):
+    """ALS's user and item block counts are the events scan's partition
+    count, and its recommendations equal a fit with MLlib's default
+    blocks, for every user."""
+    from pyspark.ml.recommendation import ALS
+
+    from sparkml_spark.operators import ml
     from sparkml_spark.sources.loader import load_table
 
-    n_users = load_table(spark, SF_DIR, "events").select("user_id").distinct().count()
-    assert recs.count() == n_users
+    fit, blocks, default_blocks = ALS._fit, [], False
+
+    def recording_fit(self, dataset):
+        if default_blocks:
+            self.clear(self.numUserBlocks)
+            self.clear(self.numItemBlocks)
+        blocks.append((self.getNumUserBlocks(), self.getNumItemBlocks()))
+        return fit(self, dataset)
+
+    monkeypatch.setattr(ALS, "_fit", recording_fit)
+    # fit on every call: the memo would serve the session's earlier fit
+    monkeypatch.setattr(ml, "_shared_fit", ml._fit)
+
+    def top2():
+        recs = QUERIES["ml_als_recommend"](spark, SF_DIR).toPandas()
+        return recs.sort_values("user").reset_index(drop=True)
+
+    recs = top2()
+    default_blocks = True
+    reference = top2()
+
+    events = load_table(spark, SF_DIR, "events")
+    n = events.rdd.getNumPartitions()
+    assert blocks == [(n, n), (10, 10)]
+    assert recs.equals(reference), (recs, reference)
+    assert len(recs) == events.select("user_id").distinct().count()

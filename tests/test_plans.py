@@ -737,7 +737,8 @@ def test_r11_curation_ops_plan_shapes(spark):
     """Curation-op plan gates (r11): the Bloom bit-set probe and the
     DSIR bucket-weight join must broadcast (both sides are bounded —
     2^16 positions / 1024 buckets — regardless of corpus size); the
-    DSIR top-100 is a TakeOrderedAndProject; the chat-SFT render is
+    DSIR token stream is shuffled by bucket once and its top-100 is a
+    TakeOrderedAndProject; the chat-SFT render is
     zero-shuffle; preference pairs must window on stratum partitions,
     never SinglePartition."""
     bloom = (
@@ -752,6 +753,13 @@ def test_r11_curation_ops_plan_shapes(spark):
     dsir = QUERIES["pipeline_dsir_select"](spark, SF_DIR)
     assert has_broadcast_join(dsir)
     assert has_take_ordered(dsir)
+    # one bucket shuffle: a second one tokenizes the corpus again
+    dplan = dsir._jdf.queryExecution().executedPlan().toString()
+    n_bucket = sum(
+        "Exchange hashpartitioning(b#" in line and "ReusedExchange" not in line
+        for line in dplan.splitlines()
+    )
+    assert n_bucket == 1, dplan[:3000]
 
     sft = QUERIES["pipeline_chat_sft_format"](spark, SF_DIR)
     assert shuffle_count(sft) == 0, shuffle_count(sft)
