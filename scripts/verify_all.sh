@@ -6,7 +6,7 @@
 # under a hard timeout so a hang can't block the one-shot forever.
 #
 # Usage: bash scripts/verify_all.sh [--quick]
-#   --quick: fit-memo pair and ALS tests + sf0.01 sim + bench only
+#   --quick: fit-memo pair, ALS and reaper tests + sf0.01 sim + bench only
 #            (skips the rest of pytest and the other scales)
 set -u
 cd "$(dirname "$0")/.."
@@ -59,6 +59,10 @@ else
   # default-block fit row for row.
   run "als blocks" timeout 600 python -m pytest tests/test_ml.py -q -x \
     -k als -p no:cacheprovider
+  # Block lifetimes: every pinned block is registered when it is
+  # pinned and freed by the sweep-boundary reaper (sf0.001).
+  run "reaper" timeout 600 python -m pytest tests/test_reaper.py -q -x \
+    -p no:cacheprovider
 fi
 run "sim sf0.01" timeout 1800 python scripts/driver_sim.py
 if [ $quick -eq 0 ]; then

@@ -59,6 +59,7 @@ from sparkml_spark.operators.llm_pipeline import (
     token_budget_thresholds,
 )
 from sparkml_spark.registry import md5_chunk16, query
+from sparkml_spark.session import checkpoint
 from sparkml_spark.sources.loader import load_table
 
 #: Committed merge table — output of `python scripts/train_bpe.py 24`.
@@ -1495,30 +1496,22 @@ def synth_incr_batch(arriving, corpus):
     )
 
 
-def refresh_manifest_incr(incr, corpus_digests, lang_map, ckpt=None):
+def refresh_manifest_incr(incr, corpus_digests, lang_map, ckpt=checkpoint):
     """The daily-append chain given an ALREADY-SYNTHESIZED arriving
     batch and the standing corpus digest index (a 1-column `h` frame —
     in production a maintained bucketed table; in the streaming twin
     the parquet artifact the bootstrap micro-batch wrote). Everything
     downstream of the index probe is identical to the batch chain.
 
-    ``ckpt`` (r13, guide §2.4): the chain's two batch-sized
-    multi-consumer intermediates — `quality` (read by the BPE token
-    coster AND the lang re-attach) and `enriched` (read by the budget
-    aggregate AND the mix filter) — are materialized through this
-    callable so the corpus-digest probe and the BPE vocabulary fold
-    run ONCE instead of once per consumer. Defaults to the dedup
-    family's lazy DISK_ONLY `_ckpt`; the streaming twin passes its
-    CheckpointChain.step so every block is freed at chain.close().
-    ADVICE r13 (batch-path block hygiene): the default `_ckpt` now
-    registers each block with the session reaper, so sweep harnesses
-    free the batch twin's two per-invocation checkpoints
-    deterministically (session.reap_registered); drivers that never
-    reap keep the GC/ContextCleaner backstop, as before."""
-    from sparkml_spark.operators.llm_dedup import _DUP_OFFSET, _ckpt, _norm
-
-    if ckpt is None:
-        ckpt = _ckpt
+    ``ckpt``: the chain's two batch-sized multi-consumer
+    intermediates — `quality` (read by the BPE token coster AND the
+    lang re-attach) and `enriched` (read by the budget aggregate AND
+    the mix filter) — are materialized through this callable so the
+    corpus-digest probe and the BPE vocabulary fold run ONCE instead
+    of once per consumer. Defaults to the lazy DISK_ONLY
+    `session.checkpoint`; the streaming twin passes its
+    CheckpointChain.step so every block is freed at chain.close()."""
+    from sparkml_spark.operators.llm_dedup import _DUP_OFFSET, _norm
 
     ih = incr.select("doc_id", "text", _norm().alias("h"))
     # Probe the standing index WITHOUT moving it: broadcast the batch's

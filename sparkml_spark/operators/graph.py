@@ -17,6 +17,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import query
+from sparkml_spark.session import CheckpointChain, cache
 from sparkml_spark.sources.loader import load_table
 
 
@@ -157,7 +158,7 @@ def graph_pagerank(spark, sf_dir):
     sn = n.select(
         F.col("n_nationkey").alias("s_nkey"), F.col("n_name").alias("dst")
     )
-    edges = (
+    edges = cache(
         li.join(F.broadcast(o), li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
         .join(F.broadcast(s), li.l_suppkey == s.s_suppkey)
@@ -165,19 +166,18 @@ def graph_pagerank(spark, sf_dir):
         .join(F.broadcast(sn), s.s_nationkey == F.col("s_nkey"))
         .groupBy("src", "dst")
         .agg(F.count(F.lit(1)).alias("w"))
-    ).cache()
+    )
     out_w = edges.groupBy("src").agg(F.sum("w").alias("out_w"))
-    norm = edges.join(out_w, "src").select(
-        "src", "dst", (F.col("w") / F.col("out_w")).alias("p")
-    ).cache()
-    nodes = (
+    norm = cache(
+        edges.join(out_w, "src").select(
+            "src", "dst", (F.col("w") / F.col("out_w")).alias("p")
+        )
+    )
+    nodes = cache(
         norm.select(F.col("src").alias("node"))
         .union(norm.select(F.col("dst").alias("node")))
         .distinct()
-        .cache()
     )
-    from sparkml_spark.session import CheckpointChain, register_reapable_cache
-
     # Round 12: route the per-iteration checkpoints through the chain
     # so superseded iterations' blocks are freed (unpersist on the
     # frame is a no-op for checkpoint storage) — tiny state here (25
@@ -211,11 +211,6 @@ def graph_pagerank(spark, sf_dir):
             .coalesce(1)
         )
         chain.reap()  # the superseded iteration's 25-row blocks
-    # the FINAL iteration's checkpoint feeds the returned frame — hand
-    # it (and the three caches above) to the sweep-boundary reaper
-    chain.release_to_registry()
-    for df in (edges, norm, nodes):
-        register_reapable_cache(df)
     return ranks.select("node", F.round("rank", 6).alias("pagerank"))
 
 
@@ -353,10 +348,7 @@ def graph_triangle_count(spark, sf_dir):
     Output: one row of graph invariants incl. the global clustering
     coefficient 3*triangles/wedges (single exact int division,
     rounded at 6dp on both engines)."""
-    from sparkml_spark.session import register_reapable_cache
-
-    e = _cooccur_edges(spark, sf_dir).cache()
-    register_reapable_cache(e)
+    e = cache(_cooccur_edges(spark, sf_dir))
     und = e.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
         e.select(F.col("b").alias("s"), F.col("a").alias("t"))
     )
@@ -368,16 +360,14 @@ def graph_triangle_count(spark, sf_dir):
     smaller_first = (F.col("da") < F.col("db")) | (
         (F.col("da") == F.col("db")) & (F.col("a") < F.col("b"))
     )
-    o = (
+    o = cache(
         e.join(da, "a")
         .join(db, "b")
         .select(
             F.when(smaller_first, F.col("a")).otherwise(F.col("b")).alias("src"),
             F.when(smaller_first, F.col("b")).otherwise(F.col("a")).alias("dst"),
         )
-        .cache()
     )
-    register_reapable_cache(o)
     e1 = o.select(F.col("src").alias("u"), F.col("dst").alias("v"))
     e2 = o.select(F.col("src").alias("v"), F.col("dst").alias("w"))
     e3 = o.select(F.col("src").alias("u"), F.col("dst").alias("w"))
@@ -463,13 +453,12 @@ def graph_label_propagation(spark, sf_dir):
     run on the aggregated edge list (graph-sized), each round one
     groupBy + one window on <= |E| rows; the raw event log is touched
     once, inside the shared edge extraction."""
-    from sparkml_spark.session import register_reapable_cache
-
     e = _cooccur_edges(spark, sf_dir)
-    und = e.select(
-        F.col("a").alias("s"), F.col("b").alias("t"), "w"
-    ).unionAll(e.select(F.col("b").alias("s"), F.col("a").alias("t"), "w")).cache()
-    register_reapable_cache(und)
+    und = cache(
+        e.select(F.col("a").alias("s"), F.col("b").alias("t"), "w").unionAll(
+            e.select(F.col("b").alias("s"), F.col("a").alias("t"), "w")
+        )
+    )
     labs = und.select(F.col("s").alias("node")).distinct().select(
         "node",
         F.when(F.col("node") % 3 == 0, (F.col("node") % 7).cast("long")).alias("lab"),
@@ -481,14 +470,12 @@ def graph_label_propagation(spark, sf_dir):
         # clamping left join), so an unmaterialized chain doubles per
         # round — 8 evaluations of round-0 by round 3. Cache the
         # (node-sized, graph-bounded) label state per round instead,
-        # the same iterate-small hygiene kcore's survivor set uses
-        # (guide §5, r13). The superseded rounds' caches are registered
-        # for sweep-boundary unpersist (r14, VERDICT r13 #8) — they
-        # cannot be freed mid-build because the lazy caches only
-        # materialize (and are re-read by the next round) at the
-        # query's first action.
-        labs = labs.cache()
-        register_reapable_cache(labs)
+        # the same iterate-small hygiene kcore's survivor set uses.
+        # The superseded rounds' caches are left to the sweep-boundary
+        # reaper: they cannot be freed mid-build because the lazy
+        # caches only materialize (and are re-read by the next round)
+        # at the query's first action.
+        labs = cache(labs)
         cand = (
             und.join(
                 labs.filter(F.col("lab").isNotNull()).withColumnRenamed("node", "t"),
@@ -557,14 +544,12 @@ def graph_jaccard_links(spark, sf_dir):
     so candidate generation is sum-of-squares over CAPPED bucket
     memberships, not over raw hub degrees; the top-50 is a
     TakeOrderedAndProject, never a global sort materialization."""
-    from sparkml_spark.session import register_reapable_cache
-
-    e = _cooccur_edges(spark, sf_dir).cache()
-    nb = e.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
-        e.select(F.col("b").alias("s"), F.col("a").alias("t"))
-    ).cache()
-    register_reapable_cache(e)
-    register_reapable_cache(nb)
+    e = cache(_cooccur_edges(spark, sf_dir))
+    nb = cache(
+        e.select(F.col("a").alias("s"), F.col("b").alias("t")).unionAll(
+            e.select(F.col("b").alias("s"), F.col("a").alias("t"))
+        )
+    )
     deg = nb.groupBy(F.col("s").alias("node")).agg(
         F.count(F.lit(1)).cast("long").alias("d")
     )
@@ -654,10 +639,7 @@ def graph_kcore_membership(spark, sf_dir):
     Scale: iterate-small — every round is one degree aggregation and
     one semi-join on the (graph-sized, capped) edge list; the raw
     event log is touched once in the shared extraction."""
-    from sparkml_spark.session import register_reapable_cache
-
-    e = _cooccur_edges(spark, sf_dir).select("a", "b").cache()
-    register_reapable_cache(e)
+    e = cache(_cooccur_edges(spark, sf_dir).select("a", "b"))
     nodes = (
         e.select(F.col("a").alias("node"))
         .union(e.select(F.col("b").alias("node")))
@@ -673,8 +655,7 @@ def graph_kcore_membership(spark, sf_dir):
         # (measured 53 s -> ~8 s at sf0.01). Superseded rounds go to
         # the sweep-boundary reaper (they can't be freed mid-build:
         # the lazy caches materialize at the query's first action).
-        surv = surv.cache()
-        register_reapable_cache(surv)
+        surv = cache(surv)
         ea = e.join(surv.withColumnRenamed("node", "a"), "a").join(
             surv.withColumnRenamed("node", "b"), "b"
         )

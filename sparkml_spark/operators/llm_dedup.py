@@ -21,6 +21,7 @@ from pyspark.sql import functions as F
 
 from sparkml_spark.operators.llm_text import _gram_idx
 from sparkml_spark.registry import ZERO_VIOLATIONS, md5_chunk16, query
+from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
 
 #: Offset that turns a copied doc_id into a synthetic duplicate's id.
@@ -246,15 +247,14 @@ def df_cut_kept(exploded, corpus):
       never re-shuffled for the cut. Downstream, the self-join's keys
       are df-bounded BY the cut itself, so no stage anywhere sees an
       unbounded hot key.
-    Callers wrap the result in `_ckpt` (lazy DISK_ONLY local
-    checkpoint) so the shingling + cut compute ONCE for the four
+    Callers wrap the result in `session.checkpoint` (lazy DISK_ONLY
+    local checkpoint) so the shingling + cut compute ONCE for the four
     consumers (sizes, both join sides, df agg) instead of once per
     plan branch — measured 26 s vs 73 s warm at sf0.1. The checkpoint
     materializes lazily at first action (plan construction stays
     action-free), truncates lineage (same hygiene as
-    dedup_cc_clusters), and its executor blocks live until the RDD is
-    GC'd — bounded by the kept stream size, the same accumulation
-    class documented on sim_ann_recall_bound's cache. Repeat
+    dedup_cc_clusters), and its executor blocks live until the
+    sweep-boundary reaper or the GC frees them. Repeat
     executions of the SAME DataFrame reuse the blocks, so
     steady-state re-timings exclude the shingling stage (cold-run
     timings are the honest distributed cost — the bench/stress
@@ -273,39 +273,6 @@ def df_cut_kept(exploded, corpus):
         .select("shingle")
     )
     return exploded.join(F.broadcast(hot), "shingle", "left_anti")
-
-
-def _ckpt(df):
-    """Lazy DISK_ONLY local checkpoint for the df-cut stream: memory
-    levels put the whole materialized stream on the executor heap,
-    which at ×100 fixture scale (≈45M shingle rows) drove the JVM
-    into GCLocker allocation storms on a default-memory driver;
-    DISK_ONLY gives the checkpoint the same I/O profile as a shuffle
-    write — linear, off-heap, spill-free — at the cost of re-reading
-    from local disk, which is exactly what every shuffle consumer
-    does anyway.
-
-    Fault-tolerance caveat (ADVICE r9): localCheckpoint TRUNCATES
-    lineage into executor-local blocks — on a real cluster, losing
-    any executor that holds blocks (crash, spot preemption, or a
-    dynamic-allocation decommission) makes the checkpointed stream
-    unrecoverable and fails the query, because the cut lineage can't
-    recompute them. Fine on local[k] and on static on-demand
-    clusters; production 100 TB runs should use a RELIABLE
-    checkpoint dir (spark.checkpoint after setCheckpointDir on
-    HDFS/object storage) or persist + shuffle-reuse instead, and
-    must disable executor decommissioning of storage blocks."""
-    from pyspark.storagelevel import StorageLevel
-
-    from sparkml_spark.session import register_reapable
-
-    out = df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
-    # r14 (VERDICT r13 #2): record the block-owning RDD id so sweep
-    # harnesses can free it deterministically between queries instead
-    # of waiting on the GC/ContextCleaner backstop (which remains the
-    # fallback for drivers that never call reap_registered).
-    register_reapable(out)
-    return out
 
 
 def jaccard_pairs(corpus, threshold: float = 0.6):
@@ -330,7 +297,7 @@ def jaccard_pairs(corpus, threshold: float = 0.6):
     near-dup-dense corpus the partial-aggregated counting join is the
     right shape. Measurements in OPTIMIZATION_r14.md."""
     exploded = _shingled3_exploded(corpus)
-    kept = _ckpt(df_cut_kept(exploded, corpus))
+    kept = checkpoint(df_cut_kept(exploded, corpus))
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = kept.select(F.col("doc_id").alias("id_a"), "shingle")
     b = kept.select(F.col("doc_id").alias("id_b"), "shingle")
@@ -394,9 +361,9 @@ def dedup_near_minhash(spark, sf_dir):
     # r13 (guide §2.4): approxSimilarityJoin(vecs, vecs, ...) plants
     # `vecs` in BOTH plan branches, so the shingling + vocabulary
     # lookup ran twice per execution. Lazy DISK_ONLY checkpoint (the
-    # family's _ckpt pattern) computes it once; the LSH join reads
+    # family's checkpoint pattern) computes it once; the LSH join reads
     # blocks.
-    vecs = _ckpt(model.stages[0].transform(shingled))
+    vecs = checkpoint(model.stages[0].transform(shingled))
     pairs = model.stages[1].approxSimilarityJoin(vecs, vecs, 0.4, distCol="jaccard_dist")
     return (
         pairs.select(
@@ -802,7 +769,7 @@ def dedup_minhash_sql(spark, sf_dir):
     # shingle explode × 8 hash probes × md5 — the dominant cost. The
     # aggregate itself is tiny (docs × 8 rows); checkpoint it lazily
     # so the explode/hash pipeline runs once per execution.
-    sig = _ckpt(sig)
+    sig = checkpoint(sig)
     bands = sig.groupBy("doc_id", F.expr("h DIV 2").alias("band")).agg(
         F.concat(
             F.min(F.when(F.col("h") % 2 == 0, F.col("mh"))),
@@ -1126,9 +1093,6 @@ def cc_min_label(edges, max_rounds: int = 40):
         chain.reap()
         labels = doubled
         if changed == 0:
-            # the FINAL generation feeds the returned frame — hand it
-            # to the sweep-boundary reaper (r14, VERDICT r13 #2)
-            chain.release_to_registry()
             return labels, rounds_used
     raise RuntimeError(
         f"cc_min_label did not converge within {max_rounds} rounds — "
@@ -1408,7 +1372,7 @@ def exact_substring_spans(corpus):
     # the dominant cost — twice per execution (and 2× more in the
     # _apply caller). Same lazy DISK_ONLY checkpoint as jaccard_pairs'
     # kept stream: tokenize/hash once, both consumers re-read blocks.
-    grams = _ckpt(grams)
+    grams = checkpoint(grams)
     hot = grams.groupBy("gkey").count().filter(F.col("count") >= 2).select("gkey")
     rep = grams.join(hot, "gkey", "left_semi").select("doc_id", "pos")
     w_rn = Window.partitionBy("doc_id").orderBy("pos")
@@ -1607,7 +1571,7 @@ def dedup_exact_substring_apply(spark, sf_dir):
     # count); without materialization each re-ran the islands window +
     # span merge from the checkpointed grams (r13, guide §2.4). It is
     # span-sized — tiny next to the corpus.
-    covered = _ckpt(
+    covered = checkpoint(
         spans.select(
             "doc_id", F.explode(F.sequence("span_start", "span_end")).alias("idx")
         ).distinct()
@@ -1838,7 +1802,7 @@ def dedup_containment(spark, sf_dir):
     # df-cut via partial agg + broadcast LEFT ANTI against the hot
     # set, computed once behind a lazy checkpoint — see df_cut_kept
     # for the full shape rationale and measurements.
-    kept = _ckpt(df_cut_kept(exploded, full))
+    kept = checkpoint(df_cut_kept(exploded, full))
     sizes = kept.groupBy("doc_id").agg(F.count(F.lit(1)).alias("n_sh"))
     a = kept.select(F.col("doc_id").alias("id_a"), "shingle")
     b = kept.select(F.col("doc_id").alias("id_b"), "shingle")
@@ -1848,7 +1812,7 @@ def dedup_containment(spark, sf_dir):
     # thresholds from the one count. Each qualifying direction is
     # emitted exactly as before; only the duplicate mirror-image
     # counting work is gone. (`half` has a single consumer, so no
-    # checkpoint is needed here — `kept` above is the _ckpt.)
+    # checkpoint is needed here — `kept` above is the checkpoint.)
     # r14: contained-side prefix filtering was tried and REVERTED —
     # output-preserving (hash-proved tri-scale) but measurably slower
     # on this candidate-dense corpus; see jaccard_pairs' docstring.
@@ -1951,7 +1915,7 @@ def _minhash_parts(docs):
     # each returned sig is read by its bands aggregate AND by the
     # verify join(s) (i_sig three times in the incremental op), so the
     # checkpoint collapses 2-3 shingle-explode × md5 pipelines into 1.
-    sig = _ckpt(sig)
+    sig = checkpoint(sig)
     bands = sig.groupBy("doc_id", F.expr("h DIV 2").alias("band")).agg(
         F.concat(
             F.min(F.when(F.col("h") % 2 == 0, F.col("mh"))),
@@ -2380,7 +2344,7 @@ def dedup_cascade_keep(spark, sf_dir):
     cascade cost = sum of stage costs, no cross-stage blow-up."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    corpus = (
+    corpus = cache(
         d.unionByName(
             d.filter(F.col("doc_id") % 10 == 0).select(
                 (F.col("doc_id") + _DUP_OFFSET).alias("doc_id"), "text"
@@ -2391,10 +2355,7 @@ def dedup_cascade_keep(spark, sf_dir):
                 F.array_join(F.slice(toks, 1, F.size(toks) - 3), " ").alias("text"),
             )
         )
-    ).cache()
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(corpus)
+    )
     hashed = corpus.select("doc_id", _norm().alias("h"))
     grp = hashed.groupBy("h").agg(F.min("doc_id").alias("canon"))
     ex = hashed.join(grp, "h").select("doc_id", "canon")

@@ -15,6 +15,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import ZERO_VIOLATIONS, md5_chunk16, query
+from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
 
 _SEQ_TOKENS = 512  # sequence-pack token budget
@@ -1974,9 +1975,7 @@ def pipeline_dsir_select(spark, sf_dir):
     # once, and fold tgt/raw into ONE grouped pass (ct as a
     # conditional count: a bucket with no 'en' tokens gets ct=0,
     # exactly the old coalesce(ct, 0) on the left join).
-    from sparkml_spark.operators.llm_dedup import _ckpt
-
-    bt = _ckpt(bt)
+    bt = checkpoint(bt)
     g = bt.groupBy("b").agg(
         F.count(F.lit(1)).cast("long").alias("cr"),
         F.count(F.when(F.col("lang") == "en", 1)).cast("long").alias("ct"),
@@ -2558,18 +2557,17 @@ def pipeline_release_gate(spark, sf_dir):
     per doc; every manifest number is a partial-aggregating fold or
     a quasi-identifier histogram over that single projection."""
     d = load_table(spark, sf_dir, "documents")
-    norm = d.select(
-        "lang",
-        "source",
-        "n_chars",
-        F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("h"),
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-        .cast("long")
-        .alias("toks"),
-    ).cache()
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(norm)
+    norm = cache(
+        d.select(
+            "lang",
+            "source",
+            "n_chars",
+            F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("h"),
+            F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+            .cast("long")
+            .alias("toks"),
+        )
+    )
     n_docs = norm.agg(F.count(F.lit(1)).cast("long").alias("value")).select(
         F.lit("corpus").alias("artifact"), F.lit("n_docs").alias("metric"), "value"
     )

@@ -19,6 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import ZERO_VIOLATIONS, query
+from sparkml_spark.session import ARTIFACTS_DIR, cache
 from sparkml_spark.sources.loader import load_table
 
 _N_QUERIES = 10
@@ -456,15 +457,12 @@ def sim_ann_recall_bound(spark, sf_dir):
     so a broken index fails while LSH draw variance cannot.
     Violations = failed floors + structural breaks; oracle pins 0.
 
-    The exact top-k subplan is persist()ed: it feeds three consumers
-    (the n_exact count plus one semi-join per audited index), and the
+    The exact top-k subplan is cached: it feeds three consumers (the
+    n_exact count plus one semi-join per audited index), and the
     O(q·n·d) brute force is the most expensive subplan here — without
-    the persist it executes three times per run. The cache entry is
-    never explicitly unpersisted, which is deliberate and bounded:
-    what is cached is the brute-force OUTPUT (q·k ≈ 100 rows of two
-    longs, ~KBs), not its input, so even a session that runs this at
-    every fixture scale accumulates a few KB of CacheManager entries
-    — not the O(n·d) intermediate the wording might suggest.
+    the cache it executes three times per run. What is cached is the
+    brute-force OUTPUT (q·k ≈ 100 rows of two longs, ~KBs), not its
+    input; the sweep-boundary reaper frees it.
 
     Timing caveat (ADVICE r7): Spark dedups cache entries by logical
     plan, so REPEATED same-session executions of this query (bench
@@ -472,12 +470,7 @@ def sim_ann_recall_bound(spark, sf_dir):
     wall time EXCLUDES the O(q·n·d) brute-force stage. Any timing
     claim about this query must use the first (cold) execution or a
     fresh session; correctness is unaffected either way."""
-    exact = (
-        sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id").persist()
-    )
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(exact)
+    exact = cache(sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id"))
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
 
     def audit(df, tag, floor):
@@ -881,7 +874,7 @@ def ensure_ivf_index(spark, sf_dir) -> str:
     import os
 
     path = os.path.join(
-        "/root/repo/.artifacts",
+        ARTIFACTS_DIR,
         f"ivf_index_{os.path.basename(sf_dir.rstrip('/'))}",
     )
 
@@ -919,7 +912,7 @@ def ensure_lsh_model(spark, sf_dir) -> str:
     import os
 
     path = os.path.join(
-        "/root/repo/.artifacts",
+        ARTIFACTS_DIR,
         f"lsh_model_{os.path.basename(sf_dir.rstrip('/'))}",
     )
 
@@ -1062,12 +1055,7 @@ def sim_ann_recall_reload_bound(spark, sf_dir):
         .agg(F.count(F.lit(1)).alias("v_lsh_rt"))
     )
     # --- recall floors + structure against the RELOADED artifacts
-    exact = (
-        sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id").persist()
-    )
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(exact)
+    exact = cache(sim_topk_bruteforce(spark, sf_dir).select("query_id", "neighbor_id"))
     n_exact = exact.agg(F.count(F.lit(1)).alias("n_exact"))
 
     def audit(df, tag, floor):
@@ -1646,14 +1634,10 @@ def _pq_parts(spark, sf_dir):
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    d2 = (
+    d2 = cache(
         sub.join(F.broadcast(asub), "s")
         .select("vec_id", "s", "aid", d2expr.alias("d2"))
-        .cache()
     )
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(d2)
     wcode = Window.partitionBy("vec_id", "s").orderBy(
         F.col("d2").asc(), F.col("aid").asc()
     )
@@ -1874,14 +1858,10 @@ def sim_matryoshka_prefix_recall(spark, sf_dir):
         F.lit(0).cast("long"),
         lambda acc, v: acc + v,
     )
-    dots = (
+    dots = cache(
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", dot16.alias("dot16"), dot64.alias("dot64"))
-        .cache()
     )
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(dots)
     w16 = Window.partitionBy("query_id").orderBy(
         F.col("dot16").desc(), F.col("neighbor_id").asc()
     )

@@ -22,6 +22,7 @@ from __future__ import annotations
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import ZERO_VIOLATIONS, query
+from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
 
 SEED = 42
@@ -844,10 +845,7 @@ def ml_pipeline_persist(spark, sf_dir):
             F.col("p1").cast("int").alias("prediction"),
             (F.col("p1") == F.col("p2")).alias("roundtrip_equal"),
         )
-        out = out.cache()
-        from sparkml_spark.session import register_reapable_cache
-
-        register_reapable_cache(out)
+        out = cache(out)
         out.count()  # materialize before the saved model dir is removed
         return out
     finally:
@@ -1091,10 +1089,7 @@ def ml_eval_metrics_bound(spark, sf_dir):
 
     train, test = _train_test(_features(spark, sf_dir))
     m = _shared_fit(LogisticRegression(maxIter=20, regParam=0.01), train)
-    pred = m.transform(test).select("label", "prediction").cache()
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(pred)
+    pred = cache(m.transform(test).select("label", "prediction"))
     acc_ev = MulticlassClassificationEvaluator(metricName="accuracy").evaluate(pred)
     f1_ev = MulticlassClassificationEvaluator(metricName="f1").evaluate(pred)
 
@@ -1456,10 +1451,8 @@ def ml_text_hash_bound(spark, sf_dir):
     # to one flag; the wide tfidf vector survives only for rows the
     # twin join can touch), checkpoint that once, and aggregate the
     # flags in a single pass. Every flag expression is unchanged.
-    from sparkml_spark.operators.llm_dedup import _ckpt
-
     twin_rel = (F.col("doc_id") % 13 == 0) | (F.col("doc_id") >= 10_000_000)
-    per = _ckpt(
+    per = checkpoint(
         out.select(
             "doc_id",
             (
@@ -2656,14 +2649,13 @@ def ml_naive_bayes_exact(spark, sf_dir):
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id",
-        "lang",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
-    ).cache()
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(toks)
+    toks = cache(
+        d.select(
+            "doc_id",
+            "lang",
+            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
+        )
+    )
     vocab = toks.agg(F.countDistinct("tok").cast("long").alias("v"))
     class_tok = toks.groupBy(F.col("lang").alias("c"), "tok").agg(
         F.count(F.lit(1)).cast("long").alias("n")

@@ -16,9 +16,10 @@ import os
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import dsum, dsum_sql, query
+from sparkml_spark.session import ARTIFACTS_DIR, cache
 from sparkml_spark.sources.loader import load_table
 
-_WAREHOUSE = "/root/repo/.artifacts/warehouse"
+_WAREHOUSE = os.path.join(ARTIFACTS_DIR, "warehouse")
 _N_BUCKETS = 8
 _N_SALTS = 8
 
@@ -250,7 +251,7 @@ FROM hot a CROSS JOIN (
 """,
 )
 def cache_hot_dim_reuse(spark, sf_dir):
-    """Explicit `.cache()` of a derived rollup consumed TWICE in one
+    """Explicit cache of a derived rollup consumed TWICE in one
     plan (per-customer spend + its grand total): without caching the
     orders aggregation runs twice; with it the second branch reads the
     InMemoryRelation (pinned in tests/test_plans.py). At 100 TB the
@@ -259,17 +260,12 @@ def cache_hot_dim_reuse(spark, sf_dir):
     recompute is a full table pass. The grand total rides back as a
     broadcast nested-loop of a 1-row relation, not a collect."""
     o = load_table(spark, sf_dir, "orders")
-    hot = (
-        o.groupBy("o_custkey")
-        .agg(
+    hot = cache(
+        o.groupBy("o_custkey").agg(
             F.count(F.lit(1)).alias("n_orders"),
             dsum("o_totalprice").alias("spent"),
         )
-        .cache()
     )
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(hot)
     total = hot.agg(dsum("spent").alias("grand_total"))
     return hot.crossJoin(F.broadcast(total)).select(
         "o_custkey",

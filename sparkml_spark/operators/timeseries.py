@@ -34,6 +34,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import dsum, dsum_sql, query
+from sparkml_spark.session import cache
 from sparkml_spark.sources.loader import load_table
 
 # Single sortable tie-break key: chronological then event_id. (Built
@@ -327,12 +328,11 @@ def ts_autocorr(spark, sf_dir):
     m = daily.agg(
         (F.sum("c").cast("double") / F.count(F.lit(1))).alias("mean")
     )
-    dev = daily.crossJoin(F.broadcast(m)).select(
-        "d", (F.col("c").cast("double") - F.col("mean")).alias("dv")
-    ).cache()
-    from sparkml_spark.session import register_reapable_cache
-
-    register_reapable_cache(dev)
+    dev = cache(
+        daily.crossJoin(F.broadcast(m)).select(
+            "d", (F.col("c").cast("double") - F.col("mean")).alias("dv")
+        )
+    )
     den = dev.agg(
         F.sum(F.round(F.col("dv") * F.col("dv"), 9).cast("decimal(30,9)"))
         .cast("double")

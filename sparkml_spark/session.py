@@ -16,8 +16,10 @@ executor sizing move. Nothing here hard-codes a single-node assumption.
 from __future__ import annotations
 
 import os
+import threading
 
 from pyspark.sql import SparkSession
+from pyspark.storagelevel import StorageLevel
 
 #: SQL confs the engine REQUIRES for correctness (SURVEY.md §7.4).
 REQUIRED_SQL_CONFS: dict[str, str] = {
@@ -92,6 +94,13 @@ def get_spark(app_name: str = "sparkml_spark", master: str | None = None) -> Spa
     return ensure_confs(spark)
 
 
+#: On-disk artifacts (partitioned layouts, index and model dirs) live
+#: beside the package, in the checkout that runs it.
+ARTIFACTS_DIR = os.path.join(
+    os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".artifacts"
+)
+
+
 # ---------------------------------------------------------------------------
 # Session-scoped artifact sharing. Sibling queries (a base query and the
 # *_bound pin that audits it) need the same DETERMINISTIC artifacts:
@@ -130,83 +139,124 @@ def session_artifact(spark: SparkSession, key: tuple, build):
 
 
 # ---------------------------------------------------------------------------
-# Deterministic reaping of lazy-checkpoint blocks (r14, VERDICT r13 #2).
+# Pinned blocks and sweep-boundary reaping.
 #
-# The dedup family's `_ckpt` (lazy DISK_ONLY localCheckpoint of a
-# multi-consumer intermediate) pins its blocks until the ContextCleaner
-# GC's the DataFrame — DataFrame.unpersist() is a silent no-op for
-# checkpoint blocks (see CheckpointChain below). A 441-query sweep in
-# one session therefore accumulates standing DISK_ONLY blocks between
-# GC cycles. Every `_ckpt` call registers its block-owning RDD id
-# here; sweep harnesses that control execution order (driver_sim,
-# op_timing_census, verify_all) call `reap_registered` AFTER fully
-# consuming each query's result, holding the standing count at O(1).
+# The lifetime rule: only this module pins blocks. `cache(df)`,
+# `checkpoint(df)` and `CheckpointChain.step` register each block when
+# they pin it, so every pinned block can be freed by `reap_registered`
+# and no caller has to remember to register anything
+# (tests/test_reaper.py fails on a `.cache(`, `.persist(` or
+# `.localCheckpoint(` call anywhere else in the package).
 #
-# Safety: reaping is only sound once the owning query's result will
-# never be re-executed (localCheckpoint truncates lineage, so a reaped
-# frame cannot recompute). That is why the reap lives at the SWEEP
-# boundary, not inside `_ckpt`: a foreign driver that interleaves
-# builds and executions keeps the existing (correct) GC/ContextCleaner
-# backstop unchanged, and production 100 TB runs should use reliable
-# checkpoints per `_ckpt`'s own docstring.
+# A checkpoint is registered by the id of the one RDD that owns its
+# blocks, read from the checkpointed frame's `LogicalRDD`. Nothing is
+# inferred from which RDDs happen to be persistent, so a reap cannot
+# free a block that another query or thread pinned. Only the id is
+# kept, not the frame, so for a driver that never reaps the
+# ContextCleaner still frees the block once the frame is
+# garbage-collected (`DataFrame.unpersist()` is a silent no-op for
+# checkpoint blocks). A cache is registered as its DataFrame and
+# unpersisted through the cache manager.
+#
+# Safety: a reaped checkpoint cannot recompute (localCheckpoint
+# truncates lineage), so `reap_registered` may only run once no
+# registered frame will be executed again. Sweep harnesses that control
+# execution order (driver_sim, op_timing_census, perfbench) call it
+# after fully consuming each query's result, holding the standing
+# count at O(1); a driver that interleaves builds and executions never
+# reaps and keeps the GC backstop.
 # ---------------------------------------------------------------------------
 
-_REAPABLE: list[tuple[str, int]] = []  # (applicationId, persistent RDD id)
-_REAPABLE_DFS: list[tuple[str, object]] = []  # (applicationId, cached DataFrame)
+#: (applicationId, checkpoint's block-owning RDD id | cached DataFrame)
+_PINNED: list[tuple[str, object]] = []
+#: foreachBatch handlers pin blocks on Spark's callback thread.
+_PINNED_LOCK = threading.Lock()
 
 
-def _register(registry: list, app: str, item) -> None:
-    """Append (app, item), first dropping entries of other applications:
-    their SparkContext is stopped, so there is nothing left to free, and
-    a driver that never reaps must not keep them forever. Every append
-    goes through here, so all entries share one application."""
-    if registry and registry[0][0] != app:
-        registry.clear()
-    registry.append((app, item))
+def _pin(df, entry):
+    """Register `entry` for `df`'s application and return `df`. Entries
+    of other applications are dropped first: their SparkContext is
+    stopped, so there is nothing left to free, and a driver that never
+    reaps must not keep them forever."""
+    app = df.sparkSession.sparkContext.applicationId
+    with _PINNED_LOCK:
+        if _PINNED and _PINNED[0][0] != app:
+            _PINNED.clear()
+        _PINNED.append((app, entry))
+    return df
 
 
-def register_reapable_cache(df) -> None:
-    """Record a cache-manager-persisted DataFrame (`.cache()`/
-    `.persist()`) for sweep-boundary unpersist. Unlike checkpoint
-    blocks these can always recompute, so freeing them is safe at any
-    query boundary; the registry just makes it deterministic instead
-    of GC-timed."""
-    _register(_REAPABLE_DFS, df.sparkSession.sparkContext.applicationId, df)
+def _block_rdd_id(df) -> int:
+    """Id of the RDD that owns a checkpointed frame's blocks: the
+    analyzed plan of a localCheckpoint (eager or lazy, at any storage
+    level) is the `LogicalRDD` wrapping it."""
+    plan = df._jdf.queryExecution().analyzed()
+    if plan.nodeName() != "LogicalRDD":
+        raise TypeError(f"not a checkpointed frame: analyzed plan is {plan.nodeName()}")
+    return int(plan.rdd().id())
 
 
-def register_reapable(df) -> None:
-    """Record a checkpointed/persisted DataFrame's block-owning RDD id
-    for sweep-boundary reaping. Best-effort: an unexpected plan shape
-    just leaves the block to the GC/ContextCleaner backstop."""
-    try:
-        rid = int(df._jdf.queryExecution().analyzed().rdd().id())
-    except Exception:
-        return
-    _register(_REAPABLE, df.sparkSession.sparkContext.applicationId, rid)
-
-
-def reap_registered(spark: SparkSession) -> int:
-    """Unpersist every registered block for the live session and clear
-    the registry. Returns the number of RDDs actually freed. ONLY call
-    between queries, after the previous query's result is fully
-    consumed (see module comment above)."""
-    sc = spark.sparkContext
-    app = sc.applicationId
+def _free_rdds(sc, rids) -> int:
+    """Unpersist each id's RDD that is still persistent; return how
+    many were."""
     jmap = sc._jsc.getPersistentRDDs()
     n = 0
-    for a, rid in _REAPABLE:
-        if a != app:
-            continue
+    for rid in rids:
         jrdd = jmap.get(rid)
         if jrdd is not None:
             jrdd.unpersist(False)
             n += 1
-    _REAPABLE.clear()
-    for a, df in _REAPABLE_DFS:
-        if a == app:
+    return n
+
+
+def cache(df):
+    """`df.cache()`, registered for the sweep-boundary reaper. A cache
+    can always recompute, so freeing it is safe at any query boundary;
+    the registration makes the free deterministic instead of never."""
+    return _pin(df.cache(), df)
+
+
+def checkpoint(df):
+    """Lazy DISK_ONLY local checkpoint of a multi-consumer intermediate,
+    registered for the sweep-boundary reaper. It materializes at the
+    first action (plan construction stays action-free) and truncates
+    lineage. Memory levels put the whole materialized stream on the
+    executor heap, which at ×100 fixture scale (≈45M shingle rows)
+    drove the JVM into GCLocker allocation storms on a default-memory
+    driver; DISK_ONLY gives the checkpoint the same I/O profile as a
+    shuffle write — linear, off-heap, spill-free — at the cost of
+    re-reading from local disk, which is exactly what every shuffle
+    consumer does anyway.
+
+    Fault-tolerance caveat: localCheckpoint TRUNCATES lineage into
+    executor-local blocks — on a real cluster, losing any executor
+    that holds blocks (crash, spot preemption, or a dynamic-allocation
+    decommission) makes the checkpointed stream unrecoverable and
+    fails the query, because the cut lineage can't recompute them.
+    Fine on local[k] and on static on-demand clusters; production
+    100 TB runs should use a RELIABLE checkpoint dir (spark.checkpoint
+    after setCheckpointDir on HDFS/object storage) or persist +
+    shuffle-reuse instead, and must disable executor decommissioning
+    of storage blocks."""
+    out = df.localCheckpoint(eager=False, storageLevel=StorageLevel.DISK_ONLY)
+    return _pin(out, _block_rdd_id(out))
+
+
+def reap_registered(spark: SparkSession) -> int:
+    """Free every block registered for the live session and clear the
+    registry. Returns the number of checkpoint RDDs actually freed plus
+    the number of registered caches. ONLY call between queries, after
+    the previous query's result is fully consumed (see the comment
+    above)."""
+    sc = spark.sparkContext
+    with _PINNED_LOCK:
+        mine = [e for a, e in _PINNED if a == sc.applicationId]
+        _PINNED.clear()
+    n = _free_rdds(sc, [e for e in mine if isinstance(e, int)])
+    for df in mine:
+        if not isinstance(df, int):
             df.unpersist(False)
             n += 1
-    _REAPABLE_DFS.clear()
     return n
 
 
@@ -222,10 +272,10 @@ class CheckpointChain:
     localCheckpoint storage lives in the RDD registry, NOT the cache
     manager, so `DataFrame.unpersist()` on a superseded iteration is a
     silent no-op and every iteration pins one state-sized RDD forever
-    (measured round 12: the BPE trainer held 13 RDDs after 12 merges;
-    the CC loop pins one NODE-sized set per round). The fix is the
-    ALS/GraphX pattern: materialize the new checkpoint, then free the
-    superseded blocks through `SparkContext.getPersistentRDDs`.
+    (measured: the BPE trainer held 13 RDDs after 12 merges; the CC
+    loop pins one NODE-sized set per round). The fix is the ALS/GraphX
+    pattern: materialize the new checkpoint, then free the superseded
+    blocks by their RDD id.
 
     Usage:
         chain = CheckpointChain(spark)
@@ -241,67 +291,31 @@ class CheckpointChain:
     reap() is separate from step() because freeing is only safe after
     the LAST read of the superseded frame: checkpointing truncates
     lineage, so an unpersisted checkpoint cannot be recomputed — a
-    read-after-free is a job failure, not a slowdown.
+    read-after-free is a job failure, not a slowdown. Every generation
+    is also registered with the sweep-boundary reaper as it is created,
+    so a final state that outlives the query (the returned frame reads
+    it) is freed by `reap_registered`.
     """
 
     def __init__(self, spark: SparkSession) -> None:
         self._sc = spark.sparkContext
-        self._generations: list[set] = []
-
-    def _ids(self) -> set:
-        return {
-            int(i)
-            for i in self._sc._jsc.getPersistentRDDs().keySet().toArray()
-        }
-
-    def _free(self, pids: set) -> None:
-        jmap = self._sc._jsc.getPersistentRDDs()
-        for pid in pids:
-            jrdd = jmap.get(pid)
-            if jrdd is not None:
-                jrdd.unpersist(False)
+        self._generations: list[int] = []
 
     def step(self, df):
-        """Eagerly localCheckpoint `df`, recording its blocks as the
-        newest generation. Does NOT free anything — call reap().
-
-        Ownership is exact, not inferred (ADVICE r12): the checkpointed
-        DataFrame's analyzed plan IS the `LogicalRDD` wrapping the one
-        persistent RDD the checkpoint created, so that id — and only
-        that id — is recorded. A before/after diff of ALL persistent
-        RDDs would also capture any cache materialized by the step's
-        job or a checkpoint taken concurrently on the shared context
-        (e.g. a streaming handler on another thread), and reap() would
-        free blocks it does not own — a read-after-free for a foreign
-        localCheckpoint, whose lineage is truncated. The diff remains
-        only as a fallback for an unexpected plan shape."""
-        before = self._ids()
+        """Eagerly localCheckpoint `df`, recording the one RDD that owns
+        its blocks as the newest generation. Does NOT free anything —
+        call reap()."""
         out = df.localCheckpoint(eager=True)
-        try:
-            plan = out._jdf.queryExecution().analyzed()
-            self._generations.append({int(plan.rdd().id())})
-        except Exception:
-            self._generations.append(self._ids() - before)
-        return out
+        rid = _block_rdd_id(out)
+        self._generations.append(rid)
+        return _pin(out, rid)
 
     def reap(self, keep: int = 1) -> None:
         """Free every recorded generation except the newest `keep`."""
-        while len(self._generations) > keep:
-            self._free(self._generations.pop(0))
+        stale = self._generations[: max(0, len(self._generations) - keep)]
+        _free_rdds(self._sc, stale)
+        del self._generations[: len(stale)]
 
     def close(self) -> None:
         """Free ALL recorded generations (the final state included)."""
         self.reap(keep=0)
-
-    def release_to_registry(self) -> None:
-        """Hand the remaining generations to the sweep-boundary reaper
-        (r14): an iterative query's FINAL checkpoint must outlive the
-        query function (the returned DataFrame reads it), so it cannot
-        be close()d here — registering it lets `reap_registered` free
-        it once the sweep has consumed the query, instead of waiting
-        on the GC backstop."""
-        app = self._sc.applicationId
-        for gen in self._generations:
-            for rid in gen:
-                _register(_REAPABLE, app, rid)
-        self._generations.clear()

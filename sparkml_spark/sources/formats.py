@@ -24,14 +24,13 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkml_spark.registry import ZERO_VIOLATIONS, query
+from sparkml_spark.session import ARTIFACTS_DIR, cache
 from sparkml_spark.sources.loader import load_table
-
-_ARTIFACTS = "/root/repo/.artifacts"
 
 
 def _artifact(name: str) -> str:
-    os.makedirs(_ARTIFACTS, exist_ok=True)
-    return os.path.join(_ARTIFACTS, name)
+    os.makedirs(ARTIFACTS_DIR, exist_ok=True)
+    return os.path.join(ARTIFACTS_DIR, name)
 
 
 _NATION_SCHEMA = T.StructType(
@@ -311,13 +310,14 @@ def scan_csv_malformed(spark, sf_dir):
             T.StructField("_corrupt_record", T.StringType()),
         ]
     )
-    df = (
+    # the corrupt-record column cannot be queried alone without materializing
+    df = cache(
         spark.read.schema(schema)
         .option("header", True)
         .option("mode", "PERMISSIVE")
         .option("columnNameOfCorruptRecord", "_corrupt_record")
         .csv(path)
-    ).cache()  # corrupt-record column cannot be queried alone without materializing
+    )
     return df.select(
         F.count(F.lit(1)).alias("n_rows"),
         F.count_if(F.col("_corrupt_record").isNull()).alias("n_clean"),

@@ -1570,7 +1570,8 @@ def stream_cdc_apply(spark, sf_dir):
     # The FINAL state block stays pinned: cdc_finalize's result is
     # table-sized and returned lazily over it (collecting it here to
     # free the block would be the driver-side-materialization
-    # anti-pattern). One retained block per run, freed at session end.
+    # anti-pattern). The chain registered it when step() pinned it, so
+    # the sweep-boundary reaper frees it once the result is consumed.
     return cdc_finalize(state[0])
 
 

@@ -1641,11 +1641,13 @@ def test_foreach_batch_ops_release_feed_dirs_and_state(spark):
     in /tmp (ADVICE r12): after a feed-consuming op returns, every
     feed dir it created is deleted, and the foreachBatch state carry
     leaves at most the documented single final block pinned
-    (stream_cdc_apply's lazily-returned merge state)."""
+    (stream_cdc_apply's lazily-returned merge state), which the
+    sweep-boundary reaper frees."""
     import os
 
     import sparkml_spark.streaming.ops as sops
     from sparkml_spark.registry import QUERIES
+    from sparkml_spark.session import reap_registered
 
     from .conftest import SF_DIR
 
@@ -1676,6 +1678,13 @@ def test_foreach_batch_ops_release_feed_dirs_and_state(spark):
     }
     assert len(pinned_after - pinned_before) == 1
     assert out.count() > 0  # final state still readable (not reaped)
+
+    # the chain registered that block when it pinned it
+    assert reap_registered(spark) >= 1
+    pinned_reaped = {
+        int(i) for i in sc._jsc.getPersistentRDDs().keySet().toArray()
+    }
+    assert pinned_reaped - pinned_before == set()
 
 
 def test_partsupp_bridge_invariants(spark):

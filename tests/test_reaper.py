@@ -1,17 +1,24 @@
-"""r14 block-hygiene gates (VERDICT r13 #2): lazy `_ckpt` localCheckpoint
-blocks and per-query `.cache()` entries must be freeable DETERMINISTICALLY
-at sweep boundaries — `session.reap_registered` frees what the query path
-registered, and a reaped query recomputes correctly when re-built.
+"""Block-hygiene gates: every block the engine pins — `session.cache`,
+`session.checkpoint` and `CheckpointChain.step` — is registered when it
+is pinned, so `session.reap_registered` frees it DETERMINISTICALLY at a
+sweep boundary, and a reaped query recomputes correctly when re-built.
 
-The registries hold only the live application's entries: registering
+The registry holds only the live application's entries: registering
 drops what a stopped SparkContext left behind.
 """
 
 from __future__ import annotations
 
+import ast
+import os
+
+import pytest
+
 import sparkml_spark.operators  # noqa: F401 — populates the registry
 
 from .conftest import SF_DIR
+
+PKG = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), "sparkml_spark")
 
 
 def _noop(df):
@@ -28,7 +35,7 @@ def test_ckpt_blocks_register_and_reap(spark):
     df = QUERIES["dedup_ngram_jaccard"](spark, SF_DIR)
     _noop(df)
     n1 = df.count()
-    assert persistent_rdd_count(spark) > base, "expected _ckpt blocks to register"
+    assert persistent_rdd_count(spark) > base, "expected checkpoint blocks to register"
 
     n = reap_registered(spark)
     assert n >= 1
@@ -45,19 +52,19 @@ def test_cache_blocks_register_and_reap(spark):
     from sparkml_spark.registry import QUERIES
     from sparkml_spark.session import persistent_rdd_count, reap_registered
 
-    reap_registered(spark)
-    base = persistent_rdd_count(spark)
+    for qid in ("graph_label_propagation", "scan_csv_malformed"):
+        reap_registered(spark)
+        base = persistent_rdd_count(spark)
 
-    df = QUERIES["graph_label_propagation"](spark, SF_DIR)
-    _noop(df)
-    assert persistent_rdd_count(spark) > base, "expected round caches to register"
+        df = QUERIES[qid](spark, SF_DIR)
+        rows = sorted(df.collect())
+        assert persistent_rdd_count(spark) > base, f"{qid}: expected caches to register"
 
-    reap_registered(spark)
-    assert persistent_rdd_count(spark) <= base
+        assert reap_registered(spark) >= 1
+        assert persistent_rdd_count(spark) <= base, qid
 
-    # unpersisted caches recompute — same census, no read-after-free
-    rows = {r["label"]: r["n_nodes"] for r in df.collect()}
-    assert sum(rows.values()) > 0
+        # unpersisted caches recompute — same rows, no read-after-free
+        assert sorted(df.collect()) == rows, qid
 
 
 def test_registries_drop_dead_app_entries(spark):
@@ -66,18 +73,49 @@ def test_registries_drop_dead_app_entries(spark):
     session.reap_registered(spark)
     app = spark.sparkContext.applicationId
     # entries a stopped SparkContext left behind
-    session._REAPABLE.append(("app-dead", 1))
-    session._REAPABLE_DFS.append(("app-dead", object()))
+    session._PINNED.append(("app-dead", 1))
+    session._PINNED.append(("app-dead", object()))
 
-    session.register_reapable(spark.range(3).localCheckpoint(eager=False))
-    session.register_reapable_cache(spark.range(4).cache())
-    assert [a for a, _ in session._REAPABLE] == [app]
-    assert [a for a, _ in session._REAPABLE_DFS] == [app]
+    session.checkpoint(spark.range(3))
+    session.cache(spark.range(4))
+    assert [a for a, _ in session._PINNED] == [app, app]
+    assert session.reap_registered(spark) == 2
 
-    session.reap_registered(spark)
-    session._REAPABLE.append(("app-dead", 2))
+    # the chain registers each generation as it creates it; a
+    # generation the chain already freed is not counted again, and the
+    # final one is reaped exactly once
+    session._PINNED.append(("app-dead", 2))
     chain = session.CheckpointChain(spark)
     chain.step(spark.range(5))
-    chain.release_to_registry()
-    assert [a for a, _ in session._REAPABLE] == [app]
+    chain.step(spark.range(6))
+    chain.reap()
+    assert [a for a, _ in session._PINNED] == [app, app]
     assert session.reap_registered(spark) == 1
+    chain.close()
+    assert session.reap_registered(spark) == 0
+
+    # a block id is only ever read from a checkpoint's LogicalRDD
+    with pytest.raises(TypeError):
+        session._block_rdd_id(spark.range(3))
+
+
+def test_only_session_pins_blocks():
+    """Every pinned block is registered by construction: no module but
+    session.py calls `.cache(`, `.persist(` or `.localCheckpoint(`."""
+    pinning = {"cache", "persist", "localCheckpoint"}
+    offenders = []
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            path = os.path.join(root, name)
+            if not name.endswith(".py") or path == os.path.join(PKG, "session.py"):
+                continue
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            offenders += [
+                f"{os.path.relpath(path, PKG)}:{node.lineno} .{node.func.attr}("
+                for node in ast.walk(tree)
+                if isinstance(node, ast.Call)
+                and isinstance(node.func, ast.Attribute)
+                and node.func.attr in pinning
+            ]
+    assert offenders == [], offenders
