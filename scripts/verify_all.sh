@@ -52,9 +52,11 @@ if [ $quick -eq 0 ]; then
 else
   # Fitted-model sharing: every *_bound sibling must reuse its base
   # queries' fits (tests/test_memo.py), so a memo-key regression shows
-  # up without the full suite.
-  run "memo pairs" timeout 900 python -m pytest tests/test_memo.py -q -x \
-    -k memo_pair -p no:cacheprovider
+  # up without the full suite; and every fit goes through ml._fit, which
+  # drops training summaries (static gate, no JVM).
+  run "memo pairs" timeout 900 python -m pytest tests/test_memo.py \
+    tests/test_reaper.py::test_only_ml_fit_fits -q -x \
+    -k "memo_pair or only_ml_fit" -p no:cacheprovider
   # ALS blocking follows the input's partitions and matches MLlib's
   # default-block fit row for row.
   run "als blocks" timeout 600 python -m pytest tests/test_ml.py -q -x \

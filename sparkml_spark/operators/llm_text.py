@@ -427,6 +427,8 @@ def text_tfidf_mllib(spark, sf_dir):
     from pyspark.ml.feature import IDF, HashingTF, RegexTokenizer
     from pyspark.ml.functions import vector_to_array
 
+    from sparkml_spark.operators.ml import _fit
+
     d = load_table(spark, sf_dir, "documents")
     pipe = Pipeline(
         stages=[
@@ -435,7 +437,7 @@ def text_tfidf_mllib(spark, sf_dir):
             IDF(inputCol="tf", outputCol="tfidf"),
         ]
     )
-    out = pipe.fit(d).transform(d)
+    out = _fit(pipe, d).transform(d)
     arr = vector_to_array("tfidf")
     return out.select(
         "doc_id",

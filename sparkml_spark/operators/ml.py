@@ -54,31 +54,6 @@ def _train_test(df):
     return df.filter(F.col("vec_id") % 5 != 0), df.filter(F.col("vec_id") % 5 == 0)
 
 
-def _strip_summary(model):
-    """Drop a fitted model's training summary via a save/load round-trip
-    (loaded models carry none). Binary-classification summaries hold a
-    SparkSession reference; shipping such a model inside the transform
-    UDF closure hits `Task not serializable: ObservationManager` once
-    the session has served an `observe()` query (observed on PySpark
-    4.1.2 — any long-lived session that mixes telemetry and ML scoring,
-    exactly what a 1000-executor job server does). Cost: one local
-    metadata write, ~1 s."""
-    import shutil
-    import tempfile
-
-    # Explicit file: URI so save/load and the local rmtree always agree
-    # on the filesystem — a scheme-less absolute path resolves against
-    # fs.defaultFS, which is NOT the local disk on a real cluster
-    # (ADVICE r01: the artifact would leak to the cluster FS while
-    # cleanup scrubbed local /tmp).
-    path = tempfile.mkdtemp(prefix="sparkml_model_")
-    try:
-        model.write().overwrite().save("file://" + path)
-        return type(model).load("file://" + path)
-    finally:
-        shutil.rmtree(path, ignore_errors=True)
-
-
 def _fingerprint(value):
     """Uid-free, hashable digest of a param value: a Params object
     (estimator, Pipeline stage, evaluator) is its class plus its
@@ -95,31 +70,39 @@ def _fingerprint(value):
     return repr(value)
 
 
-def _has_summary(model) -> bool:
-    """Does `model`, or a PipelineModel stage / OneVsRest sub-model of
-    it, carry a training summary (see _strip_summary)?"""
-    from pyspark.ml import PipelineModel
-    from pyspark.ml.classification import OneVsRestModel
-    from pyspark.ml.util import HasTrainingSummary
-
-    if isinstance(model, PipelineModel):
-        subs = model.stages
-    elif isinstance(model, OneVsRestModel):
-        subs = model.models
-    else:
-        subs = []
-    return (isinstance(model, HasTrainingSummary) and model.hasSummary) or any(
-        _has_summary(m) for m in subs
-    )
+def _fitted(model):
+    """`model` and, recursively, its PipelineModel stages and OneVsRest
+    sub-models."""
+    yield model
+    for sub in list(getattr(model, "stages", [])) + list(getattr(model, "models", [])):
+        yield from _fitted(sub)
 
 
 def _fit(estimator, df):
+    """`estimator.fit(df)` with every training summary dropped in place,
+    on the model and on each of its stages and sub-models. This is the
+    package's only `.fit(` (gated in tests/test_reaper.py), so no fitted
+    model keeps a summary.
+
+    A summary holds its training DataFrame and with it the SparkSession.
+    Once the session has served an `observe()` query, a model that keeps
+    one (binary LR, RandomForest, LinearSVC, FM, and any Pipeline or
+    OneVsRest over them) dies in transform with `Task not serializable:
+    ObservationManager` (PySpark 4.1.2). `setSummary` is Scala
+    `private[ml]`, public in bytecode; the drop takes a few ms per model
+    and leaves predictions unchanged."""
+    from pyspark.ml.util import HasTrainingSummary
+
     model = estimator.fit(df)
-    return _strip_summary(model) if _has_summary(model) else model
+    empty = df.sparkSession._jvm.scala.Option.empty()
+    for m in _fitted(model):
+        if isinstance(m, HasTrainingSummary):
+            m._java_obj.setSummary(empty)
+    return model
 
 
 def _shared_fit(estimator, df):
-    """`estimator.fit(df)`, fitted once per SparkContext.
+    """`_fit(estimator, df)`, fitted once per SparkContext.
 
     The memo key is derived from the inputs: the estimator's class and
     param map (`_fingerprint`) plus the semanticHash() of `df`'s
@@ -132,8 +115,8 @@ def _shared_fit(estimator, df):
     checkpoint) never hit: fit them as one Pipeline on the source frame
     instead.
 
-    A model carrying a training summary comes back stripped
-    (_strip_summary). The training frame's partitioning is untouched:
+    Hit or miss, the model comes from `_fit`, so it keeps no training
+    summary. The training frame's partitioning is untouched:
     coalescing it would change treeAggregate order and could flip
     predictions."""
     from sparkml_spark.session import session_artifact
@@ -174,7 +157,7 @@ def ml_feature_text_pipeline(spark, sf_dir):
             IDF(inputCol="tf", outputCol="tfidf"),
         ]
     )
-    out = pipe.fit(d).transform(d)
+    out = _fit(pipe, d).transform(d)
     from pyspark.ml.functions import vector_to_array
 
     return out.select(
@@ -261,7 +244,7 @@ def ml_feature_scalers(spark, sf_dir):
             ),
         ]
     )
-    out = pipe.fit(c).transform(c)
+    out = _fit(pipe, c).transform(c)
     arr = vector_to_array("scaled")
     return out.select(
         "c_custkey",
@@ -331,7 +314,7 @@ def ml_feature_indexers(spark, sf_dir):
             ),
         ]
     )
-    out = pipe.fit(d).transform(d)
+    out = _fit(pipe, d).transform(d)
     return out.select(
         "doc_id",
         "lang",
@@ -386,7 +369,7 @@ def ml_fit_quality_bound(spark, sf_dir):
             / F.count(F.lit(1))
         ).alias("acc")
     )
-    km = _strip_summary(KMeans(k=16, seed=42).fit(feats))
+    km = _fit(KMeans(k=16, seed=42), feats)
     n_cells = (
         km.transform(feats)
         .groupBy("prediction")
@@ -428,14 +411,12 @@ def ml_classify_trees(spark, sf_dir):
         .unionByName(
             scored(
                 "random_forest",
-                _strip_summary(
-                    RandomForestClassifier(seed=SEED, numTrees=30, maxDepth=8).fit(train)
-                ),
+                _fit(RandomForestClassifier(seed=SEED, numTrees=30, maxDepth=8), train),
                 test,
             )
         )
         .unionByName(
-            scored("gbt_binary", GBTClassifier(seed=SEED, maxIter=15).fit(bin_train), bin_test)
+            scored("gbt_binary", _fit(GBTClassifier(seed=SEED, maxIter=15), bin_train), bin_test)
         )
     )
     return preds.groupBy("model").agg(
@@ -502,10 +483,10 @@ def ml_regression(spark, sf_dir):
     ev = RegressionEvaluator(metricName="rmse")
     models = [
         ("linear", _shared_fit(LinearRegression(maxIter=25), train)),
-        ("glm_gaussian", _strip_summary(GeneralizedLinearRegression(family="gaussian").fit(train))),
-        ("decision_tree", DecisionTreeRegressor(seed=SEED, maxDepth=8).fit(train)),
-        ("random_forest", RandomForestRegressor(seed=SEED, numTrees=20).fit(train)),
-        ("gbt", GBTRegressor(seed=SEED, maxIter=15).fit(train)),
+        ("glm_gaussian", _fit(GeneralizedLinearRegression(family="gaussian"), train)),
+        ("decision_tree", _fit(DecisionTreeRegressor(seed=SEED, maxDepth=8), train)),
+        ("random_forest", _fit(RandomForestRegressor(seed=SEED, numTrees=20), train)),
+        ("gbt", _fit(GBTRegressor(seed=SEED, maxIter=15), train)),
     ]
     rows = [(name, float(round(ev.evaluate(m.transform(test)), 4))) for name, m in models]
     return spark.createDataFrame(rows, "model STRING, rmse DOUBLE")
@@ -522,22 +503,21 @@ def ml_clustering(spark, sf_dir):
 
     vecs = _features(spark, sf_dir)
     out = []
-    km = _strip_summary(KMeans(k=10, seed=SEED).fit(vecs))
+    km = _fit(KMeans(k=10, seed=SEED), vecs)
     km_pred = km.transform(vecs)
     sil = float(round(ClusteringEvaluator(metricName="silhouette").evaluate(km_pred), 4))
     # GMM: full covariance in 64-d is singular with few points per
     # component ("matrix not symmetric" in breeze) — estimate in a
     # PCA-8 subspace, the standard high-dim GMM practice.
     pca8 = (
-        PCA(k=8, inputCol="features", outputCol="pca8")
-        .fit(vecs)
+        _fit(PCA(k=8, inputCol="features", outputCol="pca8"), vecs)
         .transform(vecs)
         .select("vec_id", F.col("pca8").alias("features"))
     )
     for name, model, data in [
         ("kmeans", km, vecs),
-        ("bisecting", _strip_summary(BisectingKMeans(k=10, seed=SEED).fit(vecs)), vecs),
-        ("gmm_pca8", _strip_summary(GaussianMixture(k=6, seed=SEED).fit(pca8)), pca8),
+        ("bisecting", _fit(BisectingKMeans(k=10, seed=SEED), vecs), vecs),
+        ("gmm_pca8", _fit(GaussianMixture(k=6, seed=SEED), pca8), pca8),
     ]:
         out.append(
             model.transform(data)
@@ -708,7 +688,7 @@ def ml_fpgrowth(spark, sf_dir):
     baskets = e.groupBy("user_id").agg(
         F.sort_array(F.collect_set("event_type")).alias("items")
     )
-    fp = FPGrowth(itemsCol="items", minSupport=0.2, minConfidence=0.5).fit(baskets)
+    fp = _fit(FPGrowth(itemsCol="items", minSupport=0.2, minConfidence=0.5), baskets)
     # Itemsets serialized to CSV: flat scalar output by contract (the
     # driver canonicalizer cannot hash array cells, VERDICT r5 #1).
     return fp.freqItemsets.select(
@@ -836,8 +816,10 @@ def ml_pipeline_persist(spark, sf_dir):
     model = _shared_fit(Pipeline(stages=[LogisticRegression(maxIter=10, regParam=0.01)]), train)
     path = tempfile.mkdtemp(prefix="sparkml_pipe_", dir="/tmp")
     try:
-        model.write().overwrite().save(path)
-        loaded = PipelineModel.load(path)
+        # file: URI: a scheme-less path resolves against fs.defaultFS,
+        # which on a cluster is not the local disk that rmtree cleans.
+        model.write().overwrite().save("file://" + path)
+        loaded = PipelineModel.load("file://" + path)
         a = model.transform(test).select("vec_id", F.col("prediction").alias("p1"))
         b = loaded.transform(test).select("vec_id", F.col("prediction").alias("p2"))
         out = a.join(b, "vec_id").select(
@@ -912,7 +894,7 @@ def ml_feature_select_impute(spark, sf_dir):
             Binarizer(threshold=5000.0, inputCol="bal_filled", outputCol="bal_high"),
         ]
     )
-    out = num_pipe.fit(with_nulls).transform(with_nulls)
+    out = _fit(num_pipe, with_nulls).transform(with_nulls)
     numeric = out.select(
         "c_custkey",
         F.round(F.element_at(vector_to_array("bal_maxabs"), 1), 6).alias("bal_scaled"),
@@ -929,7 +911,7 @@ def ml_feature_select_impute(spark, sf_dir):
     )
     sel.setFeatureType("continuous").setLabelType("categorical")
     sel.setSelectionThreshold(8)
-    selected = sel.fit(vecs).transform(vecs)
+    selected = _fit(sel, vecs).transform(vecs)
     sel_stats = selected.select(
         F.lit(None).cast("long").alias("c_custkey"),
         F.round(
@@ -1041,8 +1023,9 @@ def ml_isotonic_aft_fm(spark, sf_dir):
         .withColumn("hit", (F.col("prediction") == F.col("label")).cast("double"))
         .agg(F.avg("hit")).first()[0]
     )
-    fmr = FMRegressor(factorSize=4, stepSize=0.1, maxIter=30, seed=SEED).fit(
-        train.withColumn("label", F.col("label").cast("double"))
+    fmr = _fit(
+        FMRegressor(factorSize=4, stepSize=0.1, maxIter=30, seed=SEED),
+        train.withColumn("label", F.col("label").cast("double")),
     )
     fmr_rows = fmr.transform(test).count()
 
@@ -1250,9 +1233,10 @@ def ml_impute_bound(spark, sf_dir):
         .otherwise(F.col("c_acctbal"))
         .alias("bal_holey"),
     )
-    imp = Imputer(
-        inputCols=["bal_holey"], outputCols=["bal_filled"], strategy="median"
-    ).fit(with_nulls)
+    imp = _fit(
+        Imputer(inputCols=["bal_holey"], outputCols=["bal_filled"], strategy="median"),
+        with_nulls,
+    )
     out = imp.transform(with_nulls)
     bracket = with_nulls.filter(F.col("bal_holey").isNotNull()).agg(
         F.expr("percentile(bal_holey, 0.45)").alias("p45"),
@@ -1436,7 +1420,7 @@ def ml_text_hash_bound(spark, sf_dir):
         ]
     )
     out = (
-        pipe.fit(corpus)
+        _fit(pipe, corpus)
         .transform(corpus)
         .select(
             "doc_id",

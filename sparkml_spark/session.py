@@ -117,6 +117,10 @@ ARTIFACTS_DIR = os.path.join(
 #   the training frame's analyzed-plan semanticHash, checked with
 #   sameResult on every hit. A builder that drifts gets a refit, never
 #   a model fit on other data.
+# - A memo entry can own blocks for the session's life that no registry
+#   holds and no reap frees: a DistributedLDAModel keeps its GraphX
+#   graph and an ALS model its userFactors/itemFactors RDDs
+#   (tests/test_reaper.py checks these are the only blocks standing).
 # - The two on-disk path memos (IVF index, LSH model) keep explicit keys
 #   of (artifact name, realpath(sf_dir)): their builders write files,
 #   which no plan describes.

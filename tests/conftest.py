@@ -29,7 +29,7 @@ def spark():
     # session whose ObservationManager is live — the long-lived
     # job-server environment where an ML model serialized with its
     # training summary dies with `Task not serializable:
-    # ObservationManager` (see operators/ml.py `_strip_summary`). A
+    # ObservationManager` (see operators/ml.py `_fit`). A
     # fresh session hides that failure class; test order must not
     # decide whether it's caught.
     from pyspark.sql import Observation

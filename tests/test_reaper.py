@@ -99,23 +99,64 @@ def test_registries_drop_dead_app_entries(spark):
         session._block_rdd_id(spark.range(3))
 
 
+def _attr_calls(attrs):
+    """(module path relative to the package, name of the enclosing
+    top-level def or None, call node) of every `.attr(` call in the
+    package whose attr is in `attrs`."""
+    for root, _, files in os.walk(PKG):
+        for name in files:
+            if not name.endswith(".py"):
+                continue
+            path = os.path.join(root, name)
+            with open(path) as fh:
+                tree = ast.parse(fh.read(), path)
+            for top in tree.body:
+                for node in ast.walk(top):
+                    if (
+                        isinstance(node, ast.Call)
+                        and isinstance(node.func, ast.Attribute)
+                        and node.func.attr in attrs
+                    ):
+                        yield os.path.relpath(path, PKG), getattr(top, "name", None), node
+
+
 def test_only_session_pins_blocks():
     """Every pinned block is registered by construction: no module but
     session.py calls `.cache(`, `.persist(` or `.localCheckpoint(`."""
-    pinning = {"cache", "persist", "localCheckpoint"}
-    offenders = []
-    for root, _, files in os.walk(PKG):
-        for name in files:
-            path = os.path.join(root, name)
-            if not name.endswith(".py") or path == os.path.join(PKG, "session.py"):
-                continue
-            with open(path) as fh:
-                tree = ast.parse(fh.read(), path)
-            offenders += [
-                f"{os.path.relpath(path, PKG)}:{node.lineno} .{node.func.attr}("
-                for node in ast.walk(tree)
-                if isinstance(node, ast.Call)
-                and isinstance(node.func, ast.Attribute)
-                and node.func.attr in pinning
-            ]
+    offenders = [
+        f"{rel}:{node.lineno} .{node.func.attr}("
+        for rel, _, node in _attr_calls({"cache", "persist", "localCheckpoint"})
+        if rel != "session.py"
+    ]
     assert offenders == [], offenders
+
+
+def test_only_ml_fit_fits():
+    """No fitted model keeps a training summary by construction: the
+    package's only `.fit(` is in `operators/ml.py::_fit`, which drops
+    the summaries."""
+    offenders = [
+        f"{rel}:{node.lineno} .fit("
+        for rel, owner, node in _attr_calls({"fit"})
+        if (rel, owner) != (os.path.join("operators", "ml.py"), "_fit")
+    ]
+    assert offenders == [], offenders
+
+
+def test_memoized_models_own_the_standing_blocks(spark):
+    """MLlib pins blocks of its own that no registry holds: a memoized
+    DistributedLDAModel keeps its GraphX graph and a memoized ALS model
+    its factor RDDs, for the session's life. After a reap those must be
+    the only blocks standing, so a new library-internal pin fails here
+    instead of waiting for a sweep to find it."""
+    from sparkml_spark.registry import QUERIES
+    from sparkml_spark.session import reap_registered
+
+    owned = {"VertexRDD, VertexRDD", "EdgeRDD", "userFactors", "itemFactors"}
+    for qid in ("ml_lda_topics", "ml_als_recommend"):
+        QUERIES[qid](spark, SF_DIR).collect()
+    reap_registered(spark)
+
+    jmap = spark.sparkContext._jsc.getPersistentRDDs()
+    standing = [jmap.get(int(i)).name() for i in jmap.keySet().toArray()]
+    assert set(standing) <= owned, standing
