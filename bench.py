@@ -1,22 +1,35 @@
 """Benchmark harness (driver contract): runs the headline queries at
 $SPARK_GRAFT_SF_DIR (default /root/testdata/sf0.1) on
-local[$SPARK_GRAFT_CPUS] and prints ONE JSON line.
+local[$SPARK_GRAFT_CPUS] and prints ONE JSON line. Every clock read and
+timed execution goes through scripts/measure.py.
 
-Timing protocol: one warm shared SparkSession, each query executed
-three times, the MINIMUM wall-clock reported — the steady-state
-throughput number (the first runs are dominated by JVM JIT/codegen
-warmup, which BASELINE.md's "second execution" protocol still partly
-absorbs: the flagship measures ~1.0 s on run 2 but ~0.07 s steady). Keep `spark.sql.shuffle.partitions` small at
-this scale (BASELINE used 8) — AQE coalesces anyway, but the initial
-number still costs task-launch overhead locally.
+Timing protocol, one warm shared SparkSession:
 
-Cross-round A/B control (VERDICT r9 #1): after the main protocol, the
-previous round's committed code runs in a subprocess (temp git
-worktree at the commit that added the latest BENCH_r*.json) and the
-two versions' prepared plans execute INTERLEAVED query-by-query —
-the `ab` field carries both series plus per-query head/prev ratios,
-which scripts/bench_gate.py gates at 1.25. Set SPARK_GRAFT_NO_AB=1
-to skip (e.g. when benching a detached export without git history).
+- `value_e2e_run2` / `queries_e2e_run2`: build the DataFrame AND
+  execute it, timed on the second end-to-end run so JVM JIT/codegen
+  warm-up is absorbed. This is the number comparable to BASELINE.md's
+  "warm wall-clock of the second execution" protocol.
+- `queries_plan`: Python DataFrame construction plus Catalyst
+  analysis, optimization and physical planning of a fresh plan, no
+  execution.
+- `value` / `queries`: best of `measure.REPS` re-collects of the frame
+  run 2 already executed. AQE serves its finished shuffle stages from
+  that run, so only the LAST stage runs: no scan, no map side. Kept
+  unchanged for continuity with the committed BENCH_r*.json series;
+  not comparable to BASELINE.md.
+
+Keep `spark.sql.shuffle.partitions` small at this scale (BASELINE
+used 8) — AQE coalesces anyway, but the initial number still costs
+task-launch overhead locally.
+
+Cross-round A/B control: after the main protocol, the previous
+round's committed code runs in a subprocess (temp git worktree at the
+commit that added the latest BENCH_r*.json) and the two versions'
+prepared plans execute INTERLEAVED query-by-query, each execution a
+fresh plan (`measure.execute`), so every stage of both versions runs.
+The `ab` field carries both series plus per-query head/prev ratios,
+which scripts/bench_gate.py gates at 1.25. Set SPARK_GRAFT_NO_AB=1 to
+skip (e.g. when benching a detached export without git history).
 """
 
 from __future__ import annotations
@@ -27,10 +40,10 @@ import os
 import re
 import subprocess
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
+from scripts.measure import REPS, execute, timed, warm_runs
 from sparkml_spark.session import get_spark
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
@@ -80,9 +93,10 @@ def _prev_round_commit() -> tuple[str, str] | tuple[None, None]:
 
 
 def _ab_control(spark, dfs: dict) -> dict | None:
-    """Cross-round A/B steady control (VERDICT r9 #1): measure HEAD's
-    prepared plans and the PREVIOUS round's code interleaved
-    query-by-query in one wall-clock session, so machine-level drift
+    """Cross-round A/B control (VERDICT r9 #1): execute HEAD's prepared
+    plans and the PREVIOUS round's code interleaved query-by-query in
+    one wall-clock session, each execution a fresh plan timed by
+    `measure` on both sides, so machine-level drift
     hits both series identically and the per-query head/prev ratio
     isolates code regressions. Returns
     {prev_commit, head: {q: s}, prev: {q: s}, ratio: {q: r}} or None
@@ -128,11 +142,10 @@ def _ab_control(spark, dfs: dict) -> dict | None:
 
         head_t: dict[str, float] = {}
         prev_t: dict[str, float] = {}
-        for _rep in range(3):
+        for _rep in range(REPS):
             for name, df in dfs.items():
-                t0 = time.time()
-                df.collect()
-                head_t[name] = min(head_t.get(name, float("inf")), time.time() - t0)
+                _, secs = timed(lambda: execute(df))
+                head_t[name] = min(head_t.get(name, float("inf")), secs)
                 if name in prev_names:
                     worker.stdin.write(name + "\n")
                     worker.stdin.flush()
@@ -182,48 +195,25 @@ def main() -> int:
     total_e2e = 0.0
     for bench_name, qid in HEADLINE.items():
         fn = QUERIES[qid]
-        # TWO timings per query (round-2 protocol, VERDICT r01 item 3):
-        #
-        # 1. e2e ("run 2"): rebuild the DataFrame AND execute — i.e.
-        #    Python-side plan construction + Catalyst analysis +
-        #    execution, measured on the second end-to-end run so JVM
-        #    JIT/codegen warmup from run 1 is absorbed. This is the
-        #    apples-to-apples number vs BASELINE.md's "warm wall-clock
-        #    of the second execution" protocol.
-        # 2. steady: the prepared plan executed 3x, minimum taken —
-        #    pure execution throughput (what scales with data; the
-        #    ~0.1-0.25 s plan-construction overhead above is fixed at
-        #    any SF). Each .collect() runs the full distributed job, AQE
-        #    included.
-        rows = len(fn(spark, sf_dir).collect())  # run 1: warmup
-        t0 = time.time()
-        df = fn(spark, sf_dir)
-        rows = len(df.collect())
-        e2e = time.time() - t0  # run 2: build + execute
-        # Plan-side cost in isolation (VERDICT r6 #2: make e2e drift
-        # attributable): Python DataFrame construction + Catalyst
-        # analysis/optimization/physical planning of a FRESH plan,
-        # no execution. e2e - plan ≈ pure execution; for the flagship
-        # the residual is the documented exact-decimal aggregation tax
-        # on the serial single-rowgroup scan (SCALE.md), not compile
-        # creep.
-        t0 = time.time()
-        fresh = fn(spark, sf_dir)
-        fresh._jdf.queryExecution().executedPlan()
-        plan_s = time.time() - t0
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            rows = len(df.collect())
-            best = min(best, time.time() - t0)
-        times[bench_name] = round(best, 3)
+
+        def build_and_collect():
+            df = fn(spark, sf_dir)
+            return df, len(df.collect())
+
+        build_and_collect()  # run 1: warm-up
+        (df, rows), e2e = timed(build_and_collect)
+        # Plan-side cost in isolation: e2e - plan is roughly execution.
+        _, plan_s = timed(lambda: fn(spark, sf_dir)._jdf.queryExecution().executedPlan())
+        # Re-collects of the executed frame: only its last stage runs.
+        recollect = min(warm_runs(df.collect))
+        times[bench_name] = round(recollect, 3)
         times_e2e[bench_name] = round(e2e, 3)
         times_plan[bench_name] = round(plan_s, 3)
         dfs[bench_name] = df
-        total += best
+        total += recollect
         total_e2e += e2e
         print(
-            f"# {bench_name} ({qid}): steady {best:.3f}s / e2e {e2e:.3f}s"
+            f"# {bench_name} ({qid}): re-collect {recollect:.3f}s / e2e {e2e:.3f}s"
             f" (plan {plan_s:.3f}s), {rows} rows",
             file=sys.stderr,
         )

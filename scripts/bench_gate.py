@@ -1,12 +1,13 @@
-"""Cross-round steady-state bench regression gate (VERDICT r7 #4,
-reworked per VERDICT r9 #1 into a structural A/B control).
+"""Cross-round bench regression gate (VERDICT r7 #4, reworked per
+VERDICT r9 #1 into a structural A/B control).
 
 Runs bench.py once and passes its output through untouched. bench.py
-itself now measures HEAD and the PREVIOUS round's committed code
-(temp worktree at the commit that added the latest BENCH_r*.json)
-INTERLEAVED query-by-query in the same wall-clock session — the `ab`
-field of its JSON line. This gate fails when any query's
-head/prev ratio exceeds 1.25 AND the absolute delta exceeds 30 ms.
+itself times fresh plans (scripts/measure.py, every stage runs) of HEAD
+and the PREVIOUS round's committed code (temp worktree at the commit
+that added the latest BENCH_r*.json) INTERLEAVED query-by-query in the
+same wall-clock session — the `ab` field of its JSON line. This gate
+fails when any query's head/prev ratio exceeds 1.25 AND the absolute
+delta exceeds 30 ms.
 
 Why ratio, not absolute seconds: round 9's suite ran +53% over round
 8 purely on a machine-level shift, and the old 1.5x/+150 ms absolute
@@ -19,9 +20,10 @@ occasionally eats one ~10 ms hiccup per side); it is 5x tighter than
 the slack that masked the r9 move.
 
 Fallback: if the A/B control is unavailable (no git history, no
-prior BENCH file), fall back to the old absolute comparison against
-the latest committed BENCH_r{N}.json (1.5x AND +150 ms) with a
-warning — weaker, but round-1/export still gets a gate.
+prior BENCH file), fall back to the old absolute comparison of the
+re-collect `queries` against the latest committed BENCH_r{N}.json
+(1.5x AND +150 ms) with a warning — weaker (last stages only, and
+environment drift uncontrolled), but round-1/export still gets a gate.
 
 Usage: python scripts/bench_gate.py   (exit 1 on regression)
 """
@@ -93,7 +95,7 @@ def main() -> int:
         missing = set(cur["queries"]) - set(ab["ratio"])
         if failures:
             print(
-                f"bench_gate: A/B STEADY REGRESSION vs "
+                f"bench_gate: A/B REGRESSION vs "
                 f"{ab['prev_bench']} @ {ab['prev_commit'][:12]}:"
             )
             for f_ in failures:

@@ -1,9 +1,8 @@
-"""Steady-state bench worker for the cross-round A/B control
-(VERDICT r9 #1).
+"""Bench worker for the cross-round A/B control (VERDICT r9 #1).
 
 Runs the headline suite of ONE code version (the repo root passed as
 argv[1] — typically a temp worktree at the previous round's
-end-of-round commit) and serves per-query steady timings over a
+end-of-round commit) and serves per-query timings over a
 line protocol on stdin/stdout, so the parent (bench.py at HEAD) can
 interleave its own measurements with this worker's query-by-query in
 the same wall-clock session. Interleaving is what makes the
@@ -12,10 +11,14 @@ series identically, so the HEAD/prev ratio isolates CODE regressions
 — the failure mode of round 9, where a +53% absolute move passed on
 an "environment band" narrative verified for only one query.
 
+The worker times the previous round's package with THIS checkout's
+scripts/measure.py, so both series follow one protocol: every
+execution is a fresh plan of the prepared DataFrame.
+
 Protocol (stdout is reserved for the protocol; Spark logs to stderr):
   -> READY {"queries": [...]}        after plans are prepared + warmed
   <- <bench_name>\n                  parent requests one execution
-  -> TIME <bench_name> <seconds>\n   one steady execution of the
+  -> TIME <bench_name> <seconds>\n   one `measure.execute` of the
                                      prepared plan (collect)
   <- exit\n                          shut down
 """
@@ -26,7 +29,9 @@ import importlib.util
 import json
 import os
 import sys
-import time
+
+# This checkout's measure.py: this file's directory is sys.path[0].
+from measure import execute, timed
 
 
 def main() -> int:
@@ -54,7 +59,7 @@ def main() -> int:
     dfs = {}
     for bench_name, qid in headline.items():
         dfs[bench_name] = QUERIES[qid](spark, sf_dir)
-        dfs[bench_name].collect()  # warmup: JIT + codegen + AQE stats
+        execute(dfs[bench_name])  # warm-up: JIT + codegen
 
     print("READY " + json.dumps({"queries": list(headline)}), flush=True)
     for line in sys.stdin:
@@ -63,9 +68,8 @@ def main() -> int:
             continue
         if cmd == "exit":
             break
-        t0 = time.time()
-        dfs[cmd].collect()
-        print(f"TIME {cmd} {time.time() - t0:.4f}", flush=True)
+        _, secs = timed(lambda: execute(dfs[cmd]))
+        print(f"TIME {cmd} {secs:.4f}", flush=True)
     spark.stop()
     return 0
 

@@ -24,9 +24,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import timed
 
 
 def main() -> int:
@@ -46,12 +47,10 @@ def main() -> int:
 
     def run_arm(corpus, n):
         times: list[float] = []
-        t0 = time.time()
-        merges = train_bpe_merges(
+        merges, total = timed(lambda: train_bpe_merges(
             spark, args.sf_dir, n, corpus=corpus,
             on_merge=lambda r, s: times.append(s),
-        )
-        total = time.time() - t0
+        ))
         w = args.window
         windows = [
             {

@@ -3,14 +3,14 @@ headline run to the families the 100-TB story is really about).
 
 sf1_bench.py gave the BASELINE 2x gate its second scale point for the
 six headline queries. This script applies the same protocol — warm
-second execution + best-of-3 steady, one shared session, DuckDB twin =
-each op's REGISTERED oracle SQL on the SAME parquet layout — to the
-heavy curation ops (dedup / tfidf / corpus-assembly / packing /
-tokenize / decontaminate / global shuffle / brute-force ANN). These
-are the operators a 100-TB training-data pipeline actually spends its
-time in; until now their scale evidence was Spark-only scaling RATIOS
-(stress_scale --llm), with no cross-engine wall-clock anchor beyond
-sf0.1.
+second execution + best-of-N steady (scripts/measure.py), one shared
+session, DuckDB twin = each op's REGISTERED oracle SQL on the SAME
+parquet layout — to the heavy curation ops (dedup / tfidf /
+corpus-assembly / packing / tokenize / decontaminate / global shuffle /
+brute-force ANN). These are the operators a 100-TB training-data
+pipeline actually spends its time in; until now their scale evidence
+was Spark-only scaling RATIOS (stress_scale --llm), with no
+cross-engine wall-clock anchor beyond sf0.1.
 
 The suite is ORACLE-tier only, so the DuckDB twin provably computes
 identical semantics (the driver hash-compares exactly these pairs).
@@ -31,9 +31,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import warm_runs
 
 #: ORACLE-tier curation ops with corpus-sized work (see module doc).
 SUITE = [
@@ -95,27 +96,17 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
         )
 
-    def timed(run):
-        run()  # run1 primes plan + codegen
-        t0 = time.time()
-        run()
-        run2 = time.time() - t0
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            run()
-            best = min(best, time.time() - t0)
-        return round(run2, 3), round(best, 3)
-
     suite = args.ids or SUITE
     results: dict[str, dict] = {}
     for qid in suite:
         fn, sql = QUERIES[qid], ORACLES[qid]
         s_rows_holder = []
-        s_run2, s_best = timed(
+        s_times = warm_runs(
             lambda: s_rows_holder.append(len(fn(spark, out_dir).collect()))
         )
-        d_run2, d_best = timed(lambda: con.execute(sql).fetchall())
+        d_times = warm_runs(lambda: con.execute(sql).fetchall())
+        s_run2, s_best = round(s_times[0], 3), round(min(s_times), 3)
+        d_run2, d_best = round(d_times[0], 3), round(min(d_times), 3)
         d_rows = len(con.execute(sql).fetchall())
         s_rows = s_rows_holder[-1]
         results[qid] = {

@@ -25,11 +25,12 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+from scripts.measure import timed
 
 
 def loop_closure(nodes, depth_cap: int):
@@ -73,12 +74,10 @@ def closed_form(nodes, depth_cap: int):
 
 
 def measure(df):
-    t0 = time.monotonic()
-    df._jdf.queryExecution().executedPlan()  # analysis+optimize+planning
-    t_compile = time.monotonic() - t0
-    t0 = time.monotonic()
-    n = df.count()
-    return round(t_compile, 2), round(time.monotonic() - t0, 2), n
+    # analysis+optimize+planning
+    _, t_compile = timed(lambda: df._jdf.queryExecution().executedPlan())
+    n, t_exec = timed(df.count)
+    return round(t_compile, 2), round(t_exec, 2), n
 
 
 def main() -> int:

@@ -35,9 +35,9 @@ import hashlib
 import json
 import os
 import sys
-import time
 
 import duckdb
+from measure import timed
 from pyspark.sql import SparkSession
 
 
@@ -143,9 +143,8 @@ def main() -> int:
     spark.sparkContext.setLogLevel("ERROR")
 
     if not args.no_smoke:
-        t0 = time.time()
-        entry_rows = mod.entry(spark).collect()
-        print(f"t1 smoke: entry() -> {len(entry_rows)} rows in {time.time()-t0:.1f}s "
+        entry_rows, secs = timed(lambda: mod.entry(spark).collect())
+        print(f"t1 smoke: entry() -> {len(entry_rows)} rows in {secs:.1f}s "
               f"({'PASS' if len(entry_rows) > 0 else 'FAIL'})")
 
     queries = mod.queries()
@@ -180,22 +179,22 @@ def main() -> int:
         rdds_peak = max(rdds_peak, persistent_rdd_count(spark))
         reap_registered(spark)
         fn = queries[name]
-        t0 = time.time()
-        try:
-            sdf = fn(spark, args.sf_dir)
-            spdf = sdf.toPandas()
+
+        def spark_side():
+            spdf = fn(spark, args.sf_dir).toPandas()
             if name in oracles:
                 # ROWS-tier results are only counted by the driver;
                 # ORACLE-tier go through the canonicalizer (which is
                 # where array-typed result columns explode).
                 spdf = canon(spdf)
-            s_rows = pandas_rows(spdf)
-            s_cols = list(spdf.columns)
+            return pandas_rows(spdf), list(spdf.columns)
+
+        try:
+            (s_rows, s_cols), dt = timed(spark_side)
         except Exception as e:
             print(f"  {name}: SPARK ERROR {type(e).__name__}: {e}")
             n_fail += 1
             continue
-        dt = time.time() - t0
         if name not in oracles:
             print(f"  {name}: ROWS-tier, {len(s_rows)} rows [{dt:.1f}s]")
             n_rows_tier += 1

@@ -9,16 +9,16 @@ numbers per query:
 - build_s: Python plan construction + any work the operator does
   inside its callable (streaming ops run their micro-batch feed here;
   ML ops fit here) + the FIRST noop execution (warm-up included).
-- steady_s: best of `--reps` noop executions of the already-built
-  DataFrame — pure execution throughput, the number that scales with
-  data.
+- steady_s: best of scripts/measure.py's warm noop executions of the
+  already-built DataFrame, each a fresh plan — pure execution
+  throughput, the number that scales with data.
 
 Jobs are labelled (`setJobDescription`) so a live UI run is readable.
 Results stream to JSONL (one line per query, flushed) so a timeout
 still leaves a usable partial census. Usage:
 
   python scripts/op_timing_census.py [--sf-dir /root/testdata/sf0.1]
-      [--reps 2] [--out /tmp/census.jsonl] [names...]
+      [--out /tmp/census.jsonl] [names...]
 """
 
 from __future__ import annotations
@@ -27,16 +27,23 @@ import argparse
 import json
 import os
 import sys
-import time
 import traceback
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import execute, timed, warm_runs
+
+
+def _build_and_run(fn, spark, sf_dir):
+    """The query's DataFrame, built and executed once (noop sink)."""
+    df = fn(spark, sf_dir)
+    execute(df, "noop")
+    return df
 
 
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
-    ap.add_argument("--reps", type=int, default=2)
     ap.add_argument("--out", default="/tmp/op_census.jsonl")
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
@@ -53,23 +60,15 @@ def main() -> int:
     from sparkml_spark.session import persistent_rdd_count, reap_registered
 
     names = args.names or list(QUERIES)
-    t_all = time.time()
     with open(args.out, "w") as out:
         for i, qid in enumerate(names):
             fn = QUERIES[qid]
             spark.sparkContext.setJobDescription(f"census: {qid}")
             rec: dict = {"q": qid}
             try:
-                t0 = time.time()
-                df = fn(spark, args.sf_dir)
-                df.write.format("noop").mode("overwrite").save()
-                rec["build_s"] = round(time.time() - t0, 3)
-                best = float("inf")
-                for _ in range(args.reps):
-                    t0 = time.time()
-                    df.write.format("noop").mode("overwrite").save()
-                    best = min(best, time.time() - t0)
-                rec["steady_s"] = round(best, 3)
+                df, build_s = timed(lambda: _build_and_run(fn, spark, args.sf_dir))
+                rec["build_s"] = round(build_s, 3)
+                rec["steady_s"] = round(min(warm_runs(df, "noop")), 3)
             except Exception as exc:  # noqa: BLE001 — census, not a gate
                 rec["err"] = f"{type(exc).__name__}: {exc}"[:300]
                 traceback.print_exc(file=sys.stderr)
@@ -85,8 +84,7 @@ def main() -> int:
             out.flush()
             print(f"[{i+1}/{len(names)}] {qid}: {rec.get('build_s')}s / "
                   f"{rec.get('steady_s')}s {rec.get('err', '')}", file=sys.stderr)
-    print(f"census done: {len(names)} queries in {time.time()-t_all:.1f}s",
-          file=sys.stderr)
+    print(f"census done: {len(names)} queries", file=sys.stderr)
     return 0
 
 

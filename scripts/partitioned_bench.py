@@ -14,8 +14,9 @@ rebuilding sf0.1 as the layout a 100 TB corpus actually has:
 
 then measures, in one session:
 
-  1. every bench.HEADLINE query, steady best-of-3, single-file vs
-     partitioned layout — the scan-parallelism delta;
+  1. every bench.HEADLINE query, best of scripts/measure.py's
+     fresh-plan runs, single-file vs partitioned layout — the
+     scan-parallelism delta;
   2. partition PRUNING on the partitioned lineitem: the flagship
      Q1 aggregate with its l_shipdate cutoff also expressed on the
      partition column (the predicate a production query carries),
@@ -34,11 +35,12 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+from scripts.measure import warm_runs
 
 
 def build_layout(spark, base_dir: str, out_dir: str) -> None:
@@ -73,16 +75,6 @@ def build_layout(spark, base_dir: str, out_dir: str) -> None:
         f.write("ok\n")
 
 
-def steady(df) -> float:
-    df.collect()  # warm
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        df.collect()
-        best = min(best, time.time() - t0)
-    return best
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--sf-dir", default="/root/testdata/sf0.1")
@@ -111,8 +103,8 @@ def main() -> int:
         # interleave the two layouts per query — same A/B discipline
         # as the cross-round bench control
         dfs_a, dfs_b = fn(spark, args.sf_dir), fn(spark, out_dir)
-        single[name] = round(steady(dfs_a), 3)
-        parted[name] = round(steady(dfs_b), 3)
+        single[name] = round(min(warm_runs(dfs_a)), 3)
+        parted[name] = round(min(warm_runs(dfs_b)), 3)
         print(
             f"# {name}: single-file {single[name]:.3f}s vs "
             f"partitioned {parted[name]:.3f}s",
@@ -142,13 +134,13 @@ def main() -> int:
         if d.startswith("l_ship_month=")
     ]
     selected = [m for m in months if m.split("=")[1] <= cutoff_month]
-    t_pruned, t_full = steady(pruned_q), steady(full_q)
+    t_pruned, t_full = min(warm_runs(pruned_q)), min(warm_runs(full_q))
     # narrower cutoff: prune to one year (the realistic rolling-window read)
-    t_year = steady(
+    t_year = min(warm_runs(
         li.filter(F.col("l_ship_month").between("1995-01", "1995-12"))
         .groupBy("l_returnflag", "l_linestatus")
         .agg(F.sum("l_quantity").alias("sum_qty"))
-    )
+    ))
     year_sel = len([m for m in months if "1995-01" <= m.split("=")[1] <= "1995-12"])
 
     print(

@@ -16,8 +16,8 @@ session measures:
   1. scan-split mechanics: the raw lineitem scan's partition count on
      both layouts under a small maxPartitionBytes — multi-rowgroup
      must split into >1 populated task, single-rowgroup stays 1;
-  2. the headline suite, steady best-of-3, on both layouts,
-     interleaved per query;
+  2. the headline suite, best of scripts/measure.py's fresh-plan
+     runs, on both layouts, interleaved per query;
   3. result equality: the flagship aggregate row-set must be
      identical across layouts.
 
@@ -32,9 +32,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import warm_runs
 
 
 def build_layout(base_dir: str, out_dir: str, rows_per_group: int) -> None:
@@ -63,16 +64,6 @@ def build_layout(base_dir: str, out_dir: str, rows_per_group: int) -> None:
         )
     with open(marker, "w") as f:
         f.write(f"{base_dir}|{rows_per_group}\n")
-
-
-def steady(df) -> float:
-    df.collect()
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        df.collect()
-        best = min(best, time.time() - t0)
-    return best
 
 
 def main() -> int:
@@ -120,8 +111,8 @@ def main() -> int:
     for name, qid in HEADLINE.items():
         fn = QUERIES[qid]
         dfs_a, dfs_b = fn(spark, args.sf_dir), fn(spark, out_dir)
-        single[name] = round(steady(dfs_a), 3)
-        rowgrouped[name] = round(steady(dfs_b), 3)
+        single[name] = round(min(warm_runs(dfs_a)), 3)
+        rowgrouped[name] = round(min(warm_runs(dfs_b)), 3)
         print(f"# {name}: single-rowgroup {single[name]:.3f}s vs "
               f"multi-rowgroup {rowgrouped[name]:.3f}s", file=sys.stderr)
 

@@ -29,9 +29,10 @@ import json
 import os
 import re
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import timed, warm_runs
 
 
 def _dirs(k: int, sf_dir: str) -> tuple[str, str]:
@@ -53,9 +54,8 @@ def probe_cc(spark, k: int, sf_dir: str) -> dict:
     out = {}
     for _warm in (True, False):  # first pass warms JVM/codegen for BOTH dirs
         for name, d in (("base", base), ("scaled", scaled)):
-            t0 = time.time()
-            n = QUERIES["dedup_cc_clusters"](spark, d).count()
-            out[name] = {"rows": n, "seconds": round(time.time() - t0, 2)}
+            n, secs = timed(lambda: QUERIES["dedup_cc_clusters"](spark, d).count())
+            out[name] = {"rows": n, "seconds": round(secs, 2)}
     return {
         "metric": "cc_dedup_probe",
         "k": k,
@@ -69,21 +69,18 @@ def probe_stream(spark, k: int, sf_dir: str) -> dict:
 
     _, scaled = _dirs(k, sf_dir)
     n = spark.read.parquet(os.path.join(scaled, "events.parquet")).count()
-    # Warm once, then report best-of-2 — the same protocol as probe_cc/
-    # probe_bucket/bench steady(); a single cold run folds plan/codegen
-    # startup into the throughput figure (ADVICE r6).
-    QUERIES["stream_tumbling_agg"](spark, scaled).count()
-    dt = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        res = QUERIES["stream_tumbling_agg"](spark, scaled)
-        windows = res.count()
-        dt = min(dt, time.time() - t0)
+    # Warm once, then report the best replay (measure.warm_runs); a
+    # single cold run folds plan/codegen startup into the throughput
+    # figure (ADVICE r6).
+    windows = []
+    dt = min(warm_runs(
+        lambda: windows.append(QUERIES["stream_tumbling_agg"](spark, scaled).count())
+    ))
     return {
         "metric": "stream_replay_probe",
         "k": k,
         "events": n,
-        "state_rows": windows,
+        "state_rows": windows[-1],
         "seconds": round(dt, 1),
         "events_per_sec": round(n / dt),
     }
@@ -112,13 +109,7 @@ def probe_bucket(spark, k: int, sf_dir: str) -> dict:
             .groupBy("o_orderstatus")
             .agg(F.count(F.lit(1)).alias("n_items"))
         )
-        df.write.format("noop").mode("overwrite").save()  # warm
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            df.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        return round(best, 2)
+        return round(min(warm_runs(df, "noop")), 2)
 
     t_raw = join_time(li, o)
 
@@ -137,17 +128,19 @@ def probe_bucket(spark, k: int, sf_dir: str) -> dict:
     # reference to the table.
     fixture = re.sub(r"[^A-Za-z0-9_]", "_", os.path.basename(sf_dir.rstrip("/")))
     names = (f"li_probe_x{k}_{fixture}", f"o_probe_x{k}_{fixture}")
-    t0 = time.time()
-    for name, df, key in ((names[0], li, "l_orderkey"), (names[1], o, "o_orderkey")):
-        spark.sql(f"DROP TABLE IF EXISTS {name}")
-        (
-            df.write.bucketBy(32, key)
-            .sortBy(key)
-            .option("path", os.path.join(wh, name))
-            .mode("overwrite")
-            .saveAsTable(name)
-        )
-    t_write = round(time.time() - t0, 2)
+
+    def write_buckets():
+        for name, df, key in ((names[0], li, "l_orderkey"), (names[1], o, "o_orderkey")):
+            spark.sql(f"DROP TABLE IF EXISTS {name}")
+            (
+                df.write.bucketBy(32, key)
+                .sortBy(key)
+                .option("path", os.path.join(wh, name))
+                .mode("overwrite")
+                .saveAsTable(name)
+            )
+
+    t_write = round(timed(write_buckets)[1], 2)
     t_bucketed = join_time(spark.table(names[0]), spark.table(names[1]))
     saved = max(t_raw - t_bucketed, 1e-9)
     return {
@@ -170,7 +163,7 @@ def probe_hotgram(spark, k: int, sf_dir: str) -> dict:
     those rows land in ONE task; under the partial-agg + semi-join
     plan the hot key collapses map-side to one (gkey, count) row per
     map task. Reports base (every-7th boilerplate, ×1) vs hot (×k,
-    every doc) wall and the span-row counts, warm best-of-2."""
+    every doc) wall and the span-row counts, warm best-of-N (measure)."""
     from pyspark.sql import functions as F
 
     from sparkml_spark.operators.llm_dedup import _ES_BOILER, exact_substring_spans
@@ -195,13 +188,8 @@ def probe_hotgram(spark, k: int, sf_dir: str) -> dict:
     out = {}
     for name, corpus in (("base", base), ("hot", hot)):
         spans = exact_substring_spans(corpus)
-        rows = spans.count()  # warm
-        best = float("inf")
-        for _ in range(2):
-            t0 = time.time()
-            spans.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
-        out[name] = {"span_rows": rows, "seconds": round(best, 2)}
+        rows = spans.count()
+        out[name] = {"span_rows": rows, "seconds": round(min(warm_runs(spans, "noop")), 2)}
     return {
         "metric": "exact_substring_hotgram_probe",
         "k": k,
@@ -221,7 +209,7 @@ def probe_semdedup(spark, k: int, sf_dir: str) -> dict:
     (ADVICE r9: raw id-mod salting collapses residue-correlated ids
     into few cells). Replicates the sf embeddings xj for j in the
     ladder, reports candidate-pair count (sum over realized hash
-    cells of c*(c-1)/2), max cell size, and warm best-of-2 wall for
+    cells of c*(c-1)/2), max cell size, and warm best-of-N wall for
     capped vs uncapped runs. Expected: uncapped pairs grow ~n^2
     (x10 => x100 pairs); capped pairs grow ~n (cells multiply, cell
     size stays <= cap), which is the whole point of the cap."""
@@ -284,16 +272,11 @@ def probe_semdedup(spark, k: int, sf_dir: str) -> dict:
         df = giant(j)
         pairs, max_cell = cell_stats(df, cap)
         res = semdedup_within_clusters(df, cap=cap)
-        best = float("inf")
-        for _ in range(2):  # first run doubles as the warm-up
-            t0 = time.time()
-            res.write.format("noop").mode("overwrite").save()
-            best = min(best, time.time() - t0)
         out[name] = {
             "vectors": n_base * j,
             "candidate_pairs": pairs,
             "max_cell": max_cell,
-            "seconds": round(best, 2),
+            "seconds": round(min(warm_runs(res, "noop")), 2),
         }
     return {
         "metric": "semdedup_degenerate_cluster_probe",

@@ -8,9 +8,9 @@ stress harness's referential-integrity-preserving build (lineitem
 splits into parallel tasks; the single-rowgroup serial-scan artifact
 SCALE.md documents does not exist on this layout) — timed under the
 BASELINE protocol (warm second execution, one shared session) AND
-steady-state (best of 3), against DuckDB twins measured the same two
-ways on the SAME parquet layout. The DuckDB side runs each headline
-query's registered ORACLE sql — the exact semantics the driver
+steady-state (best of scripts/measure.py's runs), against DuckDB twins
+measured the same two ways on the SAME parquet layout. The DuckDB side
+runs each headline query's registered ORACLE sql — the exact semantics the driver
 hash-compares, so the two engines are doing provably identical work.
 
 Prints one JSON line; recorded in SCALE.md. Usage:
@@ -23,9 +23,10 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+
+from scripts.measure import warm_runs
 
 
 def main() -> int:
@@ -65,26 +66,15 @@ def main() -> int:
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{path}')"
         )
 
-    def timed(run):
-        """(run2, best-of-3-steady): run1 primes plan+codegen, run2 is
-        the BASELINE.md protocol number, then 3 more for steady."""
-        run()
-        t0 = time.time()
-        run()
-        run2 = time.time() - t0
-        best = float("inf")
-        for _ in range(3):
-            t0 = time.time()
-            run()
-            best = min(best, time.time() - t0)
-        return round(run2, 3), round(best, 3)
-
     results: dict[str, dict] = {}
     for name, qid in HEADLINE.items():
         fn = QUERIES[qid]
-        s_run2, s_best = timed(lambda: fn(spark, out_dir).collect())
         sql = ORACLES[qid]
-        d_run2, d_best = timed(lambda: con.execute(sql).fetchall())
+        # the first timed run is run 2, the BASELINE.md protocol number
+        s_times = warm_runs(lambda: fn(spark, out_dir).collect())
+        d_times = warm_runs(lambda: con.execute(sql).fetchall())
+        s_run2, s_best = round(s_times[0], 3), round(min(s_times), 3)
+        d_run2, d_best = round(d_times[0], 3), round(min(d_times), 3)
         n_rows = len(con.execute(sql).fetchall())
         results[name] = {
             "rows": n_rows,

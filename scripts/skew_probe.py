@@ -27,7 +27,7 @@ demonstrates). Three timed variants:
             construction NOT broadcastable.
 
 Each variant writes to the noop sink (executor-side, no driver
-ingest). Prints one JSON line.
+ingest), timed by scripts/measure.py. Prints one JSON line.
 
 Usage: python scripts/skew_probe.py [--k 100] [--salt 8]
 (expects the scalebench x{k}p2 build to exist — run stress_scale.py
@@ -40,23 +40,14 @@ import argparse
 import json
 import os
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
 
+from scripts.measure import warm_runs
+
 HOT_KEY = 1
-
-
-def timed(df) -> float:
-    df.write.format("noop").mode("overwrite").save()  # warm
-    best = float("inf")
-    for _ in range(2):
-        t0 = time.time()
-        df.write.format("noop").mode("overwrite").save()
-        best = min(best, time.time() - t0)
-    return round(best, 3)
 
 
 def main() -> int:
@@ -110,8 +101,8 @@ def main() -> int:
         )
 
     results = {}
-    results["smj_skew_off"] = timed(smj(False))
-    results["smj_aqe_skew_split"] = timed(smj(True))
+    results["smj_skew_off"] = min(warm_runs(smj(False), "noop"))
+    results["smj_aqe_skew_split"] = min(warm_runs(smj(True), "noop"))
 
     # Manual salting (join_skew_salted pattern), AQE split off so the
     # number isolates the salt's effect.
@@ -125,18 +116,19 @@ def main() -> int:
     salted = fact.join(
         dim, (fact.l_orderkey == dim.o_orderkey) & (fact.salt == dim.salt)
     ).select(*joined_cols)
-    results["smj_salted"] = timed(salted)
+    results["smj_salted"] = min(warm_runs(salted, "noop"))
 
     # Default config: at x100 the dim EXCEEDS the 10 MB broadcast
     # threshold, so this is the AQE sort-merge path under default
     # settings, not a broadcast demo (see module docstring).
     spark.conf.unset("spark.sql.autoBroadcastJoinThreshold")
     spark.conf.set("spark.sql.adaptive.skewJoin.enabled", "true")
-    results["default_config"] = timed(
+    results["default_config"] = min(warm_runs(
         skewed.join(orders, skewed.l_orderkey == orders.o_orderkey).select(
             *joined_cols
-        )
-    )
+        ),
+        "noop",
+    ))
 
     n_hot = skewed.filter(F.col("l_orderkey") == HOT_KEY).count()
     print(
@@ -147,7 +139,7 @@ def main() -> int:
                 "fact_rows": skewed.count(),
                 "hot_key_rows": n_hot,
                 "salt": s,
-                "seconds": results,
+                "seconds": {v: round(s, 3) for v, s in results.items()},
             }
         )
     )

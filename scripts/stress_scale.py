@@ -13,9 +13,10 @@ text is mapped through a per-replica seeded alphabet permutation and
 embedding components circular-shifted (sign-flipped past the shift
 period) so the duplicate/near-dup structure stays constant. The
 small dims (region/nation/supplier/part) are copied through
-unchanged. Then runs every bench.HEADLINE query
-steady-state (min of 3) at the base and scaled dirs and prints one
-JSON line with per-query times and scaling ratios.
+unchanged. Then times every bench.HEADLINE query at the base and
+scaled dirs (scripts/measure.py: a warm-up, then the best of its
+fresh-plan runs, so every stage runs) and prints one JSON line with
+per-query times and scaling ratios.
 
 A plan that survives scale-up shows ratio ≈ k (linear in rows, the
 local ceiling: 32 cores, one machine) or better; a super-linear ratio
@@ -32,11 +33,12 @@ import json
 import os
 import shutil
 import sys
-import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import functions as F
+
+from scripts.measure import warm_runs
 
 #: fact table -> {column: shared key-space name}. Offsets are computed
 #: per key SPACE (max over every column in the space + 1), not per
@@ -373,35 +375,6 @@ def build_scaled(spark, base_dir: str, out_dir: str, k: int) -> None:
         os.rename(dst + ".dir", dst)
 
 
-def steady(fn, spark, sf_dir: str, sink: str = "collect") -> float:
-    """Best-of-3 warm re-execution. sink='collect' matches the bench
-    protocol (result rows cross to the driver — right for small
-    results); sink='noop' writes executor-side to Spark's noop source,
-    isolating the DISTRIBUTED stages. For ops whose OUTPUT grows with
-    the data (tfidf's (doc,term) pairs, sessionize's sessions), the
-    collect protocol measures mostly the driver single-threadedly
-    ingesting millions of result rows — its own documented
-    anti-pattern. Measured at ×100: tfidf 82.2× under collect vs 6.4×
-    under noop; sessionize 112.6× vs 3.9×. A production pipeline
-    writes such outputs to a sink, so noop is the cluster-predictive
-    protocol for output-linear ops."""
-    df = fn(spark, sf_dir)
-
-    def run():
-        if sink == "noop":
-            df.write.format("noop").mode("overwrite").save()
-        else:
-            df.collect()
-
-    run()  # warm (plan + codegen + shuffle reuse)
-    best = float("inf")
-    for _ in range(3):
-        t0 = time.time()
-        run()
-        best = min(best, time.time() - t0)
-    return best
-
-
 def main() -> int:
     ap = argparse.ArgumentParser()
     ap.add_argument("--k", type=int, default=10)
@@ -409,13 +382,20 @@ def main() -> int:
     ap.add_argument(
         "--llm", action="store_true", help="time the §2.I LLM suite instead"
     )
+    # For ops whose OUTPUT grows with the data (tfidf's (doc,term)
+    # pairs, sessionize's sessions), the collect protocol measures
+    # mostly the driver single-threadedly ingesting millions of result
+    # rows — its own documented anti-pattern. Measured at ×100: tfidf
+    # 82.2× under collect vs 6.4× under noop; sessionize 112.6× vs
+    # 3.9×. A production pipeline writes such outputs to a sink, so
+    # noop is the cluster-predictive protocol for output-linear ops.
     ap.add_argument(
         "--sink",
         choices=["collect", "noop"],
         default="collect",
         help="collect = bench protocol (driver ingests results); "
         "noop = executor-side write, isolates the distributed stages "
-        "(use for output-linear ops — see steady() docstring)",
+        "(use for output-linear ops)",
     )
     ap.add_argument(
         "--only",
@@ -480,8 +460,8 @@ def main() -> int:
     base, scaled, ratios = {}, {}, {}
     for name, qid in suite.items():
         fn = QUERIES[qid]
-        base[name] = round(steady(fn, spark, args.sf_dir, args.sink), 3)
-        scaled[name] = round(steady(fn, spark, out_dir, args.sink), 3)
+        base[name] = round(min(warm_runs(fn(spark, args.sf_dir), args.sink)), 3)
+        scaled[name] = round(min(warm_runs(fn(spark, out_dir), args.sink)), 3)
         ratios[name] = round(scaled[name] / max(base[name], 1e-9), 1)
         print(
             f"# {name}: base {base[name]:.3f}s -> x{args.k} {scaled[name]:.3f}s "

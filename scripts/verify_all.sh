@@ -6,8 +6,8 @@
 # under a hard timeout so a hang can't block the one-shot forever.
 #
 # Usage: bash scripts/verify_all.sh [--quick]
-#   --quick: fit-memo pair, ALS and reaper tests + sf0.01 sim + bench only
-#            (skips the rest of pytest and the other scales)
+#   --quick: fit-memo pair, ALS, reaper and timing tests + sf0.01 sim +
+#            bench only (skips the rest of pytest and the other scales)
 set -u
 cd "$(dirname "$0")/.."
 
@@ -65,6 +65,11 @@ else
   # pinned and freed by the sweep-boundary reaper (sf0.001).
   run "reaper" timeout 600 python -m pytest tests/test_reaper.py -q -x \
     -p no:cacheprovider
+  # Timing: only scripts/measure.py reads a clock in scripts/ and
+  # bench.py (static), and its timed runs execute every stage of an
+  # already-collected frame (sf0.001).
+  run "fresh-plan timing" timeout 600 python -m pytest tests/test_measure.py \
+    -q -x -p no:cacheprovider
 fi
 run "sim sf0.01" timeout 1800 python scripts/driver_sim.py
 if [ $quick -eq 0 ]; then
@@ -83,8 +88,8 @@ if [ $quick -eq 0 ]; then
   # measurement so host drift can't fail a green protocol.
   run "sim sf0.1" timeout 4800 python scripts/driver_sim.py --sf-dir /root/testdata/sf0.1
   # Cheap scale gate (VERDICT r6 #6): headline suite at x10-of-sf0.01,
-  # fail on any super-linear ratio (measured ratios are <=3 here —
-  # scan parallelism absorbs x10; 10 = linear is the rot alarm).
+  # fresh plans, fail on any super-linear ratio (measured 1.0-2.1x on
+  # 4 cores; 10 = linear is the rot alarm).
   run "stress x10" timeout 1500 python scripts/stress_scale.py --k 10 \
     --sf-dir /root/testdata/sf0.01 --fail-ratio 10
 fi
@@ -94,8 +99,8 @@ fi
 # it is the cheapest large-scale canary in the suite (~25s).
 run "bpe fertility bound sf0.1" timeout 300 python scripts/driver_sim.py \
   --sf-dir /root/testdata/sf0.1 quality_bpe_fertility_bound
-# bench + cross-round A/B steady regression gate (VERDICT r9 #1):
-# bench.py measures HEAD interleaved with the previous round's
+# bench + cross-round A/B regression gate (VERDICT r9 #1): bench.py
+# times fresh plans of HEAD interleaved with the previous round's
 # committed code; the gate fails any query whose head/prev ratio
 # exceeds 1.25 (30ms delta floor).
 run "bench" timeout 1500 python scripts/bench_gate.py

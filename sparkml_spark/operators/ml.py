@@ -71,10 +71,13 @@ def _fingerprint(value):
 
 
 def _fitted(model):
-    """`model` and, recursively, its PipelineModel stages and OneVsRest
-    sub-models."""
+    """`model` and, recursively, its PipelineModel stages, OneVsRest
+    sub-models and tuning models' best model."""
     yield model
-    for sub in list(getattr(model, "stages", [])) + list(getattr(model, "models", [])):
+    subs = list(getattr(model, "stages", [])) + list(getattr(model, "models", []))
+    if getattr(model, "bestModel", None) is not None:
+        subs.append(model.bestModel)
+    for sub in subs:
         yield from _fitted(sub)
 
 

@@ -63,20 +63,13 @@ def builds(monkeypatch):
     return built
 
 
-def _fitted(model):
-    """`model` and, recursively, its PipelineModel stages and OneVsRest
-    sub-models."""
-    yield model
-    for sub in list(getattr(model, "stages", [])) + list(getattr(model, "models", [])):
-        yield from _fitted(sub)
-
-
 @pytest.mark.parametrize(
     "bases,sibling", MEMO_PAIRS, ids=[sibling for _, sibling in MEMO_PAIRS]
 )
 def test_memo_pair_sibling_builds_nothing(spark, builds, bases, sibling):
     from pyspark.ml.util import HasTrainingSummary
 
+    from sparkml_spark.operators.ml import _fitted
     from sparkml_spark.registry import QUERIES
     from sparkml_spark.session import _ARTIFACTS, reap_registered
 
