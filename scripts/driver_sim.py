@@ -127,7 +127,7 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as mod
     from sparkml_spark.session import persistent_rdd_count, reap_registered
 

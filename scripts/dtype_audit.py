@@ -13,6 +13,7 @@ Usage: python scripts/dtype_audit.py [--sf-dir /root/testdata/sf0.001] [names...
 from __future__ import annotations
 
 import argparse
+import os
 import sys
 
 import duckdb
@@ -44,7 +45,7 @@ def main() -> int:
     ap.add_argument("names", nargs="*")
     args = ap.parse_args()
 
-    sys.path.insert(0, "/root/repo")
+    sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
     import __spark_entry__ as mod
 
     spark = (

@@ -4,10 +4,12 @@ the judge's line-by-line checklist."""
 
 from __future__ import annotations
 
+import os
 import sys
 from collections import defaultdict
 
-sys.path.insert(0, "/root/repo")
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
+sys.path.insert(0, ROOT)
 
 import sparkml_spark.operators  # noqa: F401
 from sparkml_spark.registry import META, ORACLES, QUERIES
@@ -70,7 +72,7 @@ def main() -> None:
         for name in sorted(by_section[sec]):
             lines.append(f"| `{name}` | {META[name]['tier']} |")
         lines.append("")
-    with open("/root/repo/COVERAGE.md", "w") as f:
+    with open(os.path.join(ROOT, "COVERAGE.md"), "w") as f:
         f.write("\n".join(lines))
     print(f"wrote COVERAGE.md: {len(QUERIES)} queries, {len(ORACLES)} oracle")
 

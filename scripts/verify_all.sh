@@ -6,8 +6,9 @@
 # under a hard timeout so a hang can't block the one-shot forever.
 #
 # Usage: bash scripts/verify_all.sh [--quick]
-#   --quick: fit-memo pair, ALS, reaper and timing tests + sf0.01 sim +
-#            bench only (skips the rest of pytest and the other scales)
+#   --quick: fit-memo pair, ALS, reaper, timing, case-mapping and
+#            weight-sum plan tests + sf0.01 sim + bench only (skips the
+#            rest of pytest and the other scales)
 set -u
 cd "$(dirname "$0")/.."
 
@@ -69,6 +70,13 @@ else
   # bench.py (static), and its timed runs execute every stage of an
   # already-collected frame (sf0.001).
   run "fresh-plan timing" timeout 600 python -m pytest tests/test_measure.py \
+    -q -x -p no:cacheprovider
+  # String and weight-sum layers: case mapping runs without ICU and
+  # agrees with it, the fixtures are ASCII, and DSIR's and NB's
+  # per-token weight sums add longs in the executed plan (sf0.001).
+  run "case mapping + long sums" timeout 600 python -m pytest \
+    tests/test_case_mapping.py \
+    tests/test_plans.py::test_broadcast_weight_sums_are_long \
     -q -x -p no:cacheprovider
 fi
 run "sim sf0.01" timeout 1800 python scripts/driver_sim.py

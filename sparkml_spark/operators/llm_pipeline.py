@@ -14,7 +14,7 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sparkml_spark.registry import ZERO_VIOLATIONS, md5_chunk16, query
+from sparkml_spark.registry import ZERO_VIOLATIONS, md5_chunk16, nano, nano_sum, query
 from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
 
@@ -1947,10 +1947,13 @@ def pipeline_dsir_select(spark, sf_dir):
     Float parity: the ln argument is assembled as one
     (exact-int-product as double) division — each product stays under
     2^53 at fixture scales, so both engines hand ln the identical
-    double; each per-token weight is then quantized at 9dp and
-    decimal-summed (order-independent), the family pattern from
-    text_tfidf_sql. At 100 TB the counts would be pre-scaled before
-    the product (documented, same contract as lsum's overflow note).
+    double; each bucket weight is then quantized at 9dp and carried
+    as an exact int64 count of 1e-9 units (`nano`, once per bucket
+    row), so the per-token sum is a long sum (`nano_sum`): exact,
+    order-independent, and equal to the oracle's decimal(30,9) sum.
+    Overflow: |lw9| <~ 3e10, so a document may hold about 3e8
+    tokens. At 100 TB the counts would be pre-scaled before the
+    product (documented, same contract as lsum's overflow note).
 
     Scale: the corpus is tokenized ONCE (the genuinely heavy map); the
     bucket-weight table is B=1024 rows — broadcast onto the token
@@ -1989,22 +1992,22 @@ def pipeline_dsir_select(spark, sf_dir):
     nr = F.sum("cr").over(w_tot)
     w = g.select(
         "b",
-        F.round(
-            F.log(
-                ((F.col("ct") + 1).cast("double") * (nr + _DSIR_B).cast("double"))
-                / ((nt + _DSIR_B).cast("double") * (F.col("cr") + 1).cast("double"))
-            ),
-            9,
-        ).alias("lw"),
+        nano(
+            F.round(
+                F.log(
+                    ((F.col("ct") + 1).cast("double") * (nr + _DSIR_B).cast("double"))
+                    / ((nt + _DSIR_B).cast("double") * (F.col("cr") + 1).cast("double"))
+                ),
+                9,
+            )
+        ).alias("lw9"),
     )
     scored = (
         bt.join(F.broadcast(w), "b")
         .groupBy("doc_id")
         .agg(
             F.count(F.lit(1)).cast("long").alias("n_tokens"),
-            F.round(
-                F.sum(F.col("lw").cast("decimal(30,9)")).cast("double"), 6
-            ).alias("dsir_score"),
+            F.round(nano_sum("lw9").cast("double"), 6).alias("dsir_score"),
         )
     )
     return scored.orderBy(

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sparkml_spark.registry import ZERO_VIOLATIONS, query
+from sparkml_spark.registry import ZERO_VIOLATIONS, nano, nano_sum, query
 from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
 
@@ -430,11 +430,20 @@ def ml_classify_trees(spark, sf_dir):
 @query("ml_classify_linear", section="2.J")
 def ml_classify_linear(spark, sf_dir):
     """LinearSVC wrapped in OneVsRest for the 10-class problem, plus
-    multinomial NaiveBayes (gaussian — embeddings have negatives)."""
+    multinomial NaiveBayes (gaussian — embeddings have negatives).
+    OneVsRest fits its per-class models on every core at once
+    (`parallelism` = the session's default parallelism); each
+    per-class fit is the same, so predictions do not depend on it."""
     from pyspark.ml.classification import LinearSVC, NaiveBayes, OneVsRest
 
     train, test = _train_test(_features(spark, sf_dir))
-    ovr = _shared_fit(OneVsRest(classifier=LinearSVC(maxIter=15, regParam=0.05)), train)
+    ovr = _shared_fit(
+        OneVsRest(
+            classifier=LinearSVC(maxIter=15, regParam=0.05),
+            parallelism=spark.sparkContext.defaultParallelism,
+        ),
+        train,
+    )
     nb = _shared_fit(NaiveBayes(modelType="gaussian"), train)
     a = ovr.transform(test).select(
         F.col("vec_id"), F.col("prediction").alias("svc_pred")
@@ -1330,7 +1339,13 @@ def ml_mlp_linear_fit_bound(spark, sf_dir):
     mlp = _shared_fit(
         MultilayerPerceptronClassifier(layers=[64, 32, 10], seed=SEED, maxIter=40), train
     )
-    ovr = _shared_fit(OneVsRest(classifier=LinearSVC(maxIter=15, regParam=0.05)), train)
+    ovr = _shared_fit(
+        OneVsRest(
+            classifier=LinearSVC(maxIter=15, regParam=0.05),
+            parallelism=spark.sparkContext.defaultParallelism,
+        ),
+        train,
+    )
     nb = _shared_fit(NaiveBayes(modelType="gaussian"), train)
     bin_train = train.withColumn("label", (F.col("label") < 5).cast("double"))
     fmc = _shared_fit(
@@ -2621,7 +2636,10 @@ def ml_naive_bayes_exact(spark, sf_dir):
     'the engine learns its own artifacts' contract, for classifiers:
     Laplace-smoothed per-(class, token) log-likelihoods from one
     corpus pass, log-priors from document counts, per-doc class
-    scores as 9dp-quantized decimal sums (order-independent), argmax
+    scores as exact int64 sums of 9dp-quantized weights (`nano` once
+    per weight row, `nano_sum` per doc and class: order-independent
+    and equal to the oracle's decimal sum; |lw9| <~ 3e10 bounds a
+    document at about 3e8 tokens before the long overflows), argmax
     with the deterministic smaller-class tie-break, reported as the
     training-set confusion matrix. MLlib's NaiveBayes is ROWS-tier
     (float accumulation); THIS is the exact twin its fit must
@@ -2658,23 +2676,21 @@ def ml_naive_bayes_exact(spark, sf_dir):
         .select(
             "c",
             "tok",
-            F.round(
-                F.log(
-                    (F.col("n") + 1).cast("double")
-                    / (F.col("nt").cast("double") + F.col("v"))
-                ),
-                9,
-            ).alias("lw"),
+            nano(
+                F.round(
+                    F.log(
+                        (F.col("n") + 1).cast("double")
+                        / (F.col("nt").cast("double") + F.col("v"))
+                    ),
+                    9,
+                )
+            ).alias("lw9"),
         )
     )
     scored = (
         toks.join(F.broadcast(weights), "tok")
         .groupBy("doc_id", "lang", "c")
-        .agg(
-            F.sum(F.col("lw").cast("decimal(30,9)"))
-            .cast("decimal(38,9)")
-            .alias("ll")
-        )
+        .agg(nano_sum("lw9").alias("ll"))
     )
     with_prior = (
         scored.join(F.broadcast(priors), "c")

@@ -17,6 +17,7 @@ Parity rules baked into helpers here (SURVEY.md §7.4):
 from __future__ import annotations
 
 from collections.abc import Callable
+from decimal import Decimal
 from typing import Dict
 
 from pyspark.sql import Column, DataFrame, SparkSession
@@ -142,6 +143,42 @@ def lsum_sql(expr: str) -> str:
     return (
         f"(CAST(SUM(CAST(floor({expr}) AS BIGINT)) AS DOUBLE) + "
         f"CAST(SUM(CAST(round((({expr}) - floor({expr})) * 1e6) AS BIGINT)) AS DOUBLE) / 1e6)"
+    )
+
+
+def nano(col: Column | str) -> Column:
+    """Exact int64 count of 1e-9 units of a value on the 9dp grid.
+
+    The value goes through the same `decimal(30,9)` cast a decimal sum
+    of it would apply, so `nano_sum(nano(v))` equals
+    `sum(v.cast("decimal(30,9)"))` digit for digit. Apply it once per
+    row of the SMALL side of a broadcast (a weight table), never per
+    row of the stream it is joined onto: the decimal multiply here is
+    the BigDecimal work that `nano_sum` keeps out of the hot loop.
+
+    Overflow: |v| * 1e9 must fit in a long, i.e. |v| < ~9.2e9; a log
+    weight (|v| <~ 30, 3e10 nano-units) is far inside that."""
+    c = F.col(col) if isinstance(col, str) else col
+    return (c.cast("decimal(30,9)") * 10**9).cast("long")
+
+
+def nano_sum(col: Column | str) -> Column:
+    """Exact sum of `nano` units, as the `decimal(38,9)` that the
+    decimal sum of the 9dp values gives (same value, same type).
+
+    Exactness: long addition is exact and order-independent, so the
+    partial aggregates stay primitive long adds; the rescale to 1e-9
+    units is one exact decimal multiply per GROUP, not per row.
+    (Dividing a `decimal(38,0)` by 1e9 instead types at scale 6 and
+    rounds.)
+
+    Overflow: the long sum must stay below 2^63 ~ 9.2e18. At the
+    log-weight magnitude of its callers (|nano| <~ 3e10) that is about
+    3e8 rows per group; beyond it use a decimal sum (`dsum`'s
+    accumulator, 1e21 ceiling)."""
+    c = F.col(col) if isinstance(col, str) else col
+    return (F.sum(c).cast("decimal(19,0)") * F.lit(Decimal("1E-9"))).cast(
+        "decimal(38,9)"
     )
 
 

@@ -43,6 +43,17 @@ PERF_SQL_CONFS: dict[str, str] = {
     "spark.sql.shuffle.partitions": os.environ.get("SPARK_GRAFT_SHUFFLE", "32"),
     # Arrow for the pandas-UDF escape hatches and toPandas.
     "spark.sql.execution.arrow.pyspark.enabled": "true",
+    # Case-map non-ASCII strings in the JVM, not through ICU. The first
+    # lower() in a JVM loads ICU's case data: a count(lower(text)) stage
+    # at sf0.001 took 1.68-1.94 s with ICU and 0.06-0.09 s without
+    # (4 cores, fresh JVM).
+    # Without ICU, UTF8String keeps its ASCII fast path and maps other
+    # strings with String.toLowerCase()/toUpperCase() in the JVM's
+    # default locale (UTF8String.toLowerCaseSlow, read with javap). Every
+    # string column of the fixtures is pure ASCII, and lower/upper agree
+    # on both paths for non-ASCII too; initcap does not, and no query
+    # applies it (tests/test_case_mapping.py).
+    "spark.sql.icu.caseMappings.enabled": "false",
 }
 
 

@@ -3,8 +3,11 @@
 from __future__ import annotations
 
 import inspect
+import os
 
 import __spark_entry__ as entrymod
+
+ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 
 
 def test_oracle_keys_subset_of_queries():
@@ -202,7 +205,7 @@ def test_sim_canon_mirrors_driver_array_failure():
     import pandas as pd
     import pytest
 
-    sys.path.insert(0, "/root/repo/scripts")
+    sys.path.insert(0, os.path.join(ROOT, "scripts"))
     from driver_sim import canon
 
     ok = canon(pd.DataFrame({"b": [2, 1], "a": ["y", "x"]}))
@@ -316,7 +319,7 @@ def test_survey_registry_bijection():
     import sparkml_spark.operators  # noqa: F401
     from sparkml_spark.registry import QUERIES
 
-    survey = open("/root/repo/SURVEY.md").read()
+    survey = open(os.path.join(ROOT, "SURVEY.md")).read()
     undocumented = sorted(n for n in QUERIES if n not in survey)
     assert not undocumented, (
         f"{len(undocumented)} registered ids missing from SURVEY.md "

@@ -1316,3 +1316,40 @@ def test_partsupp_family_plan_shapes(spark):
     # the (suppkey, partkey) shipped aggregate is the one corpus-sized
     # shuffle; everything downstream broadcasts
     assert shuffle_count(q20) <= 2, plan
+
+
+def _partial_sum_input_types(df):
+    """Input types of every partial-mode Sum in `df`'s executed plan,
+    read after the frame has run so AQE's final stages are walked."""
+    df.collect()
+    types = []
+
+    def walk(node):
+        name = node.getClass().getSimpleName()
+        if name == "AdaptiveSparkPlanExec":
+            return walk(node.executedPlan())
+        if name.endswith("QueryStageExec"):
+            return walk(node.plan())
+        if name.endswith("AggregateExec"):
+            aggs = node.aggregateExpressions()
+            for i in range(aggs.size()):
+                a = aggs.apply(i)
+                fn = a.aggregateFunction()
+                if a.mode().toString() == "Partial" and fn.getClass().getSimpleName() == "Sum":
+                    types.append(fn.child().dataType().simpleString())
+        kids = node.children()
+        for i in range(kids.size()):
+            walk(kids.apply(i))
+
+    walk(df._jdf.queryExecution().executedPlan())
+    return types
+
+
+def test_broadcast_weight_sums_are_long(spark):
+    """pipeline_dsir_select and ml_naive_bayes_exact sum a 9dp weight
+    per token. The broadcast weight table carries it as int64 1e-9
+    units (registry.nano), so every map-side partial sum adds longs;
+    a decimal(30,9) per-token sum (BigDecimal per row) fails here."""
+    for qid in ("pipeline_dsir_select", "ml_naive_bayes_exact"):
+        types = _partial_sum_input_types(QUERIES[qid](spark, SF_DIR))
+        assert types and set(types) == {"bigint"}, (qid, types)
