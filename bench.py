@@ -22,14 +22,19 @@ Keep `spark.sql.shuffle.partitions` small at this scale (BASELINE
 used 8) — AQE coalesces anyway, but the initial number still costs
 task-launch overhead locally.
 
-Cross-round A/B control: after the main protocol, the previous
-round's committed code runs in a subprocess (temp git worktree at the
-commit that added the latest BENCH_r*.json) and the two versions'
-prepared plans execute INTERLEAVED query-by-query, each execution a
-fresh plan (`measure.execute`), so every stage of both versions runs.
-The `ab` field carries both series plus per-query head/prev ratios,
-which scripts/bench_gate.py gates at 1.25. Set SPARK_GRAFT_NO_AB=1 to
-skip (e.g. when benching a detached export without git history).
+A/B control: after the main protocol, HEAD's working tree and the
+commit this change sits on (a `git archive` export into a temp dir)
+each run in a worker subprocess with the same warm-up, and the two
+versions' prepared plans execute INTERLEAVED query-by-query, each
+execution a fresh plan (`measure.execute`), so every stage of both
+versions runs. That base is HEAD while the engine (`sparkml_spark/`,
+`__spark_entry__.py`) has uncommitted changes and HEAD^ once they are
+committed, so the ratio measures this change alone. The `ab` field
+carries both series plus per-query head/prev ratios, which
+scripts/bench_gate.py gates at 1.25. `ab.round` repeats the comparison
+against the commit that added the latest BENCH_r*.json, as a reported
+ratio with no gate. Set SPARK_GRAFT_NO_AB=1 to skip (e.g. when benching
+a detached export without git history).
 """
 
 from __future__ import annotations
@@ -38,12 +43,15 @@ import glob
 import json
 import os
 import re
+import shutil
 import subprocess
 import sys
+import tempfile
+from statistics import median
 
 sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-from scripts.measure import REPS, execute, timed, warm_runs
+from scripts.measure import timed, warm_runs
 from sparkml_spark.session import get_spark
 
 _HERE = os.path.dirname(os.path.abspath(__file__))
@@ -65,11 +73,26 @@ HEADLINE = {
 }
 
 
+def _git(*args: str) -> str:
+    return subprocess.run(
+        ["git", *args], cwd=_HERE, capture_output=True, text=True, timeout=120, check=True
+    ).stdout.strip()
+
+
+def _base_commit() -> tuple[str, str] | tuple[None, None]:
+    """(sha, ref) of the commit this change sits on: HEAD while engine
+    files have uncommitted changes, HEAD^ once they are committed."""
+    try:
+        dirty = _git("status", "--porcelain", "--", "sparkml_spark", "__spark_entry__.py")
+        ref = "HEAD" if dirty else "HEAD^"
+        return _git("rev-parse", "--verify", ref), ref
+    except (subprocess.SubprocessError, OSError):
+        return None, None
+
+
 def _prev_round_commit() -> tuple[str, str] | tuple[None, None]:
-    """(sha, round-label) of the previous round's end-of-round commit
-    = the commit that ADDED the highest-numbered BENCH_r*.json. That
-    commit is the driver's own round boundary, so the code there is
-    exactly what produced last round's committed numbers."""
+    """(sha, bench file) of the commit that ADDED the highest-numbered
+    BENCH_r*.json: the code that produced the latest committed round."""
     rounds = []
     for path in glob.glob(os.path.join(_HERE, "BENCH_r*.json")):
         m = re.search(r"BENCH_r(\d+)\.json$", path)
@@ -79,101 +102,117 @@ def _prev_round_commit() -> tuple[str, str] | tuple[None, None]:
         return None, None
     _, fname = max(rounds)
     try:
-        sha = subprocess.run(
-            ["git", "log", "--diff-filter=A", "--format=%H", "-n1", "--", fname],
-            cwd=_HERE,
-            capture_output=True,
-            text=True,
-            timeout=60,
-            check=True,
-        ).stdout.strip()
+        sha = _git("log", "--diff-filter=A", "--format=%H", "-n1", "--", fname)
     except (subprocess.SubprocessError, OSError):
         return None, None
     return (sha, fname) if sha else (None, None)
 
 
-def _ab_control(spark, dfs: dict) -> dict | None:
-    """Cross-round A/B control (VERDICT r9 #1): execute HEAD's prepared
-    plans and the PREVIOUS round's code interleaved query-by-query in
-    one wall-clock session, each execution a fresh plan timed by
-    `measure` on both sides, so machine-level drift
-    hits both series identically and the per-query head/prev ratio
-    isolates code regressions. Returns
-    {prev_commit, head: {q: s}, prev: {q: s}, ratio: {q: r}} or None
-    when no prior round / git history is available (round 1, export).
+class _Worker:
+    """scripts/bench_worker.py serving one checkout's headline plans in
+    its own SparkSession (see that file for the line protocol)."""
 
-    The prev side runs in a subprocess (its own SparkSession over a
-    temp `git worktree` at the prev commit); parent and worker
-    execute strictly alternately, never concurrently, so the two
-    JVMs don't contend for the 32 cores."""
-    sha, fname = _prev_round_commit()
-    if sha is None:
-        return None
-    wt = os.path.join("/tmp", f"bench_ab_{sha[:12]}")
-    worker = None
-    try:
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", wt],
-            cwd=_HERE, capture_output=True, timeout=60,
-        )
-        subprocess.run(
-            ["git", "worktree", "add", "--force", "--detach", wt, sha],
-            cwd=_HERE, capture_output=True, text=True, timeout=120, check=True,
-        )
-        worker = subprocess.Popen(
-            [sys.executable, os.path.join(_HERE, "scripts", "bench_worker.py"), wt],
+    def __init__(self, root: str) -> None:
+        self.proc = subprocess.Popen(
+            [sys.executable, os.path.join(_HERE, "scripts", "bench_worker.py"), root],
             stdin=subprocess.PIPE,
             stdout=subprocess.PIPE,
             text=True,
-            cwd="/tmp",
+            cwd=root,
         )
+        ready = self._read("READY")
+        self.names = json.loads(ready[len("READY "):])["queries"]
+
+    def _read(self, prefix: str) -> str:
         # the JVM occasionally writes banner lines to stdout — skip
         # anything that isn't ours until READY / TIME shows up
-        def _read(prefix: str) -> str:
-            while True:
-                line = worker.stdout.readline()
-                if not line:
-                    raise RuntimeError(f"worker died before {prefix}")
-                if line.startswith(prefix):
-                    return line.strip()
+        while True:
+            line = self.proc.stdout.readline()
+            if not line:
+                raise RuntimeError(f"worker died before {prefix}")
+            if line.startswith(prefix):
+                return line.strip()
 
-        ready = _read("READY")
-        prev_names = set(json.loads(ready[len("READY "):])["queries"])
+    def time(self, name: str) -> float:
+        self.proc.stdin.write(name + "\n")
+        self.proc.stdin.flush()
+        parts = self._read("TIME").split()
+        assert parts[1] == name, parts
+        return float(parts[2])
 
-        head_t: dict[str, float] = {}
-        prev_t: dict[str, float] = {}
-        for _rep in range(REPS):
-            for name, df in dfs.items():
-                _, secs = timed(lambda: execute(df))
-                head_t[name] = min(head_t.get(name, float("inf")), secs)
-                if name in prev_names:
-                    worker.stdin.write(name + "\n")
-                    worker.stdin.flush()
-                    parts = _read("TIME").split()
-                    assert parts[1] == name, parts
-                    prev_t[name] = min(prev_t.get(name, float("inf")), float(parts[2]))
-        worker.stdin.write("exit\n")
-        worker.stdin.flush()
-        worker.wait(timeout=120)
+    def close(self) -> None:
+        if self.proc.poll() is None:
+            try:
+                self.proc.stdin.write("exit\n")
+                self.proc.stdin.flush()
+                self.proc.wait(timeout=120)
+            except (OSError, subprocess.TimeoutExpired):
+                self.proc.kill()
+
+
+#: Worker pairs per A/B comparison, and timed reps per pair. One JVM can
+#: run a query 15-40% faster or slower than another for its whole life:
+#: on 4 cores, two workers on the same tree read per-pair best-time
+#: ratios of 0.83-1.42, while the median of the adjacent (head, prev)
+#: ratios of 4 pairs x 6 reps read 0.95-1.09.
+AB_FORKS, AB_REPS = 4, 5
+
+
+def _interleaved(sha: str) -> dict:
+    """HEAD's working tree against the code at `sha` (a `git archive`
+    export). Each of AB_FORKS rounds starts one worker per side, with
+    the same warm-up, and times the two alternately query by query,
+    AB_REPS times; which side runs first alternates by rep, and the
+    JVMs never execute concurrently. Machine-level drift hits both
+    times of a pair alike, so each pair's head/prev ratio isolates
+    code; `ratio` is their median per query, `head`/`prev` the median
+    seconds per side."""
+    root = tempfile.mkdtemp(prefix=f"bench_ab_{sha[:12]}_")
+    workers: list[_Worker] = []
+    try:
+        archive = subprocess.run(
+            ["git", "archive", sha], cwd=_HERE, capture_output=True, timeout=120, check=True
+        ).stdout
+        subprocess.run(["tar", "-x", "-C", root], input=archive, timeout=120, check=True)
+        pairs: dict[str, list[tuple[float, float]]] = {}
+        for _fork in range(AB_FORKS):
+            workers = [_Worker(_HERE), _Worker(root)]
+            names = [n for n in workers[0].names if n in workers[1].names]
+            for rep in range(AB_REPS):
+                for name in names:
+                    order = (0, 1) if rep % 2 == 0 else (1, 0)
+                    secs = {i: workers[i].time(name) for i in order}
+                    pairs.setdefault(name, []).append((secs[0], secs[1]))
+            for w in workers:
+                w.close()
         return {
-            "prev_commit": sha,
-            "prev_bench": fname,
-            "head": {q: round(s, 3) for q, s in head_t.items()},
-            "prev": {q: round(s, 3) for q, s in prev_t.items()},
-            "ratio": {
-                q: round(head_t[q] / prev_t[q], 3) for q in prev_t if prev_t[q] > 0
-            },
+            "head": {q: round(median(h for h, _ in p), 3) for q, p in pairs.items()},
+            "prev": {q: round(median(v for _, v in p), 3) for q, p in pairs.items()},
+            "ratio": {q: round(median(h / v for h, v in p), 3) for q, p in pairs.items()},
         }
+    finally:
+        for w in workers:
+            w.close()
+        shutil.rmtree(root, ignore_errors=True)
+
+
+def _ab_control() -> dict | None:
+    """A/B control: HEAD against the commit this change sits on
+    (`prev_*`, `head`, `prev`, `ratio`: gated by bench_gate.py) and
+    against the latest committed round (`round`: reported, no gate).
+    None when there is no git history (a detached export)."""
+    sha, ref = _base_commit()
+    if sha is None:
+        return None
+    try:
+        ab = {"prev_commit": sha, "prev_ref": ref, **_interleaved(sha)}
+        round_sha, fname = _prev_round_commit()
+        if round_sha is not None:
+            ab["round"] = {"commit": round_sha, "bench": fname, **_interleaved(round_sha)}
+        return ab
     except Exception as exc:  # noqa: BLE001 — A/B is evidence, not a gate here
         print(f"# ab_control unavailable: {exc}", file=sys.stderr)
         return None
-    finally:
-        if worker is not None and worker.poll() is None:
-            worker.kill()
-        subprocess.run(
-            ["git", "worktree", "remove", "--force", wt],
-            cwd=_HERE, capture_output=True, timeout=60,
-        )
 
 
 def main() -> int:
@@ -190,7 +229,6 @@ def main() -> int:
     times: dict[str, float] = {}
     times_e2e: dict[str, float] = {}
     times_plan: dict[str, float] = {}
-    dfs: dict = {}
     total = 0.0
     total_e2e = 0.0
     for bench_name, qid in HEADLINE.items():
@@ -209,7 +247,6 @@ def main() -> int:
         times[bench_name] = round(recollect, 3)
         times_e2e[bench_name] = round(e2e, 3)
         times_plan[bench_name] = round(plan_s, 3)
-        dfs[bench_name] = df
         total += recollect
         total_e2e += e2e
         print(
@@ -233,16 +270,18 @@ def main() -> int:
     # Print the record BEFORE the A/B phase, then again with `ab`
     # filled in: consumers take the LAST metric line, so they get the
     # richer record — but if an outer timeout kills the process
-    # mid-A/B (the phase costs an extra JVM + worktree), the headline
+    # mid-A/B (the phase costs an extra JVM + export), the headline
     # numbers are already on stdout and the round still has a bench
     # record.
     print(json.dumps(record), flush=True)
 
-    ab = None if os.environ.get("SPARK_GRAFT_NO_AB") else _ab_control(spark, dfs)
+    # the A/B sides run in their own sessions: free this one's memory
+    spark.stop()
+    ab = None if os.environ.get("SPARK_GRAFT_NO_AB") else _ab_control()
     if ab is not None:
         worst = max(ab["ratio"].values()) if ab["ratio"] else None
         print(
-            f"# ab_control vs {ab['prev_bench']} @ {ab['prev_commit'][:12]}: "
+            f"# ab_control vs {ab['prev_ref']} @ {ab['prev_commit'][:12]}: "
             f"worst head/prev ratio {worst}",
             file=sys.stderr,
         )

@@ -3,11 +3,15 @@ VERDICT r9 #1 into a structural A/B control).
 
 Runs bench.py once and passes its output through untouched. bench.py
 itself times fresh plans (scripts/measure.py, every stage runs) of HEAD
-and the PREVIOUS round's committed code (temp worktree at the commit
-that added the latest BENCH_r*.json) INTERLEAVED query-by-query in the
-same wall-clock session — the `ab` field of its JSON line. This gate
-fails when any query's head/prev ratio exceeds 1.25 AND the absolute
-delta exceeds 30 ms.
+and of the commit the change sits on (HEAD while the engine has
+uncommitted changes, HEAD^ once they are committed; a `git archive`
+export), each in its own worker JVMs, INTERLEAVED query-by-query in
+the same wall-clock session — the `ab` field of its JSON line, whose
+`ratio` is the median of adjacent head/prev pairs. This gate fails
+when any query's ratio exceeds 1.25 AND the median delta exceeds 30 ms, so
+it sees one change's regression instead of the sum of every change
+since the last committed round. The ratio against that round
+(`ab.round`) is printed, not gated.
 
 Why ratio, not absolute seconds: round 9's suite ran +53% over round
 8 purely on a machine-level shift, and the old 1.5x/+150 ms absolute
@@ -15,8 +19,7 @@ gate let a real-looking 2.8x move (q_regional_join5, +104 ms) pass
 unattributed under the same "environment band" narrative. Interleaved
 measurement makes the environment hit both series identically, so
 the ratio isolates code. The 30 ms delta floor only absorbs
-single-task scheduler jitter on ~50 ms queries (best-of-3 still
-occasionally eats one ~10 ms hiccup per side); it is 5x tighter than
+single-task scheduler jitter on ~50 ms queries; it is 5x tighter than
 the slack that masked the r9 move.
 
 Fallback: if the A/B control is unavailable (no git history, no
@@ -93,19 +96,22 @@ def main() -> int:
                     f"delta +{delta * 1000:.0f}ms)"
                 )
         missing = set(cur["queries"]) - set(ab["ratio"])
-        if failures:
+        base = f"{ab['prev_ref']} @ {ab['prev_commit'][:12]}"
+        rnd = ab.get("round")
+        if rnd and rnd.get("ratio"):
             print(
-                f"bench_gate: A/B REGRESSION vs "
-                f"{ab['prev_bench']} @ {ab['prev_commit'][:12]}:"
+                f"bench_gate: vs {rnd['bench']} @ {rnd['commit'][:12]} (not gated): "
+                f"worst head/prev ratio {max(rnd['ratio'].values()):.2f}"
             )
+        if failures:
+            print(f"bench_gate: A/B REGRESSION vs {base}:")
             for f_ in failures:
                 print(f"  {f_}")
             return 1
         worst = max(ab["ratio"].values())
         note = f" (new queries without a prev series: {sorted(missing)})" if missing else ""
         print(
-            f"bench_gate: A/B control vs {ab['prev_bench']} @ "
-            f"{ab['prev_commit'][:12]} — worst head/prev ratio "
+            f"bench_gate: A/B control vs {base} — worst head/prev ratio "
             f"{worst:.2f} <= {AB_RATIO_TOL}{note}"
         )
         return 0

@@ -1,17 +1,17 @@
-"""Bench worker for the cross-round A/B control (VERDICT r9 #1).
+"""Bench worker for the A/B control (VERDICT r9 #1).
 
 Runs the headline suite of ONE code version (the repo root passed as
-argv[1] — typically a temp worktree at the previous round's
-end-of-round commit) and serves per-query timings over a
-line protocol on stdin/stdout, so the parent (bench.py at HEAD) can
-interleave its own measurements with this worker's query-by-query in
-the same wall-clock session. Interleaving is what makes the
-comparison environment-controlled: any machine-level shift hits both
-series identically, so the HEAD/prev ratio isolates CODE regressions
-— the failure mode of round 9, where a +53% absolute move passed on
-an "environment band" narrative verified for only one query.
+argv[1]: the checkout itself, or a `git archive` export of the commit
+being compared) and serves per-query timings over a line protocol on
+stdin/stdout, so bench.py can interleave two workers query-by-query in
+the same wall-clock session. Interleaving is what makes the comparison
+environment-controlled: any machine-level shift hits both series
+identically, and both JVMs get the same warm-up, so the HEAD/prev
+ratio isolates CODE regressions — the failure mode of round 9, where a
++53% absolute move passed on an "environment band" narrative verified
+for only one query.
 
-The worker times the previous round's package with THIS checkout's
+The worker times its root's package with THIS checkout's
 scripts/measure.py, so both series follow one protocol: every
 execution is a fresh plan of the prepared DataFrame.
 
@@ -40,12 +40,12 @@ def main() -> int:
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     sys.path.insert(0, root)
 
-    from sparkml_spark.session import get_spark  # the WORKTREE's package
+    from sparkml_spark.session import get_spark  # the EXPORT's package
 
     import sparkml_spark.operators  # noqa: F401
     from sparkml_spark.registry import QUERIES
 
-    # the worktree's own headline map (names are stable across rounds)
+    # the export's own headline map (names are stable across rounds)
     spec = importlib.util.spec_from_file_location(
         "prev_bench", os.path.join(root, "bench.py")
     )

@@ -6,9 +6,10 @@
 # under a hard timeout so a hang can't block the one-shot forever.
 #
 # Usage: bash scripts/verify_all.sh [--quick]
-#   --quick: fit-memo pair, ALS, reaper, timing, case-mapping and
-#            weight-sum plan tests + sf0.01 sim + bench only (skips the
-#            rest of pytest and the other scales)
+#   --quick: fit-memo pair, ALS, reaper, timing, case-mapping,
+#            weight-sum plan, text-convention and artifact-scale tests
+#            + sf0.01 sim + bench only (skips the rest of pytest and the
+#            other scales)
 set -u
 cd "$(dirname "$0")/.."
 
@@ -78,6 +79,13 @@ else
     tests/test_case_mapping.py \
     tests/test_plans.py::test_broadcast_weight_sums_are_long \
     -q -x -p no:cacheprovider
+  # Text conventions: no module but registry.py spells the tokenizer or
+  # the content hash (static); artifacts written at two scales in one
+  # session never share a path (sf0.001 + sf0.01).
+  run "conventions + artifact scale" timeout 600 python -m pytest \
+    tests/test_conventions.py \
+    tests/test_operators.py::test_artifacts_are_keyed_by_scale \
+    -q -x -p no:cacheprovider
 fi
 run "sim sf0.01" timeout 1800 python scripts/driver_sim.py
 if [ $quick -eq 0 ]; then
@@ -107,10 +115,10 @@ fi
 # it is the cheapest large-scale canary in the suite (~25s).
 run "bpe fertility bound sf0.1" timeout 300 python scripts/driver_sim.py \
   --sf-dir /root/testdata/sf0.1 quality_bpe_fertility_bound
-# bench + cross-round A/B regression gate (VERDICT r9 #1): bench.py
-# times fresh plans of HEAD interleaved with the previous round's
-# committed code; the gate fails any query whose head/prev ratio
-# exceeds 1.25 (30ms delta floor).
+# bench + A/B regression gate (VERDICT r9 #1): bench.py times fresh
+# plans of HEAD interleaved with the commit the change sits on (HEAD
+# while the engine is uncommitted, else HEAD^); the gate fails any
+# query whose head/prev ratio exceeds 1.25 (30ms delta floor).
 run "bench" timeout 1500 python scripts/bench_gate.py
 
 finish

@@ -58,7 +58,9 @@ from sparkml_spark.operators.llm_pipeline import (
     pack_next_fit,
     token_budget_thresholds,
 )
-from sparkml_spark.registry import md5_chunk16, query
+from sparkml_spark.registry import (
+    NORM_HASH_SQL, TOKENS_SQL, md5_chunk16, norm_hash, query, tokens
+)
 from sparkml_spark.session import checkpoint
 from sparkml_spark.sources.loader import load_table
 
@@ -180,7 +182,7 @@ BPE_VOCAB_CTE = f"""
 rules(r, a, b) AS (VALUES {_RULES_VALUES}),
 bpe_words AS (
   SELECT word FROM (
-    SELECT DISTINCT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
+    SELECT DISTINCT unnest({TOKENS_SQL}) AS word
     FROM documents
   ) WHERE word <> ''
 ),
@@ -211,7 +213,7 @@ def bpe_vocab(docs):
     """(word, n_bpe, bpe) over the DISTINCT words of a (…, text) frame —
     the Spark twin of BPE_VOCAB_CTE. Vocabulary-sized output, meant to
     be broadcast back onto the corpus."""
-    w = F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
+    w = F.explode(tokens()).alias("word")
     toks = bpe_tokens(F.col("word"))
     return (
         docs.select(w)
@@ -237,7 +239,7 @@ def bpe_doc_token_counts(docs):
     shuffled and the fold never touches corpus-sized data."""
     words = docs.select(
         "doc_id",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word"),
+        F.explode(tokens()).alias("word"),
     )
     wc = words.groupBy("doc_id", "word").agg(F.count(F.lit(1)).alias("c"))
     vocab = bpe_vocab(docs).select("word", "n_bpe")
@@ -248,9 +250,9 @@ def bpe_doc_token_counts(docs):
     )
 
 
-_DOC_BPE_TOKS_SQL = """
+_DOC_BPE_TOKS_SQL = f"""
 doc_words AS (
-  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
+  SELECT doc_id, unnest({TOKENS_SQL}) AS word
   FROM documents
 ),
 doc_toks AS (
@@ -269,7 +271,7 @@ WITH RECURSIVE
 {BPE_VOCAB_CTE},
 freq AS (
   SELECT word, COUNT(*) AS n_occ
-  FROM (SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
+  FROM (SELECT unnest({TOKENS_SQL}) AS word
         FROM documents)
   GROUP BY word
 )
@@ -297,9 +299,7 @@ def pipeline_tokenize_bpe(spark, sf_dir):
     n_occ, which is a map-side-combinable groupBy."""
     d = load_table(spark, sf_dir, "documents")
     freq = (
-        d.select(
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
-        )
+        d.select(F.explode(tokens()).alias("word"))
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("n_occ"))
     )
@@ -418,7 +418,7 @@ def pipeline_pack_bins_bpe(spark, sf_dir):
 WITH RECURSIVE
 {BPE_VOCAB_CTE},
 words AS (
-  SELECT lang, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
+  SELECT lang, unnest({TOKENS_SQL}) AS word
   FROM documents
 ),
 wc AS (SELECT lang, word, COUNT(*) AS c FROM words GROUP BY lang, word)
@@ -454,7 +454,7 @@ def quality_bpe_fertility(spark, sf_dir):
     wc = (
         d.select(
             "lang",
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word"),
+            F.explode(tokens()).alias("word"),
         )
         .groupBy("lang", "word")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -511,7 +511,7 @@ CHAR_FALLBACK_CEIL_PPM = 320_000
 WITH RECURSIVE
 {BPE_VOCAB_CTE},
 words AS (
-  SELECT lang, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
+  SELECT lang, unnest({TOKENS_SQL}) AS word
   FROM documents
 ),
 wc AS (SELECT lang, word, COUNT(*) AS c FROM words GROUP BY lang, word),
@@ -554,7 +554,7 @@ def quality_bpe_fertility_bound(spark, sf_dir):
     wc = (
         d.select(
             "lang",
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word"),
+            F.explode(tokens()).alias("word"),
         )
         .groupBy("lang", "word")
         .agg(F.count(F.lit(1)).alias("c"))
@@ -593,7 +593,6 @@ def quality_bpe_fertility_bound(spark, sf_dir):
 
 
 def _training_corpus_full_oracle() -> str:
-    from sparkml_spark.operators.llm_text import _TOKENS_SQL
     from sparkml_spark.operators.llm_pipeline import (
         _BUCKET_SQL,
         _SEQ_TOKENS,
@@ -613,7 +612,7 @@ corpus AS (
 ),
 hashed AS (
   SELECT doc_id, text,
-         md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
+         {NORM_HASH_SQL} AS h
   FROM corpus
 ),
 deduped AS (
@@ -626,9 +625,9 @@ deduped AS (
 kept AS (
   SELECT doc_id FROM (
     SELECT doc_id,
-           len({_TOKENS_SQL}) AS n_ws,
-           CAST(len(list_distinct({_TOKENS_SQL})) AS DOUBLE)
-             / len({_TOKENS_SQL}) AS dr
+           len({TOKENS_SQL}) AS n_ws,
+           CAST(len(list_distinct({TOKENS_SQL})) AS DOUBLE)
+             / len({TOKENS_SQL}) AS dr
     FROM deduped
   ) WHERE n_ws BETWEEN 5 AND 1000 AND dr > 0.3
 ),
@@ -707,7 +706,7 @@ WITH RECURSIVE
 {BPE_VOCAB_CTE},
 dw AS (
   SELECT doc_id, i, t[i] AS word
-  FROM (SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+  FROM (SELECT doc_id, {TOKENS_SQL} AS t
         FROM documents),
        unnest(range(1, len(t) + 1)) AS u(i)
 ),
@@ -754,7 +753,7 @@ def pipeline_chunk_overlap_bpe(spark, sf_dir):
     token — see bpe_vocab), so such docs are filtered out, exactly
     matching the oracle where the vocab join eliminates them."""
     d = load_table(spark, sf_dir, "documents")
-    words = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    words = tokens()
     dw = d.select("doc_id", F.posexplode(words).alias("i", "word"))
     vocab = bpe_vocab(d).select("word", "bpe")
     with_toks = (
@@ -1056,14 +1055,14 @@ WITH RECURSIVE
 {_DOC_BPE_TOKS_SQL},
 feats AS (
   SELECT doc_id, lang, source, n_chars,
-         md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h,
-         len(string_split_regex(lower(trim(text)), '\\s+')) AS n,
+         {NORM_HASH_SQL} AS h,
+         len({TOKENS_SQL}) AS n,
          len(regexp_replace(lower(trim(text)), '\\s', '', 'g')) AS sum_len,
          len(translate(text, 'abcdefghijklmnopqrstuvwxyz0123456789 ', ''))
            AS n_punct,
-         len(list_distinct(string_split_regex(lower(trim(text)), '\\s+')))
+         len(list_distinct({TOKENS_SQL}))
            AS n_distinct,
-         len(list_intersect(string_split_regex(lower(trim(text)), '\\s+'),
+         len(list_intersect({TOKENS_SQL},
              ['the', 'a', 'data', 'value'])) AS n_stop
   FROM documents
 )
@@ -1098,7 +1097,7 @@ def pipeline_dataset_card(spark, sf_dir):
     aggregation (count_distinct(h) shuffles (group, h) pairs after
     map-side dedup). 25-row output regardless of corpus size."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     stop = F.array(*[F.lit(s) for s in ("the", "a", "data", "value")])
     n = F.size(toks)
     sum_len = F.length(
@@ -1118,7 +1117,7 @@ def pipeline_dataset_card(spark, sf_dir):
         "doc_id",
         "lang",
         "source",
-        F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("h"),
+        norm_hash().alias("h"),
         n.alias("n_ws"),
         keep.cast("int").alias("keep"),
     ).join(bpe_doc_token_counts(d), "doc_id", "left")
@@ -1168,11 +1167,7 @@ def train_bpe_merges(spark, sf_dir, n_merges: int = BPE_N, on_merge=None,
 
     d = corpus if corpus is not None else load_table(spark, sf_dir, "documents")
     words = chain.step(
-        d.select(
-            F.explode(
-                F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-            ).alias("word")
-        )
+        d.select(F.explode(tokens()).alias("word"))
         .filter(F.col("word") != "")
         .groupBy("word")
         .agg(F.count(F.lit(1)).alias("f"))
@@ -1247,7 +1242,7 @@ _DUCK_MERGE_FOLD = (
 _TRAIN_BPE_CTES = f"""
 w0 AS (
   SELECT word, CAST(COUNT(*) AS BIGINT) AS f
-  FROM (SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
+  FROM (SELECT unnest({TOKENS_SQL}) AS word
         FROM documents)
   WHERE word <> '' GROUP BY word
 ),
@@ -1338,8 +1333,7 @@ def pipeline_train_bpe(spark, sf_dir):
 # ---------------------------------------------------------------------------
 
 def _incremental_refresh_oracle() -> str:
-    from sparkml_spark.operators.llm_dedup import _INCR_SQL, _NORM_SQL
-    from sparkml_spark.operators.llm_text import _TOKENS_SQL
+    from sparkml_spark.operators.llm_dedup import _INCR_SQL
 
     return f"""
 WITH RECURSIVE
@@ -1347,8 +1341,8 @@ WITH RECURSIVE
 corpus AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 10 != 3
 ), incr AS ({_INCR_SQL}),
-ih AS (SELECT doc_id, text, {_NORM_SQL} AS h FROM incr),
-ci AS (SELECT DISTINCT {_NORM_SQL} AS h FROM corpus),
+ih AS (SELECT doc_id, text, {NORM_HASH_SQL} AS h FROM incr),
+ci AS (SELECT DISTINCT {NORM_HASH_SQL} AS h FROM corpus),
 new_docs AS (
   SELECT ih.doc_id, ih.text, ih.h
   FROM ih LEFT JOIN ci ON ci.h = ih.h WHERE ci.h IS NULL
@@ -1360,14 +1354,14 @@ kept0 AS (
 ),
 quality AS (
   SELECT doc_id, text FROM (
-    SELECT doc_id, text, len({_TOKENS_SQL}) AS n_ws,
-           CAST(len(list_distinct({_TOKENS_SQL})) AS DOUBLE)
-             / len({_TOKENS_SQL}) AS dr
+    SELECT doc_id, text, len({TOKENS_SQL}) AS n_ws,
+           CAST(len(list_distinct({TOKENS_SQL})) AS DOUBLE)
+             / len({TOKENS_SQL}) AS dr
     FROM kept0
   ) WHERE n_ws BETWEEN 5 AND 1000 AND dr > 0.3
 ),
 bw AS (
-  SELECT doc_id, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
+  SELECT doc_id, unnest({TOKENS_SQL}) AS word
   FROM quality
 ),
 btoks AS (
@@ -1459,13 +1453,11 @@ def refresh_manifest(d, lang_map):
     arriving micro-batch through refresh_manifest_incr — the exact
     decomposition below). See pipeline_incremental_refresh for
     semantics and scale posture."""
-    from sparkml_spark.operators.llm_dedup import _norm
-
     corpus = d.filter(F.col("doc_id") % 10 != 3)
     arriving = d.filter(F.col("doc_id") % 10 == 3)
     return refresh_manifest_incr(
         synth_incr_batch(arriving, corpus),
-        corpus.select(_norm().alias("h")),
+        corpus.select(norm_hash().alias("h")),
         lang_map,
     )
 
@@ -1511,9 +1503,9 @@ def refresh_manifest_incr(incr, corpus_digests, lang_map, ckpt=checkpoint):
     of once per consumer. Defaults to the lazy DISK_ONLY
     `session.checkpoint`; the streaming twin passes its
     CheckpointChain.step so every block is freed at chain.close()."""
-    from sparkml_spark.operators.llm_dedup import _DUP_OFFSET, _norm
+    from sparkml_spark.operators.llm_dedup import _DUP_OFFSET
 
-    ih = incr.select("doc_id", "text", _norm().alias("h"))
+    ih = incr.select("doc_id", "text", norm_hash().alias("h"))
     # Probe the standing index WITHOUT moving it: broadcast the batch's
     # distinct digests into the corpus scan; hit set is batch-bounded.
     batch_digests = ih.select("h").distinct()
@@ -1529,7 +1521,7 @@ def refresh_manifest_incr(incr, corpus_digests, lang_map, ckpt=checkpoint):
         .filter(F.col("doc_id") == F.col("keeper"))
         .select("doc_id", "text")
     )
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     quality = (
         kept0.select(
             "doc_id",
@@ -1600,7 +1592,7 @@ WITH RECURSIVE
 , rules_t AS (SELECT r, lhs AS a, rhs AS b FROM tr WHERE r >= 1),
 bpe_words_t AS (
   SELECT word FROM (
-    SELECT DISTINCT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
+    SELECT DISTINCT unnest({TOKENS_SQL}) AS word
     FROM documents
   ) WHERE word <> ''
 ),
@@ -1623,7 +1615,7 @@ vocab_t AS (
   FROM rec2 WHERE r = {BPE_N + 1}
 ),
 words_l AS (
-  SELECT lang, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS word
+  SELECT lang, unnest({TOKENS_SQL}) AS word
   FROM documents
 ),
 wc AS (
@@ -1658,7 +1650,7 @@ def pipeline_train_bpe_apply(spark, sf_dir):
     counts)."""
     merges = [(a, b) for (_, a, b, _) in train_bpe_merges(spark, sf_dir)]
     d = load_table(spark, sf_dir, "documents")
-    w = F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("word")
+    w = F.explode(tokens()).alias("word")
     vocab_t = (
         d.select(w)
         .distinct()

@@ -19,17 +19,14 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sparkml_spark.operators.llm_text import _gram_idx
-from sparkml_spark.registry import ZERO_VIOLATIONS, md5_chunk16, query
+from sparkml_spark.registry import (
+    NORM_HASH_SQL, TOKENS_SQL, ZERO_VIOLATIONS, gram_idx, md5_chunk16, norm_hash, query, tokens
+)
 from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
 
 #: Offset that turns a copied doc_id into a synthetic duplicate's id.
 _DUP_OFFSET = 1_000_000
-
-def _norm():
-    return F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
-_NORM_SQL = "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
 
 # Corpus-with-duplicates (every 10th doc copied under a new id).
 _CORPUS_SQL = f"""
@@ -55,9 +52,9 @@ def _corpus_with_dups(spark, sf_dir):
     oracle=f"""
 WITH corpus AS ({_CORPUS_SQL}),
 hashed AS (
-  SELECT doc_id, {_NORM_SQL} AS content_hash,
-         row_number() OVER (PARTITION BY {_NORM_SQL} ORDER BY doc_id ASC) AS rn,
-         COUNT(*) OVER (PARTITION BY {_NORM_SQL}) AS n_copies
+  SELECT doc_id, {NORM_HASH_SQL} AS content_hash,
+         row_number() OVER (PARTITION BY {NORM_HASH_SQL} ORDER BY doc_id ASC) AS rn,
+         COUNT(*) OVER (PARTITION BY {NORM_HASH_SQL}) AS n_copies
   FROM corpus
 )
 SELECT doc_id, content_hash, n_copies FROM hashed WHERE rn = 1
@@ -76,7 +73,7 @@ def dedup_exact_hash(spark, sf_dir):
     a hot document into ONE task — the same hot-key window shape
     VERDICT r7 flagged on dedup_exact_substring, removed family-wide
     in r8. Output is bit-identical (the oracle is unchanged)."""
-    corpus = _corpus_with_dups(spark, sf_dir).withColumn("content_hash", _norm())
+    corpus = _corpus_with_dups(spark, sf_dir).withColumn("content_hash", norm_hash())
     return (
         corpus.groupBy("content_hash")
         .agg(F.min("doc_id").alias("doc_id"), F.count(F.lit(1)).alias("n_copies"))
@@ -89,26 +86,18 @@ def dedup_exact_hash(spark, sf_dir):
 # SQL-exact semantics pin for MinHash). Near-dups are manufactured by
 # dropping the last 3 tokens of every 10th doc — high but <1 overlap.
 # ---------------------------------------------------------------------------
-_TOKS = "string_split_regex(lower(trim(text)), '\\s+')"
 _VARIANT_SQL = f"""
   SELECT doc_id, text FROM documents
   UNION ALL
   SELECT doc_id + {_DUP_OFFSET} AS doc_id,
-         array_to_string({_TOKS}[1:len({_TOKS}) - 3], ' ') AS text
+         array_to_string({TOKENS_SQL}[1:len({TOKENS_SQL}) - 3], ' ') AS text
   FROM documents WHERE doc_id % 10 = 0
 """
 
 
-def _gram4_idx(toks):
-    """Shingle start positions for the jaccard pipeline (named for the
-    n=4 bound it pins): the oracle's `range(1, len - 2)` —
-    end-EXCLUSIVE, so 1..size-3 (one fewer than the textbook trigram
-    1..size-2; both engines agree, hash-green since r2, so the bound
-    is a semantics pin, not a bug). That bound equals `_gram_idx`'s
-    n=4 upper, so delegate there: ONE short-doc guard for every gram
-    site (ADVICE r5 — two copies can drift)."""
-    return _gram_idx(toks, 4)
-
+#: DuckDB twin of `_shingled3`'s shingle array.
+_SHINGLE_ARRAY_SQL = f"""list_distinct(list_transform(range(1, len({TOKENS_SQL}) - 2),
+             i -> {TOKENS_SQL}[i] || ' ' || {TOKENS_SQL}[i+1] || ' ' || {TOKENS_SQL}[i+2]))"""
 
 def _shingled3(corpus):
     """corpus(doc_id, text) → (doc_id, shingles): the family's distinct
@@ -123,7 +112,9 @@ def _shingled3(corpus):
     tk = F.col("__toks")
     sh = F.array_distinct(
         F.transform(
-            _gram4_idx(tk),
+            # the oracle's range(1, len - 2) is end-exclusive: 1..size-3,
+            # one fewer than the textbook trigram's 1..size-2 (a pin)
+            gram_idx(tk, 4),
             lambda i: F.concat_ws(
                 " ",
                 F.element_at(tk, i),
@@ -133,7 +124,7 @@ def _shingled3(corpus):
         )
     )
     return corpus.select(
-        "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("__toks")
+        "doc_id", tokens().alias("__toks")
     ).select("doc_id", sh.alias("shingles"))
 
 
@@ -157,7 +148,7 @@ def _shingled3_exploded(corpus):
 
 def _corpus_with_near_dups(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     variant = (
         d.filter(F.col("doc_id") % 10 == 0)
         .select(
@@ -175,8 +166,7 @@ def _corpus_with_near_dups(spark, sf_dir):
 WITH corpus AS ({_VARIANT_SQL}),
 shingled AS (
   SELECT doc_id,
-         list_distinct(list_transform(range(1, len({_TOKS}) - 2),
-             i -> {_TOKS}[i] || ' ' || {_TOKS}[i+1] || ' ' || {_TOKS}[i+2])) AS shingles
+         {_SHINGLE_ARRAY_SQL} AS shingles
   FROM corpus
 ), exploded AS (
   SELECT doc_id, unnest(shingles) AS shingle FROM shingled
@@ -403,7 +393,7 @@ _SH_HAMMING_SQL = " + ".join(f"bit_count(xor(a{j}, b{j}))" for j in range(4))
     oracle=f"""
 WITH corpus AS ({_VARIANT_SQL}),
 tok AS (
-  SELECT doc_id, unnest(list_distinct({_TOKS})) AS token FROM corpus
+  SELECT doc_id, unnest(list_distinct({TOKENS_SQL})) AS token FROM corpus
 ), h AS (
   SELECT doc_id,
     ('0x' || substr(md5(token), 1, 4))::BIGINT AS c0,
@@ -466,7 +456,7 @@ def dedup_simhash(spark, sf_dir):
     tri-scale at up to 1.55M pairs / 11 s at sf0.1) — on real corpora
     signature entropy, not banding, is what keeps output sparse."""
     corpus = _corpus_with_near_dups(spark, sf_dir)
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     tok = corpus.select("doc_id", F.explode(F.array_distinct(toks)).alias("token"))
     tok = tok.select(
         "doc_id",
@@ -696,8 +686,7 @@ def dedup_embedding_cosine(spark, sf_dir):
 _K_HASHES = 8  # 4 bands × 2 rows
 _SHINGLES_SQL = f"""
   SELECT doc_id,
-         unnest(list_distinct(list_transform(range(1, len({_TOKS}) - 2),
-             i -> {_TOKS}[i] || ' ' || {_TOKS}[i+1] || ' ' || {_TOKS}[i+2]))) AS shingle
+         unnest({_SHINGLE_ARRAY_SQL}) AS shingle
   FROM corpus
 """
 
@@ -979,7 +968,7 @@ def dedup_edit_distance(spark, sf_dir):
 WITH corpus AS ({_CORPUS_SQL}),
 hashed AS (
   SELECT doc_id, len(text) AS n_chars,
-         md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
+         {NORM_HASH_SQL} AS h
   FROM corpus
 ), ranked AS (
   SELECT doc_id, n_chars, h,
@@ -1007,7 +996,7 @@ def dedup_keeper_selection(spark, sf_dir):
     window-based oracle unchanged). The keeper policy stays a swap:
     order by quality score instead by changing the struct fields."""
     corpus = _corpus_with_dups(spark, sf_dir)
-    h = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
+    h = norm_hash()
     hashed = corpus.select(
         "doc_id", F.length("text").alias("n_chars"), h.alias("h")
     )
@@ -1353,13 +1342,13 @@ def exact_substring_spans(corpus):
     grams = (
         corpus.select(
             "doc_id",
-            F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("__toks"),
+            tokens().alias("__toks"),
         )
         .select(
             "doc_id",
             F.explode(
                 F.transform(
-                    _gram_idx(tk, _ES_K),
+                    gram_idx(tk, _ES_K),
                     lambda i: F.struct(i.alias("pos"), F.md5(gram(i)).alias("gkey")),
                 )
             ).alias("pg"),
@@ -1399,7 +1388,7 @@ WITH corpus AS (
   FROM documents
 ), grams AS (
   SELECT doc_id, i AS pos, md5({_ES_GRAM_SQL}) AS gkey
-  FROM (SELECT doc_id, {_TOKS} AS t FROM corpus),
+  FROM (SELECT doc_id, {TOKENS_SQL} AS t FROM corpus),
        unnest(range(1, len(t) - {_ES_K} + 2)) AS u(i)
 ), rep AS (
   SELECT doc_id, pos
@@ -1494,7 +1483,7 @@ _ES_CORPUS_SQL = f"""
     section="2.I",
     oracle=f"""
 WITH corpus AS ({_ES_CORPUS_SQL}),
-toks AS (SELECT doc_id, {_TOKS} AS t FROM corpus),
+toks AS (SELECT doc_id, {TOKENS_SQL} AS t FROM corpus),
 grams AS (
   SELECT doc_id, i AS pos, md5({_ES_GRAM_SQL}) AS gkey
   FROM toks, unnest(range(1, len(t) - {_ES_K} + 2)) AS u(i)
@@ -1565,7 +1554,7 @@ def dedup_exact_substring_apply(spark, sf_dir):
         .otherwise(F.col("text"))
         .alias("text"),
     )
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     spans = exact_substring_spans(corpus)
     # covered feeds two consumers (the anti-join and the n_removed
     # count); without materialization each re-ran the islands window +
@@ -1630,10 +1619,10 @@ WITH corpus AS (
   SELECT doc_id, text FROM documents WHERE doc_id % 10 != 3
 ), incr AS ({_INCR_SQL}),
 corpus_index AS (
-  SELECT {_NORM_SQL} AS h, MIN(doc_id) AS corpus_keeper
+  SELECT {NORM_HASH_SQL} AS h, MIN(doc_id) AS corpus_keeper
   FROM corpus GROUP BY 1
 ), incr_hashed AS (
-  SELECT doc_id, {_NORM_SQL} AS h FROM incr
+  SELECT doc_id, {NORM_HASH_SQL} AS h FROM incr
 ), vs_corpus AS (
   SELECT i.doc_id, i.h, ci.corpus_keeper
   FROM incr_hashed i LEFT JOIN corpus_index ci ON ci.h = i.h
@@ -1688,11 +1677,11 @@ def dedup_incremental(spark, sf_dir):
         )
     )
     corpus_index = (
-        corpus.select(_norm().alias("h"), "doc_id")
+        corpus.select(norm_hash().alias("h"), "doc_id")
         .groupBy("h")
         .agg(F.min("doc_id").alias("corpus_keeper"))
     )
-    incr_hashed = incr.select("doc_id", _norm().alias("h"))
+    incr_hashed = incr.select("doc_id", norm_hash().alias("h"))
     vs_corpus = incr_hashed.join(corpus_index, "h", "left")
     batch_keeper = (
         vs_corpus.filter(F.col("corpus_keeper").isNull())
@@ -1724,8 +1713,8 @@ _FRAG_SQL = f"""
   SELECT doc_id, text FROM documents
   UNION ALL
   SELECT doc_id + {_DUP_OFFSET} AS doc_id,
-         array_to_string({_TOKS}[1:{_FRAG_LEN}], ' ') AS text
-  FROM documents WHERE doc_id % 25 = 0 AND len({_TOKS}) >= 32
+         array_to_string({TOKENS_SQL}[1:{_FRAG_LEN}], ' ') AS text
+  FROM documents WHERE doc_id % 25 = 0 AND len({TOKENS_SQL}) >= 32
 """
 
 
@@ -1736,8 +1725,7 @@ _FRAG_SQL = f"""
 WITH corpus AS ({_FRAG_SQL}),
 shingled AS (
   SELECT doc_id,
-         list_distinct(list_transform(range(1, len({_TOKS}) - 2),
-             i -> {_TOKS}[i] || ' ' || {_TOKS}[i+1] || ' ' || {_TOKS}[i+2])) AS shingles
+         {_SHINGLE_ARRAY_SQL} AS shingles
   FROM corpus
 ), exploded AS (
   SELECT doc_id, unnest(shingles) AS shingle FROM shingled
@@ -1789,7 +1777,7 @@ def dedup_containment(spark, sf_dir):
     and an eval set: make side A the eval shingles (tiny, broadcast)
     and the same plan prunes to one scan of the corpus."""
     corpus = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     frags = (
         corpus.filter((F.col("doc_id") % 25 == 0) & (F.size(toks) >= 32))
         .select(
@@ -1872,11 +1860,11 @@ _INCR_NEAR_SQL = f"""
   SELECT doc_id, text FROM documents WHERE doc_id % 10 = 3
   UNION ALL
   SELECT doc_id + {_DUP_OFFSET} AS doc_id,
-         array_to_string({_TOKS}[1:len({_TOKS}) - 3], ' ') AS text
+         array_to_string({TOKENS_SQL}[1:len({TOKENS_SQL}) - 3], ' ') AS text
   FROM documents WHERE doc_id % 10 != 3 AND doc_id % 20 = 0
   UNION ALL
   SELECT doc_id + {2 * _DUP_OFFSET} AS doc_id,
-         array_to_string({_TOKS}[1:len({_TOKS}) - 3], ' ') AS text
+         array_to_string({TOKENS_SQL}[1:len({TOKENS_SQL}) - 3], ' ') AS text
   FROM documents WHERE doc_id % 50 = 3
 """
 
@@ -1935,14 +1923,12 @@ WITH corpus AS (
 ), incr AS ({_INCR_NEAR_SQL}),
 c_shingled AS (
   SELECT doc_id,
-         unnest(list_distinct(list_transform(range(1, len({_TOKS}) - 2),
-             i -> {_TOKS}[i] || ' ' || {_TOKS}[i+1] || ' ' || {_TOKS}[i+2]))) AS shingle
+         unnest({_SHINGLE_ARRAY_SQL}) AS shingle
   FROM corpus
 ),
 i_shingled AS (
   SELECT doc_id,
-         unnest(list_distinct(list_transform(range(1, len({_TOKS}) - 2),
-             i -> {_TOKS}[i] || ' ' || {_TOKS}[i+1] || ' ' || {_TOKS}[i+2]))) AS shingle
+         unnest({_SHINGLE_ARRAY_SQL}) AS shingle
   FROM incr
 ),
 c_sig AS ({_MINHASH_SIG_SQL.format(src="c_shingled", k=_K_HASHES)}),
@@ -2011,7 +1997,7 @@ def dedup_incremental_minhash(spark, sf_dir):
     signature-verify joins are candidate-pair-sized. The within-batch
     side is batch² only through band collisions."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     trunc = F.array_join(F.slice(toks, 1, F.size(toks) - 3), " ")
     corpus = d.filter(F.col("doc_id") % 10 != 3)
     incr = (
@@ -2264,7 +2250,7 @@ _CASCADE_CORPUS_SQL = f"""
   FROM documents WHERE doc_id % 10 = 0
   UNION ALL
   SELECT doc_id + {2 * _DUP_OFFSET} AS doc_id,
-         array_to_string({_TOKS}[1:len({_TOKS}) - 3], ' ') AS text
+         array_to_string({TOKENS_SQL}[1:len({TOKENS_SQL}) - 3], ' ') AS text
   FROM documents WHERE doc_id % 10 = 5
 """
 
@@ -2275,7 +2261,7 @@ _CASCADE_CORPUS_SQL = f"""
     oracle=f"""
 WITH corpus AS ({_CASCADE_CORPUS_SQL}),
 hashed AS (
-  SELECT doc_id, {_NORM_SQL} AS h FROM corpus
+  SELECT doc_id, {NORM_HASH_SQL} AS h FROM corpus
 ), grp AS (
   SELECT h, MIN(doc_id) AS canon FROM hashed GROUP BY h
 ), ex AS (
@@ -2285,8 +2271,7 @@ hashed AS (
   WHERE ex.canon = c.doc_id
 ), shingled AS (
   SELECT doc_id,
-         list_distinct(list_transform(range(1, len({_TOKS}) - 2),
-             i -> {_TOKS}[i] || ' ' || {_TOKS}[i+1] || ' ' || {_TOKS}[i+2])) AS sh
+         {_SHINGLE_ARRAY_SQL} AS sh
   FROM survivors
 ), exploded AS (
   SELECT doc_id, unnest(sh) AS shingle FROM shingled
@@ -2343,7 +2328,7 @@ def dedup_cascade_keep(spark, sf_dir):
     anti join); the composition adds only user-keyed equi joins —
     cascade cost = sum of stage costs, no cross-stage blow-up."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "text")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     corpus = cache(
         d.unionByName(
             d.filter(F.col("doc_id") % 10 == 0).select(
@@ -2356,7 +2341,7 @@ def dedup_cascade_keep(spark, sf_dir):
             )
         )
     )
-    hashed = corpus.select("doc_id", _norm().alias("h"))
+    hashed = corpus.select("doc_id", norm_hash().alias("h"))
     grp = hashed.groupBy("h").agg(F.min("doc_id").alias("canon"))
     ex = hashed.join(grp, "h").select("doc_id", "canon")
     survivors = (

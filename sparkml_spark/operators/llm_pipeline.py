@@ -14,7 +14,10 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sparkml_spark.registry import ZERO_VIOLATIONS, md5_chunk16, nano, nano_sum, query
+from sparkml_spark.registry import (
+    NORM_HASH_SQL, TOKENS_SQL, ZERO_VIOLATIONS, md5_chunk16, nano, nano_sum, norm_hash, query,
+    tokens,
+)
 from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
 
@@ -60,7 +63,7 @@ def pipeline_global_shuffle(spark, sf_dir):
     oracle=f"""
 WITH toks AS (
   SELECT doc_id,
-         len(string_split_regex(lower(trim(text)), '\\s+')) AS n_tokens
+         len({TOKENS_SQL}) AS n_tokens
   FROM documents
 ), ordered AS (
   SELECT doc_id, n_tokens,
@@ -96,7 +99,7 @@ def pipeline_sequence_pack(spark, sf_dir):
     sequence holding its last token (cum-1 DIV budget) — deterministic
     and declared, matching the oracle."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     bucketed = d.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -195,15 +198,15 @@ def pipeline_domain_mix(spark, sf_dir):
 @query(
     "pipeline_decontaminate",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH grams AS (
   SELECT doc_id,
          unnest(list_distinct(list_transform(
-           range(1, len(string_split_regex(lower(trim(text)), '\\s+')) - 1),
+           range(1, len({TOKENS_SQL}) - 1),
            i -> concat_ws(' ',
-                string_split_regex(lower(trim(text)), '\\s+')[i],
-                string_split_regex(lower(trim(text)), '\\s+')[i+1],
-                string_split_regex(lower(trim(text)), '\\s+')[i+2])))) AS gram
+                {TOKENS_SQL}[i],
+                {TOKENS_SQL}[i+1],
+                {TOKENS_SQL}[i+2])))) AS gram
   FROM documents
 ),
 eval_grams AS (
@@ -259,9 +262,7 @@ def pipeline_decontaminate(spark, sf_dir):
     # grams are concat_ws (never null); gram-less docs contributed no
     # rows before.
     grams = (
-        d.select(
-            "doc_id", F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("__toks")
-        )
+        d.select("doc_id", tokens().alias("__toks"))
         .select("doc_id", F.explode_outer(ngrams).alias("gram"))
         .filter(F.col("gram").isNotNull())
     )
@@ -309,10 +310,10 @@ def token_budget_thresholds(docs, share: float = 0.2):
 @query(
     "pipeline_token_budget_mix",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH docs AS (
   SELECT doc_id, lang, source,
-         len(string_split_regex(lower(trim(text)), '\\s+')) AS n_tok
+         len({TOKENS_SQL}) AS n_tok
   FROM documents
 ), budgets AS (
   -- CASTs force IEEE-double arithmetic to match Spark (same rationale
@@ -350,7 +351,7 @@ def pipeline_token_budget_mix(spark, sf_dir):
         "doc_id",
         "lang",
         "source",
-        F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("n_tok"),
+        F.size(tokens()).alias("n_tok"),
     )
     budgets = token_budget_thresholds(docs)
     h16 = md5_chunk16(F.concat(F.lit("mix"), F.col("doc_id").cast("string")))
@@ -440,7 +441,7 @@ def pipeline_epoch_upsample(spark, sf_dir):
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS t
+  SELECT doc_id, {TOKENS_SQL} AS t
   FROM documents
 )
 SELECT doc_id,
@@ -464,7 +465,7 @@ def pipeline_chunk_overlap(spark, sf_dir):
     sequence(1, size, stride) is always ascending (size >= 1), so the
     short-doc guard the gram builders need does not apply here."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     with_toks = d.select("doc_id", toks.alias("t"))
     starts = F.explode(F.sequence(F.lit(1), F.size("t"), F.lit(_STRIDE))).alias("s")
     chunk = F.slice(F.col("t"), F.col("s"), F.lit(_CHUNK))
@@ -556,7 +557,7 @@ WITH corpus AS (
 ),
 assigned AS (
   SELECT doc_id,
-         md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS content_hash,
+         {NORM_HASH_SQL} AS content_hash,
          CASE WHEN {_BUCKET_SQL} < {_SPLIT_TRAIN} THEN 'train'
               WHEN {_BUCKET_SQL} < {_SPLIT_VAL} THEN 'val'
               ELSE 'test' END AS split
@@ -592,7 +593,7 @@ def pipeline_split_leakage(spark, sf_dir):
     join, no second shuffle. The straddle filter is a HAVING on the
     aggregate, so output is bounded by the number of LEAKING groups,
     not documents."""
-    from sparkml_spark.operators.llm_dedup import _corpus_with_dups, _norm
+    from sparkml_spark.operators.llm_dedup import _corpus_with_dups
 
     corpus = _corpus_with_dups(spark, sf_dir)
     bucket = md5_chunk16(F.col("doc_id").cast("string")) % 100
@@ -601,9 +602,7 @@ def pipeline_split_leakage(spark, sf_dir):
         .when(bucket < _SPLIT_VAL, "val")
         .otherwise("test")
     )
-    assigned = corpus.select(
-        "doc_id", _norm().alias("content_hash"), split.alias("split")
-    )
+    assigned = corpus.select("doc_id", norm_hash().alias("content_hash"), split.alias("split"))
     return (
         assigned.groupBy("content_hash")
         .agg(
@@ -630,7 +629,7 @@ _STOPWORDS = ("a", "the", "of", "to", "and")
     section="2.I",
     oracle=f"""
 WITH t AS (
-  SELECT string_split_regex(lower(trim(text)), '\\s+') AS toks,
+  SELECT {TOKENS_SQL} AS toks,
          length(text) AS nc,
          length(regexp_replace(lower(text), '[^a-z]', '', 'g')) AS alpha
   FROM documents
@@ -686,7 +685,7 @@ def pipeline_filter_funnel(spark, sf_dir):
     # token), making the gate O(L²·split) per document.
     tk = F.col("__toks")
     base = d.select(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+").alias("__toks"),
+        tokens().alias("__toks"),
         F.length("text").alias("__nc"),
         F.length(F.regexp_replace(F.lower("text"), "[^a-z]", "")).alias(
             "__alpha"
@@ -1036,7 +1035,7 @@ def pipeline_stratified_sample_k(spark, sf_dir):
     oracle=f"""
 WITH RECURSIVE toks AS (
   SELECT doc_id, doc_id // {_BUCKET} AS shard,
-         CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS t
+         CAST(len({TOKENS_SQL}) AS BIGINT) AS t
   FROM documents
 ), ordered AS (
   SELECT doc_id, shard, t,
@@ -1079,7 +1078,7 @@ def pipeline_pack_bins_nextfit(spark, sf_dir):
     underfilled bin per shard (bounded waste, embarrassingly
     parallel)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     sized = d.select(
         "doc_id",
         F.expr(f"doc_id DIV {_BUCKET}").alias("shard"),
@@ -1143,7 +1142,7 @@ def pack_next_fit(sized, manifest: bool = False):
     oracle=f"""
 WITH RECURSIVE toks AS (
   SELECT doc_id, doc_id // {_BUCKET} AS shard,
-         CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS t
+         CAST(len({TOKENS_SQL}) AS BIGINT) AS t
   FROM documents
 ), ordered AS (
   SELECT doc_id, shard, t,
@@ -1184,7 +1183,7 @@ def pipeline_pack_manifest(spark, sf_dir):
     window keyed on (shard, bin_id) would have re-shuffled the
     corpus-sized manifest a second time."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     sized = d.select(
         "doc_id",
         F.expr(f"doc_id DIV {_BUCKET}").alias("shard"),
@@ -1198,12 +1197,12 @@ def pipeline_pack_manifest(spark, sf_dir):
 @query(
     "pipeline_curriculum_order",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH q AS (
   SELECT doc_id,
          md5(CAST(doc_id AS VARCHAR)) AS h,
          3 - ((CASE WHEN n_chars BETWEEN 100 AND 500 THEN 1 ELSE 0 END)
-            + (CASE WHEN len(string_split_regex(lower(trim(text)), '\\s+')) >= 20
+            + (CASE WHEN len({TOKENS_SQL}) >= 20
                     THEN 1 ELSE 0 END)
             + (CASE WHEN len(regexp_extract_all(text, '[^a-z0-9 ]')) = 0
                     THEN 1 ELSE 0 END)) AS stage
@@ -1236,7 +1235,7 @@ def pipeline_curriculum_order(spark, sf_dir):
     within the cell. One corpus exchange on the cell key, one ~1k-row
     broadcast back."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     # translate-based punct count, NOT regexp_extract_all: both count
     # the chars outside [a-z0-9 ] (0 mismatches verified across
     # fixtures), but the regex runs row-at-a-time java.util.regex at
@@ -1321,7 +1320,7 @@ def pack_first_fit_decreasing(sized):
 
 def _sized_ws(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     return d.select(
         "doc_id",
         F.expr(f"doc_id DIV {_BUCKET}").alias("shard"),
@@ -1561,7 +1560,7 @@ _SPAN_RATE16 = 9830  # ~15% of 65536 — the T5 default corruption rate
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS n_ws
+  SELECT doc_id, CAST(len({TOKENS_SQL}) AS BIGINT) AS n_ws
   FROM documents
 ), blocks AS (
   SELECT doc_id, n_ws, unnest(range(0, n_ws // {_SPAN_LEN})) AS b FROM toks
@@ -1603,7 +1602,7 @@ def pipeline_span_corruption(spark, sf_dir):
     filter is map-side, and the one shuffle is the doc_id window
     partition."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     blocks = (
         d.select(
             "doc_id",
@@ -1645,17 +1644,17 @@ def pipeline_span_corruption(spark, sf_dir):
 @query(
     "pipeline_right_to_forget",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH forget AS (
   SELECT doc_id FROM documents WHERE doc_id % 97 = 0
 ), before_t AS (
   SELECT lang, source, COUNT(*) AS docs_before,
-         CAST(SUM(len(string_split_regex(lower(trim(text)), '\\s+'))) AS BIGINT)
+         CAST(SUM(len({TOKENS_SQL})) AS BIGINT)
            AS toks_before
   FROM documents GROUP BY lang, source
 ), after_t AS (
   SELECT lang, source, COUNT(*) AS docs_after,
-         CAST(SUM(len(string_split_regex(lower(trim(text)), '\\s+'))) AS BIGINT)
+         CAST(SUM(len({TOKENS_SQL})) AS BIGINT)
            AS toks_after
   FROM documents d
   WHERE NOT EXISTS (SELECT 1 FROM forget f WHERE f.doc_id = d.doc_id)
@@ -1685,7 +1684,7 @@ def pipeline_right_to_forget(spark, sf_dir):
     rides the rewrite job that physically drops the rows — same
     plan, different sink."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).cast("long")
+    toks = F.size(tokens()).cast("long")
     forget = d.filter(F.col("doc_id") % 97 == 0).select("doc_id")
     before = d.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("docs_before"),
@@ -1722,7 +1721,7 @@ def pipeline_right_to_forget(spark, sf_dir):
     section="2.I",
     oracle=f"""
 WITH hashed AS (
-  SELECT doc_id, md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
+  SELECT doc_id, {NORM_HASH_SQL} AS h
   FROM documents
 ), keeps AS (
   SELECT MIN(doc_id) AS doc_id FROM hashed GROUP BY h
@@ -1765,11 +1764,9 @@ def pipeline_lineage_fingerprint(spark, sf_dir):
     (md5 per id-range, then md5 of the digests) to avoid the single
     reducer; the fixture-scale single digest keeps the oracle
     simple and the semantics identical."""
-    from sparkml_spark.operators.llm_dedup import _norm
-
     d = load_table(spark, sf_dir, "documents")
     keeps = (
-        d.select(_norm().alias("h"), "doc_id")
+        d.select(norm_hash().alias("h"), "doc_id")
         .groupBy("h")
         .agg(F.min("doc_id").alias("doc_id"))
         .select("doc_id")
@@ -1806,10 +1803,10 @@ def pipeline_lineage_fingerprint(spark, sf_dir):
 @query(
     "pipeline_mix_temperature",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH lt AS (
   SELECT lang, doc_id,
-         CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS t
+         CAST(len({TOKENS_SQL}) AS BIGINT) AS t
   FROM documents
 ), agg AS (
   SELECT lang, SUM(t) AS n_l, COUNT(*) AS n_docs FROM lt GROUP BY lang
@@ -1853,7 +1850,7 @@ def pipeline_mix_temperature(spark, sf_dir):
     Scale: a 5-row language census broadcast back onto the corpus —
     the token_budget_mix shape; one scan, no corpus shuffle."""
     d = load_table(spark, sf_dir, "documents")
-    t = F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).cast("long")
+    t = F.size(tokens()).cast("long")
     lt = d.select("lang", "doc_id", t.alias("t"))
     agg = lt.groupBy("lang").agg(
         F.sum("t").alias("n_l"), F.count(F.lit(1)).alias("n_docs")
@@ -1905,7 +1902,7 @@ _DSIR_B = 1024  # hashed-feature buckets (DSIR's "hashed n-gram" space)
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, lang, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+  SELECT doc_id, lang, unnest({TOKENS_SQL}) AS tok
   FROM documents
 ), bt AS (
   SELECT doc_id, lang,
@@ -1966,7 +1963,7 @@ def pipeline_dsir_select(spark, sf_dir):
     bt = d.select(
         "doc_id",
         "lang",
-        F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
+        F.explode(tokens()).alias("tok"),
     ).select(
         "doc_id",
         "lang",
@@ -2023,9 +2020,9 @@ def pipeline_dsir_select(spark, sf_dir):
 @query(
     "pipeline_chat_sft_format",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH t AS (
-  SELECT doc_id, string_split_regex(lower(trim(text)), '\\s+') AS toks
+  SELECT doc_id, {TOKENS_SQL} AS toks
   FROM documents
 ), ok AS (
   SELECT doc_id, toks, len(toks) AS n FROM t WHERE len(toks) >= 12
@@ -2061,7 +2058,7 @@ def pipeline_chat_sft_format(spark, sf_dir):
     template literal is a constant, the split/slice/join chain is
     whole-stage-codegen string work."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     t = d.select("doc_id", toks.alias("toks"), F.size(toks).alias("n")).filter(
         F.col("n") >= 12
     )
@@ -2089,10 +2086,10 @@ def pipeline_chat_sft_format(spark, sf_dir):
 @query(
     "pipeline_preference_pairs",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH scored AS (
   SELECT lang, source, doc_id,
-         CAST(len(list_distinct(string_split_regex(lower(trim(text)), '\\s+')))
+         CAST(len(list_distinct({TOKENS_SQL}))
               AS BIGINT) AS score
   FROM documents
 ), ranked AS (
@@ -2131,9 +2128,7 @@ def pipeline_preference_pairs(spark, sf_dir):
     bounded groups, never a corpus-wide window; output is one row per
     stratum."""
     d = load_table(spark, sf_dir, "documents")
-    score = F.size(
-        F.array_distinct(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
-    ).cast("long")
+    score = F.size(F.array_distinct(tokens())).cast("long")
     scored = d.select("lang", "source", "doc_id", score.alias("score"))
     wbest = Window.partitionBy("lang", "source").orderBy(
         F.col("score").desc(), F.col("doc_id").asc()
@@ -2416,7 +2411,7 @@ wf{r} AS (
         f"""
 WITH caps AS (
   SELECT lang,
-         CAST(SUM(len(string_split_regex(lower(trim(text)), '\\s+'))) AS BIGINT)
+         CAST(SUM(len({TOKENS_SQL})) AS BIGINT)
            AS cap
   FROM documents GROUP BY lang
 ), wfx0 AS (
@@ -2456,7 +2451,7 @@ def pipeline_budget_waterfill(spark, sf_dir):
     caps = (
         d.select(
             "lang",
-            F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("t"),
+            F.size(tokens()).alias("t"),
         )
         .groupBy("lang")
         .agg(F.sum("t").cast("long").alias("cap"))
@@ -2516,11 +2511,11 @@ def pipeline_budget_waterfill(spark, sf_dir):
 @query(
     "pipeline_release_gate",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH norm AS (
   SELECT doc_id, lang, source, n_chars,
-         md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h,
-         CAST(len(string_split_regex(lower(trim(text)), '\\s+')) AS BIGINT) AS toks
+         {NORM_HASH_SQL} AS h,
+         CAST(len({TOKENS_SQL}) AS BIGINT) AS toks
   FROM documents
 ), kanon AS (
   SELECT CAST(SUM(CASE WHEN class_size < 5 THEN class_size ELSE 0 END) AS BIGINT)
@@ -2565,8 +2560,8 @@ def pipeline_release_gate(spark, sf_dir):
             "lang",
             "source",
             "n_chars",
-            F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("h"),
-            F.size(F.split(F.lower(F.trim(F.col("text"))), r"\s+"))
+            norm_hash().alias("h"),
+            F.size(tokens())
             .cast("long")
             .alias("toks"),
         )

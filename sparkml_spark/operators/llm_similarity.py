@@ -19,7 +19,7 @@ from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import ZERO_VIOLATIONS, query
-from sparkml_spark.session import ARTIFACTS_DIR, cache
+from sparkml_spark.session import artifact_path, cache
 from sparkml_spark.sources.loader import load_table
 
 _N_QUERIES = 10
@@ -873,10 +873,7 @@ def ensure_ivf_index(spark, sf_dir) -> str:
     reads parquet. Returns the index root path."""
     import os
 
-    path = os.path.join(
-        ARTIFACTS_DIR,
-        f"ivf_index_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = artifact_path("ivf_index", sf_dir)
 
     def _build() -> str:
         assign, centroids = build_ivf_index(spark, sf_dir)
@@ -884,9 +881,9 @@ def ensure_ivf_index(spark, sf_dir) -> str:
         centroids.write.mode("overwrite").parquet(os.path.join(path, "centroids"))
         return path
 
-    # Written once per SparkContext, not once per caller. The memo is
-    # keyed by applicationId, so a fresh process always rebuilds and
-    # rewrites from source (a stale on-disk artifact from an earlier
+    # Written once per SparkContext, not once per caller. The memo lives
+    # in the live context's state, so a fresh process always rebuilds
+    # and rewrites from source (a stale on-disk artifact from an earlier
     # process is never trusted).
     from sparkml_spark.session import session_artifact
 
@@ -911,10 +908,7 @@ def ensure_lsh_model(spark, sf_dir) -> str:
     Returns the model path."""
     import os
 
-    path = os.path.join(
-        ARTIFACTS_DIR,
-        f"lsh_model_{os.path.basename(sf_dir.rstrip('/'))}",
-    )
+    path = artifact_path("lsh_model", sf_dir)
 
     def _build() -> str:
         _brp_lsh_model(spark, sf_dir).write().overwrite().save(path)

@@ -19,7 +19,9 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sparkml_spark.registry import dsum, dsum_sql, query
+from sparkml_spark.registry import (
+    NORM_HASH_SQL, TOKENS_SQL, dsum, dsum_sql, gram_idx, norm_hash, query, tokens
+)
 from sparkml_spark.session import cache
 from sparkml_spark.sources.loader import load_table
 
@@ -36,24 +38,6 @@ LANG_MARKERS = {
     "zh": ["join", "small", "customer"],
 }
 
-def _tokens():
-    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-
-_TOKENS_SQL = "string_split_regex(lower(trim(text)), '\\s+')"
-
-
-def _gram_idx(toks, n):
-    """Ascending n-gram start positions 1..size-(n-1), EMPTY for docs
-    shorter than n tokens. Spark's bare sequence(1, size-(n-1)) DESCENDS
-    (default step -1) below that and element_at then throws
-    INVALID_INDEX_OF_ZERO / INVALID_ARRAY_INDEX_IN_ELEMENT_AT under the
-    default ANSI mode (verified live), where the oracle's range() yields
-    empty — the ADVICE r4 failure class, fixed at every gram site."""
-    upper = F.size(toks) - (n - 1)
-    return F.when(upper >= 1, F.sequence(F.lit(1), upper)).otherwise(
-        F.array().cast("array<int>")
-    )
-
 
 @query(
     "text_tokenize_count",
@@ -65,7 +49,7 @@ FROM (
          row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, token ASC) AS rn
   FROM (
     SELECT lang, token, COUNT(*) AS cnt
-    FROM (SELECT lang, unnest({_TOKENS_SQL}) AS token FROM documents)
+    FROM (SELECT lang, unnest({TOKENS_SQL}) AS token FROM documents)
     GROUP BY lang, token
   )
 )
@@ -78,7 +62,7 @@ def text_tokenize_count(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     w = Window.partitionBy("lang").orderBy(F.col("cnt").desc(), F.col("token").asc())
     return (
-        d.select("lang", F.explode(_tokens()).alias("token"))
+        d.select("lang", F.explode(tokens()).alias("token"))
         .groupBy("lang", "token")
         .agg(F.count(F.lit(1)).alias("cnt"))
         .withColumn("rn", F.row_number().over(w))
@@ -92,8 +76,8 @@ def text_tokenize_count(spark, sf_dir):
     section="2.I",
     oracle=f"""
 SELECT doc_id,
-       len({_TOKENS_SQL}) AS n_tokens,
-       len(list_filter({_TOKENS_SQL},
+       len({TOKENS_SQL}) AS n_tokens,
+       len(list_filter({TOKENS_SQL},
            t -> NOT list_contains({str(STOPWORDS).replace("'", chr(39))}, t))) AS n_content_tokens
 FROM documents
 """,
@@ -105,8 +89,8 @@ def text_stopword_filter(spark, sf_dir):
     stop = F.array(*[F.lit(s) for s in STOPWORDS])
     return d.select(
         "doc_id",
-        F.size(_tokens()).alias("n_tokens"),
-        F.size(F.filter(_tokens(), lambda t: ~F.array_contains(stop, t))).alias(
+        F.size(tokens()).alias("n_tokens"),
+        F.size(F.filter(tokens(), lambda t: ~F.array_contains(stop, t))).alias(
             "n_content_tokens"
         ),
     )
@@ -121,8 +105,8 @@ FROM (
   SELECT bigram, COUNT(*) AS cnt,
          row_number() OVER (ORDER BY COUNT(*) DESC, bigram ASC) AS rn
   FROM (
-    SELECT unnest(list_transform(range(1, len({_TOKENS_SQL})),
-                  i -> {_TOKENS_SQL}[i] || ' ' || {_TOKENS_SQL}[i + 1])) AS bigram
+    SELECT unnest(list_transform(range(1, len({TOKENS_SQL})),
+                  i -> {TOKENS_SQL}[i] || ' ' || {TOKENS_SQL}[i + 1])) AS bigram
     FROM documents
   )
   GROUP BY bigram
@@ -142,10 +126,10 @@ def text_ngram_sql(spark, sf_dir):
     # Measured on this exact query: 8.9 s → 0.7 s at sf0.1.
     tk = F.col("__toks")
     bigrams = F.transform(
-        _gram_idx(tk, 2),
+        gram_idx(tk, 2),
         lambda i: F.concat_ws(" ", F.element_at(tk, i), F.element_at(tk, i + 1)),
     )
-    d = d.select(_tokens().alias("__toks"))
+    d = d.select(tokens().alias("__toks"))
     # r13 (guide §2.4): the top-25 filter was a row_number over an
     # UNPARTITIONED window — a single-partition sort of the whole
     # bigram vocabulary (the one Spark warns about). row_number ≤ k
@@ -166,7 +150,7 @@ def text_ngram_sql(spark, sf_dir):
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ), tf AS (
   SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token
 ), df AS (
@@ -184,7 +168,7 @@ def text_tfidf_sql(spark, sf_dir):
     = ln((N+1)/(df+1)), joined back. The df table is tiny (vocabulary-
     sized) → broadcast; ln rounded at 6 dp (libm)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    toks = d.select("doc_id", F.explode(tokens()).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("tf"))
     df = toks.groupBy("token").agg(F.countDistinct("doc_id").alias("df"))
     # Corpus size rides along as a lazy broadcast 1-row aggregate —
@@ -239,7 +223,7 @@ def _marker_score_spark(toks, markers):
 
 def _marker_score_sql(markers):
     lst = "[" + ", ".join(f"'{m}'" for m in markers) + "]"
-    return f"len(list_filter({_TOKENS_SQL}, t -> list_contains({lst}, t)))"
+    return f"len(list_filter({TOKENS_SQL}, t -> list_contains({lst}, t)))"
 
 
 @query(
@@ -275,7 +259,7 @@ def text_langid_heuristic(spark, sf_dir):
     marker lists are per-language n-gram tables; the fixture's shared
     vocabulary exercises the mechanism only (module docstring)."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     scores = {k: _marker_score_spark(toks, v) for k, v in LANG_MARKERS.items()}
     pred = (
         F.when(
@@ -303,14 +287,14 @@ def text_langid_heuristic(spark, sf_dir):
     oracle=f"""
 SELECT doc_id,
        n_chars,
-       len({_TOKENS_SQL}) AS n_tokens,
-       round(CAST(n_chars AS DOUBLE) / len({_TOKENS_SQL}), 6) AS avg_token_len,
-       round(CAST(len(list_filter({_TOKENS_SQL},
+       len({TOKENS_SQL}) AS n_tokens,
+       round(CAST(n_chars AS DOUBLE) / len({TOKENS_SQL}), 6) AS avg_token_len,
+       round(CAST(len(list_filter({TOKENS_SQL},
              t -> list_contains(['the', 'a', 'data', 'value'], t))) AS DOUBLE)
-             / len({_TOKENS_SQL}), 6) AS stopword_ratio,
+             / len({TOKENS_SQL}), 6) AS stopword_ratio,
        len(regexp_extract_all(text, '[^a-z0-9 ]')) AS n_punct,
        (CASE WHEN n_chars BETWEEN 100 AND 500 THEN 1 ELSE 0 END
-        + CASE WHEN len({_TOKENS_SQL}) >= 20 THEN 1 ELSE 0 END
+        + CASE WHEN len({TOKENS_SQL}) >= 20 THEN 1 ELSE 0 END
         + CASE WHEN len(regexp_extract_all(text, '[^a-z0-9 ]')) = 0 THEN 1 ELSE 0 END)
          AS quality_score
 FROM documents
@@ -321,7 +305,7 @@ def text_quality_score(spark, sf_dir):
     punctuation ratios, and a 0-3 rubric score — the standard pre-train
     corpus filter, entirely as codegen expressions."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     stop = F.array(*[F.lit(s) for s in STOPWORDS])
     n_tokens = F.size(toks)
     n_stop = F.size(F.filter(toks, lambda t: F.array_contains(stop, t)))
@@ -351,7 +335,7 @@ def text_quality_score(spark, sf_dir):
     section="2.I",
     oracle=f"""
 SELECT doc_id,
-       len({_TOKENS_SQL}) AS ws_tokens,
+       len({TOKENS_SQL}) AS ws_tokens,
        len(regexp_extract_all(text, '[a-z]+|[0-9]+|[^a-z0-9\\s]')) AS bpe_ish_tokens,
        CAST(ceil(n_chars / 4.0) AS BIGINT) AS approx_llm_tokens
 FROM documents
@@ -364,7 +348,7 @@ def text_token_count(spark, sf_dir):
     d = load_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
-        F.size(_tokens()).alias("ws_tokens"),
+        F.size(tokens()).alias("ws_tokens"),
         F.size(
             F.regexp_extract_all(F.col("text"), F.lit(r"[a-z]+|[0-9]+|[^a-z0-9\s]"), 0)
         ).alias("bpe_ish_tokens"),
@@ -377,11 +361,11 @@ def text_token_count(spark, sf_dir):
     section="2.I",
     oracle=f"""
 SELECT doc_id,
-       md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS content_md5,
+       {NORM_HASH_SQL} AS content_md5,
        (SELECT MIN(md5(sh)) FROM unnest(list_transform(
-           range(1, len({_TOKENS_SQL}) - 2),
-           i -> {_TOKENS_SQL}[i] || ' ' || {_TOKENS_SQL}[i+1] || ' '
-                || {_TOKENS_SQL}[i+2] || ' ' || {_TOKENS_SQL}[i+3])) AS t(sh))
+           range(1, len({TOKENS_SQL}) - 2),
+           i -> {TOKENS_SQL}[i] || ' ' || {TOKENS_SQL}[i+1] || ' '
+                || {TOKENS_SQL}[i+2] || ' ' || {TOKENS_SQL}[i+3])) AS t(sh))
          AS min_shingle_hash,
        md5(substring(text, 1, 64)) AS prefix64_md5
 FROM documents
@@ -400,7 +384,7 @@ def text_fingerprint(spark, sf_dir):
     # inside lambda scope (see text_ngram_sql; measured 13× there).
     tk = F.col("__toks")
     shingles = F.transform(
-        _gram_idx(tk, 4),
+        gram_idx(tk, 4),
         lambda i: F.concat_ws(
             " ",
             F.element_at(tk, i),
@@ -409,9 +393,9 @@ def text_fingerprint(spark, sf_dir):
             F.element_at(tk, i + 3),
         ),
     )
-    return d.select("doc_id", "text", _tokens().alias("__toks")).select(
+    return d.select("doc_id", "text", tokens().alias("__toks")).select(
         "doc_id",
-        F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " ")))).alias("content_md5"),
+        norm_hash().alias("content_md5"),
         F.array_min(F.transform(shingles, F.md5)).alias("min_shingle_hash"),
         F.md5(F.substring("text", 1, 64)).alias("prefix64_md5"),
     )
@@ -451,7 +435,7 @@ def text_tfidf_mllib(spark, sf_dir):
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS tok FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS tok FROM documents
 ),
 uni AS (
   SELECT doc_id, SUM(cnt) AS n_tokens, COUNT(*) AS n_distinct,
@@ -465,8 +449,8 @@ big AS (
     SELECT doc_id, bigram, COUNT(*) AS cnt
     FROM (
       SELECT doc_id,
-             unnest(list_transform(range(1, len({_TOKENS_SQL})),
-                 i -> {_TOKENS_SQL}[i] || ' ' || {_TOKENS_SQL}[i+1])) AS bigram
+             unnest(list_transform(range(1, len({TOKENS_SQL})),
+                 i -> {TOKENS_SQL}[i] || ' ' || {TOKENS_SQL}[i+1])) AS bigram
       FROM documents
     )
     GROUP BY doc_id, bigram
@@ -505,7 +489,7 @@ def text_repetition_score(spark, sf_dir):
     # element_at(toks, …) would otherwise re-run split() per element
     # (see text_ngram_sql; 13× measured).
     toks = F.col("__toks")
-    d = d.select("doc_id", _tokens().alias("__toks"))
+    d = d.select("doc_id", tokens().alias("__toks"))
 
     def _distinct_and_top(arr):
         """struct(nd, best): #distinct values and max multiplicity,
@@ -531,7 +515,7 @@ def text_repetition_score(spark, sf_dir):
         return F.aggregate(srt, init, step)
 
     bigrams = F.transform(
-        _gram_idx(toks, 2),
+        gram_idx(toks, 2),
         lambda i: F.concat_ws(" ", F.element_at(toks, i), F.element_at(toks, i + 1)),
     )
     stats = (
@@ -639,7 +623,7 @@ _PIPE_CORPUS_SQL = """
 WITH corpus AS ({_PIPE_CORPUS_SQL}),
 hashed AS (
   SELECT doc_id, text,
-         md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g')))) AS h
+         {NORM_HASH_SQL} AS h
   FROM corpus
 ),
 deduped AS (
@@ -651,9 +635,9 @@ deduped AS (
 ),
 scored AS (
   SELECT d.doc_id,
-         len({_TOKENS_SQL}) AS n_tokens,
-         CAST(len(list_distinct({_TOKENS_SQL})) AS DOUBLE)
-           / len({_TOKENS_SQL}) AS distinct_ratio
+         len({TOKENS_SQL}) AS n_tokens,
+         CAST(len(list_distinct({TOKENS_SQL})) AS DOUBLE)
+           / len({TOKENS_SQL}) AS distinct_ratio
   FROM deduped d
 ),
 kept AS (
@@ -691,13 +675,13 @@ def pipeline_training_corpus(spark, sf_dir):
             (F.col("doc_id") + 1000000).alias("doc_id"), "text"
         )
     )
-    h = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
+    h = norm_hash()
     hashed = corpus.select("doc_id", "text", h.alias("h"))
     w = Window.partitionBy("h").orderBy("doc_id")
     deduped = (
         hashed.withColumn("rn", F.row_number().over(w)).filter(F.col("rn") == 1).drop("rn", "h")
     )
-    toks = _tokens()
+    toks = tokens()
     scored = deduped.select(
         "doc_id",
         F.size(toks).alias("n_tokens"),
@@ -790,7 +774,7 @@ def pipeline_training_corpus_full(spark, sf_dir):
         )
     )
     # dedup: content hash, keep lowest doc_id
-    h = F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
+    h = norm_hash()
     w_h = Window.partitionBy("h").orderBy("doc_id")
     deduped = (
         corpus.select("doc_id", "text", h.alias("h"))
@@ -799,7 +783,7 @@ def pipeline_training_corpus_full(spark, sf_dir):
         .drop("rn", "h")
     )
     # quality gate
-    toks = _tokens()
+    toks = tokens()
     kept = deduped.select(
         "doc_id",
         F.size(toks).alias("n_ws"),
@@ -881,7 +865,7 @@ def pipeline_training_corpus_full(spark, sf_dir):
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ), tf AS (
   SELECT doc_id, token, COUNT(*) AS c FROM toks GROUP BY doc_id, token
 ), agg AS (
@@ -910,7 +894,7 @@ def text_token_entropy(spark, sf_dir):
     Scale: explode -> two grouped aggs keyed by doc_id; no vocabulary-
     wide state (unlike tf-idf's df table), so it shards perfectly."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    toks = d.select("doc_id", F.explode(tokens()).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("c"))
     agg = tf.groupBy("doc_id").agg(
         F.sum("c").cast("double").alias("n"),
@@ -934,7 +918,7 @@ def text_token_entropy(spark, sf_dir):
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, {_TOKENS_SQL} AS t FROM documents WHERE len({_TOKENS_SQL}) >= 8
+  SELECT doc_id, {TOKENS_SQL} AS t FROM documents WHERE len({TOKENS_SQL}) >= 8
 ), sh AS (
   SELECT doc_id, unnest(list_transform(range(1, len(t) - 7 + 1),
          i -> array_to_string(t[i:i+7], ' '))) AS shingle
@@ -955,7 +939,7 @@ def text_boilerplate_ngrams(spark, sf_dir):
     — partial aggregation absorbs the skew map-side before the
     shuffle; a distinct-before-count keeps per-key state bounded."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", _tokens().alias("t")).filter(F.size("t") >= 8)
+    toks = d.select("doc_id", tokens().alias("t")).filter(F.size("t") >= 8)
     # r13: explode_OUTER + isnotnull — a plain explode's inferred
     # size()>0 filter re-inlines the tokenization into the lambda when
     # pushed below the projection (llm_dedup._shingled3_exploded has
@@ -983,7 +967,7 @@ def text_boilerplate_ngrams(spark, sf_dir):
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ), gf AS (
   SELECT token, COUNT(*) AS gc FROM toks GROUP BY token
 ), total AS (
@@ -1019,7 +1003,7 @@ def text_perplexity_proxy(spark, sf_dir):
     window). The `total` scalar rides along as a broadcast join, not
     a driver collect."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    toks = d.select("doc_id", F.explode(tokens()).alias("token"))
     gf = toks.groupBy("token").agg(F.count(F.lit(1)).alias("gc"))
     total = gf.agg(F.sum("gc").cast("double").alias("n_total"))
     tf = toks.groupBy("doc_id", "token").agg(F.count(F.lit(1)).alias("c"))
@@ -1058,7 +1042,7 @@ _BM25_B = 0.75
 #: arms are one definition.
 BM25_CTE = f"""
 bm25_toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ), bm25_dl AS (
   SELECT doc_id, COUNT(*) AS dl FROM bm25_toks GROUP BY doc_id
 ), bm25_stats AS (
@@ -1094,7 +1078,7 @@ def bm25_scores(d):
     """(doc_id, n_terms_matched, bm25_micro) for docs matching >= 1
     query term — the Spark twin of BM25_CTE; see text_bm25_score for
     the formula and float discipline."""
-    toks = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    toks = d.select("doc_id", F.explode(tokens()).alias("token"))
     terms = F.array(*[F.lit(t) for t in BM25_QUERY_TERMS])
     dl = toks.groupBy("doc_id").agg(F.count(F.lit(1)).alias("dl"))
     stats = F.broadcast(
@@ -1172,12 +1156,12 @@ def text_bm25_score(spark, sf_dir):
 WITH feats AS (
   SELECT doc_id,
          n_chars,
-         len({_TOKENS_SQL}) AS n,
+         len({TOKENS_SQL}) AS n,
          len(regexp_replace(lower(trim(text)), '\\s', '', 'g')) AS sum_len,
          len(translate(text, 'abcdefghijklmnopqrstuvwxyz0123456789 ', ''))
            AS n_punct,
-         len(list_distinct({_TOKENS_SQL})) AS n_distinct,
-         len(list_intersect({_TOKENS_SQL},
+         len(list_distinct({TOKENS_SQL})) AS n_distinct,
+         len(list_intersect({TOKENS_SQL},
              ['the', 'a', 'data', 'value'])) AS n_stop
   FROM documents
 )
@@ -1221,7 +1205,7 @@ def quality_gopher_filter(spark, sf_dir):
     Scale: one narrow projection, no shuffle at all — the decision
     column feeds whatever downstream filter/groupBy consumes it."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     stop = F.array(*[F.lit(s) for s in STOPWORDS])
     n = F.size(toks)
     sum_len = F.length(
@@ -1269,7 +1253,7 @@ _SURPRISE_OOV = 24
     section="2.I",
     oracle=f"""
 WITH ref AS (
-  SELECT unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
+  SELECT unnest({TOKENS_SQL}) AS w
   FROM documents WHERE source = 'src0'
 ), rc AS (SELECT w, COUNT(*) AS c FROM ref WHERE w <> '' GROUP BY w),
 tot AS (SELECT CAST(SUM(c) AS BIGINT) AS n FROM rc),
@@ -1278,7 +1262,7 @@ lm AS (
   FROM rc
 ),
 dw AS (
-  SELECT doc_id, lang, unnest(string_split_regex(lower(trim(text)), '\\s+')) AS w
+  SELECT doc_id, lang, unnest({TOKENS_SQL}) AS w
   FROM documents
 ), dwc AS (
   SELECT doc_id, lang, w, COUNT(*) AS c FROM dw WHERE w <> ''
@@ -1325,9 +1309,7 @@ def quality_surprise_filter(spark, sf_dir):
     broadcast LM join → one doc_id agg. The corpus text is never
     shuffled."""
     d = load_table(spark, sf_dir, "documents")
-    words = F.explode(
-        F.split(F.lower(F.trim(F.col("text"))), r"\s+")
-    ).alias("w")
+    words = F.explode(tokens()).alias("w")
     rc = (
         d.filter(F.col("source") == "src0")
         .select(words)
@@ -1568,7 +1550,7 @@ _wire_keep_decision_oracle()
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ), tf AS (
   SELECT doc_id, token, COUNT(*) AS tf FROM toks GROUP BY doc_id, token
 ), df AS (
@@ -1601,7 +1583,7 @@ def text_keyword_topk(spark, sf_dir):
     Scale: tokenize once, vocabulary-sized df broadcast, one doc_id
     shuffle for the window on bounded per-doc groups."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    toks = d.select("doc_id", F.explode(tokens()).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
@@ -1686,7 +1668,7 @@ def quality_langid_confusion(spark, sf_dir):
     Scale: one scan scoring each doc against 5 constant marker lists
     (codegen'd higher-order functions), then a ≤25-cell histogram."""
     d = load_table(spark, sf_dir, "documents")
-    toks = _tokens()
+    toks = tokens()
     scores = {k: _marker_score_spark(toks, v) for k, v in LANG_MARKERS.items()}
     pred = (
         F.when(
@@ -1723,7 +1705,7 @@ def quality_langid_confusion(spark, sf_dir):
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ), firsts AS (
   SELECT token, MIN(doc_id) AS fd FROM toks GROUP BY token
 ), doc_tok AS (
@@ -1773,7 +1755,7 @@ def text_heaps_law_fit(spark, sf_dir):
     broadcast crossed with the (vocabulary-sized / doc-grid-sized)
     aggregates — never a second corpus scan."""
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    toks = d.select("doc_id", F.explode(tokens()).alias("token"))
     firsts = toks.groupBy("token").agg(F.min("doc_id").alias("fd"))
     doc_tok = toks.groupBy("doc_id").agg(F.count(F.lit(1)).cast("long").alias("nt"))
     mx = d.agg((F.max("doc_id") + 1).alias("m1"))
@@ -1893,7 +1875,7 @@ def text_char_ngram_profile(spark, sf_dir):
     section="2.I",
     oracle=f"""
 WITH toks AS (
-  SELECT doc_id, unnest({_TOKENS_SQL}) AS token FROM documents
+  SELECT doc_id, unnest({TOKENS_SQL}) AS token FROM documents
 ), tf AS (
   SELECT doc_id, token, CAST(COUNT(*) AS BIGINT) AS tf
   FROM toks GROUP BY doc_id, token
@@ -1949,7 +1931,7 @@ def text_tfidf_knn(spark, sf_dir):
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select("doc_id", F.explode(_tokens()).alias("token"))
+    toks = d.select("doc_id", F.explode(tokens()).alias("token"))
     tf = toks.groupBy("doc_id", "token").agg(
         F.count(F.lit(1)).cast("long").alias("tf")
     )
@@ -2032,12 +2014,12 @@ def text_tfidf_knn(spark, sf_dir):
     section="2.I",
     oracle=f"""
 SELECT doc_id,
-       CAST(len({_TOKENS_SQL}) AS BIGINT) AS n_tokens,
-       CAST(len(list_distinct({_TOKENS_SQL})) AS BIGINT) AS n_types,
-       round(CAST(len(list_distinct({_TOKENS_SQL})) AS DOUBLE)
-             / len({_TOKENS_SQL}), 6) AS ttr,
-       round(CAST(len(list_distinct({_TOKENS_SQL})) AS DOUBLE)
-             / sqrt(2.0 * len({_TOKENS_SQL})), 6) AS root_ttr
+       CAST(len({TOKENS_SQL}) AS BIGINT) AS n_tokens,
+       CAST(len(list_distinct({TOKENS_SQL})) AS BIGINT) AS n_types,
+       round(CAST(len(list_distinct({TOKENS_SQL})) AS DOUBLE)
+             / len({TOKENS_SQL}), 6) AS ttr,
+       round(CAST(len(list_distinct({TOKENS_SQL})) AS DOUBLE)
+             / sqrt(2.0 * len({TOKENS_SQL})), 6) AS root_ttr
 FROM documents
 """,
 )
@@ -2052,7 +2034,7 @@ def text_type_token_ratio(spark, sf_dir):
     Scale: zero-shuffle narrow projection — codegen array algebra
     per document."""
     d = load_table(spark, sf_dir, "documents")
-    toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+    toks = tokens()
     n_tok = F.size(toks).cast("long")
     n_typ = F.size(F.array_distinct(toks)).cast("long")
     return d.select(

@@ -21,7 +21,7 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sparkml_spark.registry import ZERO_VIOLATIONS, nano, nano_sum, query
+from sparkml_spark.registry import TOKENS_SQL, ZERO_VIOLATIONS, nano, nano_sum, query, tokens
 from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
 
@@ -560,9 +560,7 @@ def ml_lda_topics(spark, sf_dir):
     from pyspark.ml.feature import CountVectorizer
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(
-        "doc_id", F.split(F.lower(F.trim("text")), r"\s+").alias("tokens")
-    )
+    toks = d.select("doc_id", tokens().alias("tokens"))
     lda = _shared_fit(
         Pipeline(
             stages=[
@@ -591,7 +589,7 @@ def ml_word2vec(spark, sf_dir):
     from pyspark.ml.functions import vector_to_array
 
     d = load_table(spark, sf_dir, "documents")
-    toks = d.select(F.split(F.lower(F.trim("text")), r"\s+").alias("tokens"))
+    toks = d.select(tokens().alias("tokens"))
     w2v = _shared_fit(
         Word2Vec(
             vectorSize=16, seed=SEED, minCount=1, inputCol="tokens",
@@ -725,7 +723,7 @@ def ml_embed_models_bound(spark, sf_dir):
     w2v = ml_word2vec(spark, sf_dir)
     d = load_table(spark, sf_dir, "documents")
     n_tokens = d.select(
-        F.explode(F.split(F.lower(F.trim("text")), r"\s+")).alias("tok")
+        F.explode(tokens()).alias("tok")
     ).agg(F.countDistinct("tok").alias("n_tok"))
     v_w2v = w2v.agg(
         F.count(F.lit(1)).alias("n_vocab"),
@@ -2586,10 +2584,10 @@ def ml_chi2_feature_selection(spark, sf_dir):
 @query(
     "ml_naive_bayes_exact",
     section="2.J",
-    oracle="""
+    oracle=f"""
 WITH toks AS (
   SELECT doc_id, lang,
-         unnest(string_split_regex(lower(trim(text)), '\\s+')) AS tok
+         unnest({TOKENS_SQL}) AS tok
   FROM documents
 ), vocab AS (
   SELECT CAST(COUNT(DISTINCT tok) AS BIGINT) AS v FROM toks
@@ -2654,13 +2652,7 @@ def ml_naive_bayes_exact(spark, sf_dir):
     from pyspark.sql import Window
 
     d = load_table(spark, sf_dir, "documents")
-    toks = cache(
-        d.select(
-            "doc_id",
-            "lang",
-            F.explode(F.split(F.lower(F.trim(F.col("text"))), r"\s+")).alias("tok"),
-        )
-    )
+    toks = cache(d.select("doc_id", "lang", F.explode(tokens()).alias("tok")))
     vocab = toks.agg(F.countDistinct("tok").cast("long").alias("v"))
     class_tok = toks.groupBy(F.col("lang").alias("c"), "tok").agg(
         F.count(F.lit(1)).cast("long").alias("n")

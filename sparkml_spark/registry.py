@@ -12,6 +12,16 @@ Parity rules baked into helpers here (SURVEY.md §7.4):
   summing DECIMAL-cast inputs (aggregation-order independent) and
   casting the exact sum back to double — see `dsum` / `dsum_sql`;
 - deterministic tie-breakers everywhere order matters.
+
+Each cross-engine convention is defined once, here, as a Spark helper
+beside its DuckDB twin, so the two sides cannot drift: exact sums and
+means (`dsum`, `lsum`, `davg` and their `_sql` twins; `nano`/`nano_sum`
+for 9dp weights), the md5 hex-slice bucket (`md5_chunk16`), the
+whitespace tokenizer (`tokens`/`TOKENS_SQL`), the duplicate-detection
+content hash (`norm_hash`/`NORM_HASH_SQL`), n-gram start positions
+(`gram_idx`), window-free global ranks (`rank_two_phase`,
+`ntile_two_phase`) and the `*_bound` pin (`ZERO_VIOLATIONS`). No other
+module spells the tokenizer or the content hash (tests/test_conventions.py).
 """
 
 from __future__ import annotations
@@ -95,6 +105,41 @@ def md5_chunk16(col: Column, j: int = 0) -> Column:
     (llm_pipeline domain/token/epoch mixes, j=0) and the SimHash
     signature chunks (llm_dedup, j=0..3)."""
     return F.conv(F.substring(F.md5(col), 1 + 4 * j, 4), 16, 10).cast("long")
+
+
+def tokens() -> Column:
+    """THE whitespace tokenizer: `text` trimmed, lower-cased and split
+    on whitespace runs. DuckDB twin: `TOKENS_SQL`. Select the array into
+    a column before a lambda reads it: a split() in a lambda body runs
+    again per element (llm_dedup._shingled3)."""
+    return F.split(F.lower(F.trim(F.col("text"))), r"\s+")
+
+
+#: DuckDB twin of `tokens`.
+TOKENS_SQL = "string_split_regex(lower(trim(text)), '\\s+')"
+
+
+def norm_hash() -> Column:
+    """THE duplicate-detection content hash: md5 of `text` with each
+    whitespace run collapsed to one space, trimmed and lower-cased.
+    DuckDB twin: `NORM_HASH_SQL` (its 'g' flag replaces every run)."""
+    return F.md5(F.lower(F.trim(F.regexp_replace("text", r"\s+", " "))))
+
+
+#: DuckDB twin of `norm_hash`.
+NORM_HASH_SQL = "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
+
+
+def gram_idx(toks: Column, n: int) -> Column:
+    """Ascending n-gram start positions 1..size-(n-1), EMPTY for docs
+    shorter than n tokens. DuckDB twin: `range(1, len(t) - n + 2)`.
+    Spark's bare sequence(1, size-(n-1)) DESCENDS (default step -1)
+    below n tokens, and element_at then throws INVALID_INDEX_OF_ZERO /
+    INVALID_ARRAY_INDEX_IN_ELEMENT_AT under the default ANSI mode."""
+    upper = F.size(toks) - (n - 1)
+    return F.when(upper >= 1, F.sequence(F.lit(1), upper)).otherwise(
+        F.array().cast("array<int>")
+    )
 
 
 def lsum(col: Column | str) -> Column:

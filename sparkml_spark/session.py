@@ -17,6 +17,7 @@ from __future__ import annotations
 
 import os
 import threading
+from dataclasses import dataclass, field
 
 from pyspark.sql import SparkSession
 from pyspark.storagelevel import StorageLevel
@@ -57,7 +58,36 @@ PERF_SQL_CONFS: dict[str, str] = {
 }
 
 
-_confs_applied: set[str] = set()
+@dataclass
+class ContextState:
+    """Everything the engine keeps for one SparkContext. PySpark runs
+    one SparkContext per process, so when `applicationId` changes the
+    old context is stopped and its state is replaced whole: nothing it
+    held can be freed or served any more."""
+
+    app_id: str | None
+    confs_applied: bool = False
+    #: (sf_dir, table) -> the loader's repaired, lazy DataFrame
+    tables: dict = field(default_factory=dict)
+    #: `session_artifact` key -> memoized artifact
+    artifacts: dict = field(default_factory=dict)
+    #: checkpoint's block-owning RDD id | cached DataFrame
+    pinned: list = field(default_factory=list)
+
+
+_STATE = ContextState(None)
+#: foreachBatch handlers pin blocks on Spark's callback thread.
+_STATE_LOCK = threading.RLock()
+
+
+def context_state(spark: SparkSession) -> ContextState:
+    """The live SparkContext's state, replaced whole on a new applicationId."""
+    global _STATE
+    app_id = spark.sparkContext.applicationId
+    with _STATE_LOCK:
+        if _STATE.app_id != app_id:
+            _STATE = ContextState(app_id)
+        return _STATE
 
 
 def ensure_confs(spark: SparkSession) -> SparkSession:
@@ -68,8 +98,8 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
     loader calls this on every table load, and each conf.set is a Py4J
     round trip we don't want 1000s of.
     """
-    app_id = spark.sparkContext.applicationId
-    if app_id in _confs_applied:
+    state = context_state(spark)
+    if state.confs_applied:
         return spark
     for k, v in REQUIRED_SQL_CONFS.items():
         spark.conf.set(k, v)
@@ -78,7 +108,7 @@ def ensure_confs(spark: SparkSession) -> SparkSession:
             spark.conf.set(k, v)
         except Exception:
             pass  # perf conf locked by the host — correctness unaffected
-    _confs_applied.add(app_id)
+    state.confs_applied = True
     return spark
 
 
@@ -112,6 +142,13 @@ ARTIFACTS_DIR = os.path.join(
 )
 
 
+def artifact_path(name: str, sf_dir: str) -> str:
+    """Path of an artifact written from `sf_dir`'s tables, keyed by the
+    scale, so builds at two scales in one checkout never share files."""
+    os.makedirs(ARTIFACTS_DIR, exist_ok=True)
+    return os.path.join(ARTIFACTS_DIR, f"{name}_{os.path.basename(sf_dir.rstrip('/'))}")
+
+
 # ---------------------------------------------------------------------------
 # Session-scoped artifact sharing. Sibling queries (a base query and the
 # *_bound pin that audits it) need the same DETERMINISTIC artifacts:
@@ -120,9 +157,8 @@ ARTIFACTS_DIR = os.path.join(
 # deterministic artifacts belong here: the memoized object equals the
 # rebuild it replaces, so no output depends on which sibling ran first.
 #
-# - Every key starts with the live applicationId, so a fresh process or
-#   session always rebuilds from the parquet inputs; nothing survives
-#   the process.
+# - Artifacts live in the live context's `ContextState`, so a fresh
+#   process or session always rebuilds them from the parquet inputs.
 # - Fitted models go through `operators/ml.py::_shared_fit`, whose key
 #   is derived from the inputs: the estimator's class and param map plus
 #   the training frame's analyzed-plan semanticHash, checked with
@@ -137,20 +173,13 @@ ARTIFACTS_DIR = os.path.join(
 #   which no plan describes.
 # ---------------------------------------------------------------------------
 
-_ARTIFACTS: dict[tuple, object] = {}
-
-
 def session_artifact(spark: SparkSession, key: tuple, build):
-    """Return the memoized artifact for (applicationId, *key), building
-    it with `build()` on first use in this session. Entries from
-    stopped sessions are evicted on the next miss (their JVM side is
-    gone; the py4j refs are dead weight)."""
-    k = (spark.sparkContext.applicationId, *key)
-    if k not in _ARTIFACTS:
-        for stale in [x for x in _ARTIFACTS if x[0] != k[0]]:
-            del _ARTIFACTS[stale]
-        _ARTIFACTS[k] = build()
-    return _ARTIFACTS[k]
+    """Return the live context's artifact for `key`, building it with
+    `build()` on first use in this session."""
+    memo = context_state(spark).artifacts
+    if key not in memo:
+        memo[key] = build()
+    return memo[key]
 
 
 # ---------------------------------------------------------------------------
@@ -182,22 +211,10 @@ def session_artifact(spark: SparkSession, key: tuple, build):
 # reaps and keeps the GC backstop.
 # ---------------------------------------------------------------------------
 
-#: (applicationId, checkpoint's block-owning RDD id | cached DataFrame)
-_PINNED: list[tuple[str, object]] = []
-#: foreachBatch handlers pin blocks on Spark's callback thread.
-_PINNED_LOCK = threading.Lock()
-
-
 def _pin(df, entry):
-    """Register `entry` for `df`'s application and return `df`. Entries
-    of other applications are dropped first: their SparkContext is
-    stopped, so there is nothing left to free, and a driver that never
-    reaps must not keep them forever."""
-    app = df.sparkSession.sparkContext.applicationId
-    with _PINNED_LOCK:
-        if _PINNED and _PINNED[0][0] != app:
-            _PINNED.clear()
-        _PINNED.append((app, entry))
+    """Register `entry` in `df`'s context state and return `df`."""
+    with _STATE_LOCK:
+        context_state(df.sparkSession).pinned.append(entry)
     return df
 
 
@@ -263,11 +280,10 @@ def reap_registered(spark: SparkSession) -> int:
     the number of registered caches. ONLY call between queries, after
     the previous query's result is fully consumed (see the comment
     above)."""
-    sc = spark.sparkContext
-    with _PINNED_LOCK:
-        mine = [e for a, e in _PINNED if a == sc.applicationId]
-        _PINNED.clear()
-    n = _free_rdds(sc, [e for e in mine if isinstance(e, int)])
+    with _STATE_LOCK:
+        state = context_state(spark)
+        mine, state.pinned = state.pinned, []
+    n = _free_rdds(spark.sparkContext, [e for e in mine if isinstance(e, int)])
     for df in mine:
         if not isinstance(df, int):
             df.unpersist(False)

@@ -24,13 +24,8 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from sparkml_spark.registry import ZERO_VIOLATIONS, query
-from sparkml_spark.session import ARTIFACTS_DIR, cache
+from sparkml_spark.session import artifact_path, cache
 from sparkml_spark.sources.loader import load_table
-
-
-def _artifact(name: str) -> str:
-    os.makedirs(ARTIFACTS_DIR, exist_ok=True)
-    return os.path.join(ARTIFACTS_DIR, name)
 
 
 _NATION_SCHEMA = T.StructType(
@@ -51,7 +46,7 @@ def scan_csv(spark, sf_dir):
     """CSV round-trip with explicit schema: nation → csv → read back ≡
     the original table (header on, explicit types — no inference)."""
     n = load_table(spark, sf_dir, "nation")
-    path = _artifact("nation_csv")
+    path = artifact_path("nation_csv", sf_dir)
     n.select("n_nationkey", "n_name", "n_regionkey").write.mode("overwrite").option(
         "header", True
     ).csv(path)
@@ -66,7 +61,7 @@ def scan_csv(spark, sf_dir):
 def scan_json(spark, sf_dir):
     """JSON-lines round-trip with explicit schema."""
     n = load_table(spark, sf_dir, "nation")
-    path = _artifact("nation_json")
+    path = artifact_path("nation_json", sf_dir)
     n.select("n_nationkey", "n_name", "n_regionkey").write.mode("overwrite").json(path)
     return spark.read.schema(_NATION_SCHEMA).json(path)
 
@@ -82,7 +77,7 @@ def scan_text_lines(spark, sf_dir):
     documents.text written as text lines, read back ≡ the originals
     (fixture text is single-line, so the line framing is lossless)."""
     d = load_table(spark, sf_dir, "documents")
-    path = _artifact("documents_text")
+    path = artifact_path("documents_text", sf_dir)
     d.select("text").write.mode("overwrite").text(path)
     return spark.read.text(path)
 
@@ -102,7 +97,7 @@ def sink_parquet_partitioned(spark, sf_dir):
     on reads and independent per-partition writers), read back, and
     per-partition counts checked against the source table."""
     d = load_table(spark, sf_dir, "documents")
-    path = _artifact("documents_by_lang")
+    path = artifact_path("documents_by_lang", sf_dir)
     d.write.mode("overwrite").partitionBy("lang").parquet(path)
     back = spark.read.parquet(path)
     return back.groupBy("lang").agg(F.count(F.lit(1)).alias("n_docs"))
@@ -125,7 +120,7 @@ def scan_orc(spark, sf_dir):
     Spark; the oracle runs on the original parquet (DuckDB reads no
     ORC), so the check still hash-compares real values."""
     li = load_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_returnflag")
-    path = _artifact("lineitem_orc")
+    path = artifact_path("lineitem_orc", sf_dir)
     li.write.mode("overwrite").orc(path)
     back = spark.read.orc(path)
     return back.groupBy("l_returnflag").agg(F.count(F.lit(1)).alias("n_rows"))
@@ -149,7 +144,7 @@ def scan_partition_pruned(spark, sf_dir):
     reads the unpartitioned source — value parity proves the layout
     round-trips content exactly."""
     d = load_table(spark, sf_dir, "documents")
-    path = _artifact("documents_pruned_scan")
+    path = artifact_path("documents_pruned_scan", sf_dir)
     d.select("doc_id", "n_chars", "lang").write.mode("overwrite").partitionBy(
         "lang"
     ).parquet(path)
@@ -173,7 +168,7 @@ def sink_json_lines(spark, sf_dir):
     values checked against the parquet source. Doubles survive because
     Spark serializes them with round-trippable shortest-repr."""
     e = load_table(spark, sf_dir, "events")
-    path = _artifact("events_signup_json")
+    path = artifact_path("events_signup_json", sf_dir)
     sel = e.filter(F.col("event_type") == "signup").select(
         "event_id", "event_type", "user_id", "value"
     )
@@ -207,9 +202,9 @@ def compact_small_files(spark, sf_dir):
     bytes/128MB); with AQE coalesce a `.coalesce(n)` variant avoids
     the extra shuffle when range layout isn't required."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    src = _artifact("compact_src")
+    src = artifact_path("compact_src", sf_dir)
     d.repartition(64).write.mode("overwrite").parquet(src)
-    dst = _artifact("compact_dst")
+    dst = artifact_path("compact_dst", sf_dir)
     (
         spark.read.parquet(src)
         .repartitionByRange(4, "doc_id")
@@ -244,9 +239,9 @@ def compact_small_files_bound(spark, sf_dir):
     files than the 64 input shards). Violations = content-diff rows +
     1 if no consolidation; oracle pins 0."""
     d = load_table(spark, sf_dir, "documents").select("doc_id", "lang", "n_chars")
-    src = _artifact("compact_bound_src")
+    src = artifact_path("compact_bound_src", sf_dir)
     d.repartition(64).write.mode("overwrite").parquet(src)
-    dst = _artifact("compact_bound_dst")
+    dst = artifact_path("compact_bound_dst", sf_dir)
     (
         spark.read.parquet(src)
         .repartitionByRange(4, "doc_id")
@@ -294,7 +289,7 @@ def scan_csv_malformed(spark, sf_dir):
     expected-constants oracle (the synthetic input is fixed: 100 clean
     + 10 type-corrupt rows, clean sum 49500) — PERMISSIVE must
     quarantine exactly the corrupt rows and lose none."""
-    path = _artifact("malformed_csv")
+    path = artifact_path("malformed_csv", sf_dir)
     os.makedirs(path, exist_ok=True)
     with open(os.path.join(path, "part-0.csv"), "w") as fh:
         fh.write("id,kind,amount\n")
@@ -349,7 +344,7 @@ def scan_schema_evolution(spark, sf_dir):
     schema over per-query footer merging). Oracle reconstructs the
     same union from the flat table."""
     d = load_table(spark, sf_dir, "documents")
-    path = _artifact("documents_evolving")
+    path = artifact_path("documents_evolving", sf_dir)
     v1 = d.filter(F.col("doc_id") < 100).select("doc_id", "lang")
     v2 = d.filter(F.col("doc_id") >= 100).select("doc_id", "lang", "n_chars")
     v1.write.mode("overwrite").parquet(os.path.join(path, "batch=v1"))
@@ -427,7 +422,7 @@ def scan_xml(spark, sf_dir):
     to parquet, never query XML in place. Oracle reads the flat
     fixture the artifact was derived from."""
     n = load_table(spark, sf_dir, "nation")
-    path = _artifact("nation_xml")
+    path = artifact_path("nation_xml", sf_dir)
     n.select("n_nationkey", "n_name", "n_regionkey").write.mode("overwrite").option(
         "rowTag", "nation"
     ).format("xml").save(path)
@@ -467,7 +462,7 @@ def scan_binary_files(spark, sf_dir):
     import shutil
 
     d = load_table(spark, sf_dir, "documents")
-    path = _artifact(f"blobs_{os.path.basename(sf_dir.rstrip('/'))}")
+    path = artifact_path("blobs", sf_dir)
     shutil.rmtree(path, ignore_errors=True)
     os.makedirs(path, exist_ok=True)
 

@@ -26,7 +26,7 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
-from sparkml_spark.session import ensure_confs
+from sparkml_spark.session import context_state, ensure_confs
 
 TABLES = (
     "region",
@@ -43,17 +43,15 @@ TABLES = (
 
 DEFAULT_SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 
-# Logical-plan cache: keyed by (app id, sf_dir, table). DataFrames are
-# lazy plans, so this only saves repeated parquet-footer reads when the
-# driver runs ~70 queries against the same sf_dir — no data is pinned.
-_cache: dict[tuple[str, str, str], DataFrame] = {}
-
 
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
     """Load one fixture table with schema repair applied."""
     ensure_confs(spark)  # driver-provided sessions lack nanosAsLong
-    key = (spark.sparkContext.applicationId, sf_dir, name)
-    df = _cache.get(key)
+    # The live context's plan cache. DataFrames are lazy plans, so this
+    # only saves repeated parquet-footer reads — no data is pinned.
+    tables = context_state(spark).tables
+    key = (sf_dir, name)
+    df = tables.get(key)
     if df is None:
         df = spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
         if name == "events" and dict(df.dtypes).get("ts") == "bigint":
@@ -70,7 +68,7 @@ def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
         for col, dtype in df.dtypes:
             if dtype == "timestamp":
                 df = df.withColumn(col, F.col(col).cast("timestamp_ntz"))
-        _cache[key] = df
+        tables[key] = df
     return df
 
 

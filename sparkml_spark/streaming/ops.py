@@ -1297,7 +1297,7 @@ def stream_incremental_refresh(spark, sf_dir):
     it is the maintained bucketed digest table, appended (not
     rebuilt) with each day's accepted digests."""
     from sparkml_spark.functions.subword import refresh_manifest_incr
-    from sparkml_spark.operators.llm_dedup import _norm
+    from sparkml_spark.registry import norm_hash
     from sparkml_spark.session import CheckpointChain
     from sparkml_spark.sources.loader import load_table as _lt
 
@@ -1331,7 +1331,7 @@ def stream_incremental_refresh(spark, sf_dir):
                     "contains arriving-day rows — the feed's mtime "
                     "ordering did not deliver the corpus file first"
                 )
-            state["index"] = chain.step(d.select(_norm().alias("h")))
+            state["index"] = chain.step(d.select(norm_hash().alias("h")))
             state["replays"] = chain.step(
                 d.filter(F.col("doc_id") % 20 == 0)
                 .select((F.col("doc_id") + _DUP_OFFSET).alias("doc_id"), "text")

@@ -71,7 +71,7 @@ def test_memo_pair_sibling_builds_nothing(spark, builds, bases, sibling):
 
     from sparkml_spark.operators.ml import _fitted
     from sparkml_spark.registry import QUERIES
-    from sparkml_spark.session import _ARTIFACTS, reap_registered
+    from sparkml_spark.session import context_state, reap_registered
 
     for base in bases:
         QUERIES[base](spark, SF_DIR)
@@ -80,8 +80,8 @@ def test_memo_pair_sibling_builds_nothing(spark, builds, bases, sibling):
     reap_registered(spark)
     assert builds == [], f"{sibling} rebuilt artifacts of {bases}: {builds}"
 
-    app = spark.sparkContext.applicationId
-    models = [v[1] for k, v in _ARTIFACTS.items() if k[0] == app and isinstance(v, tuple)]
+    memo = context_state(spark).artifacts
+    models = [v[1] for v in memo.values() if isinstance(v, tuple)]
     assert models, "expected memoized models"
     with_summary = [
         type(m).__name__
@@ -96,7 +96,9 @@ def test_memo_key_follows_inputs(spark, builds):
     from pyspark.ml.classification import NaiveBayes
 
     from sparkml_spark.operators.ml import _features, _shared_fit, _train_test
-    from sparkml_spark.session import _ARTIFACTS
+    from sparkml_spark.session import context_state
+
+    memo = context_state(spark).artifacts
 
     def train(sf_dir=SF_DIR):
         return _train_test(_features(spark, sf_dir))[0]
@@ -119,31 +121,30 @@ def test_memo_key_follows_inputs(spark, builds):
 
     # a key hit whose stored plan is not the same result (a semanticHash
     # collision) refits rather than serving the stored model
-    key = next(k for k, v in _ARTIFACTS.items() if isinstance(v, tuple) and v[1] is first)
-    stored = _ARTIFACTS[key]
+    key = next(k for k, v in memo.items() if isinstance(v, tuple) and v[1] is first)
+    stored = memo[key]
     other = _features(spark, SF_DIR).filter(F.col("vec_id") % 5 != 1)
-    _ARTIFACTS[key] = (other._jdf.queryExecution().analyzed(), first)
+    memo[key] = (other._jdf.queryExecution().analyzed(), first)
     try:
         assert _shared_fit(nb, train()) is not first
     finally:
-        _ARTIFACTS[key] = stored
+        memo[key] = stored
 
 
 def test_cold_refit_matches_memo(spark, builds):
     from sparkml_spark.registry import QUERIES
-    from sparkml_spark.session import _ARTIFACTS
+    from sparkml_spark.session import context_state
 
     memo_rows = sorted(map(tuple, QUERIES["ml_classify_logistic"](spark, SF_DIR).collect()))
-    app = spark.sparkContext.applicationId
-    live = {k: v for k, v in _ARTIFACTS.items() if k[0] == app}
-    for k in live:
-        del _ARTIFACTS[k]
+    memo = context_state(spark).artifacts
+    live = dict(memo)
+    memo.clear()
     del builds[:]
     try:
         cold_rows = sorted(
             map(tuple, QUERIES["ml_classify_logistic"](spark, SF_DIR).collect())
         )
     finally:
-        _ARTIFACTS.update(live)
+        memo.update(live)
     assert builds, "expected the evicted fit to be rebuilt"
     assert cold_rows == memo_rows

@@ -7,12 +7,15 @@ duplicate docs)."""
 from __future__ import annotations
 
 import math
+import os
 
+import pytest
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 import sparkml_spark.operators  # noqa: F401  (fills the registry)
 from sparkml_spark.registry import QUERIES, dsum
+from sparkml_spark.sources.loader import load_table
 
 from .conftest import SF_DIR
 
@@ -369,8 +372,7 @@ def test_gram_builders_survive_short_docs(spark):
     INVALID_INDEX_OF_ZERO / out-of-bounds crash (ANSI sequence() steps
     DOWN when start > stop — verified live; the oracle's range() yields
     empty, so empty is also the parity-correct answer)."""
-    from sparkml_spark.operators.llm_dedup import _gram4_idx
-    from sparkml_spark.operators.llm_text import _gram_idx
+    from sparkml_spark.registry import gram_idx
 
     df = spark.createDataFrame(
         [(1, ""), (2, "one"), (3, "two words"), (4, "a b c"), (5, "a b c d e")],
@@ -381,13 +383,14 @@ def test_gram_builders_survive_short_docs(spark):
         r["doc_id"]: (r["n2"], r["n3f"], r["n4"])
         for r in df.select(
             "doc_id",
-            F.size(F.transform(_gram_idx(toks, 2), lambda i: F.element_at(toks, i))).alias("n2"),
-            F.size(_gram4_idx(toks)).alias("n3f"),
-            F.size(F.transform(_gram_idx(toks, 4), lambda i: F.element_at(toks, i))).alias("n4"),
+            F.size(F.transform(gram_idx(toks, 2), lambda i: F.element_at(toks, i))).alias("n2"),
+            F.size(gram_idx(toks, 4)).alias("n3f"),
+            F.size(F.transform(gram_idx(toks, 4), lambda i: F.element_at(toks, i))).alias("n4"),
         ).collect()
     }
-    # bigram count = max(size-1, 0); _gram4_idx pins 1..size-3 (the
-    # jaccard oracle's shape); 4-gram count = max(size-3, 0).
+    # bigram count = max(size-1, 0); _shingled3's start positions
+    # gram_idx(toks, 4) pin 1..size-3 (the jaccard oracle's shape);
+    # 4-gram count = max(size-3, 0).
     assert got == {
         1: (0, 0, 0),   # "" splits to [""] -> size 1
         2: (0, 0, 0),
@@ -453,6 +456,18 @@ def test_compaction_preserves_rows_and_bounds_file_count(spark):
     assert rows["before"]["total_rows"] == rows["after"]["total_rows"]
     assert rows["before"]["n_files"] > rows["after"]["n_files"]
     assert rows["after"]["n_files"] <= 4
+
+
+def test_artifacts_are_keyed_by_scale(spark):
+    """Building compact_small_files at a second scale must not rewrite
+    the files a frame built at the first scale reads."""
+    sf01 = os.path.join(os.path.dirname(os.path.normpath(SF_DIR)), "sf0.01")
+    if not os.path.isdir(sf01) or os.path.normpath(SF_DIR) == sf01:
+        pytest.skip("needs a second fixture scale")
+    small = QUERIES["compact_small_files"](spark, SF_DIR)
+    QUERIES["compact_small_files"](spark, sf01).collect()
+    n_docs = load_table(spark, SF_DIR, "documents").count()
+    assert sorted(r["total_rows"] for r in small.collect()) == [n_docs, n_docs]
 
 
 def test_bpe_fertility_bound_zero_violations_across_scales(spark):

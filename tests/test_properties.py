@@ -310,7 +310,7 @@ def test_gram_idx_never_descends_counts_match(spark, texts):
     class) and (b) emit exactly max(0, n_tokens-(n-1)) n-grams — the
     count DuckDB's range(...) produces, which is what keeps oracle
     parity for any future fixture population."""
-    from sparkml_spark.operators.llm_text import _gram_idx
+    from sparkml_spark.registry import gram_idx
 
     df = spark.createDataFrame(
         [(i, t) for i, t in enumerate(texts)], "doc_id long, text string"
@@ -318,10 +318,10 @@ def test_gram_idx_never_descends_counts_match(spark, texts):
     toks = F.split(F.lower(F.trim(F.col("text"))), r"\s+")
     out = df.select(
         F.size(toks).alias("n_tok"),
-        F.size(F.transform(_gram_idx(toks, 2), lambda i: F.element_at(toks, i))).alias("n2"),
+        F.size(F.transform(gram_idx(toks, 2), lambda i: F.element_at(toks, i))).alias("n2"),
         F.size(
             F.transform(
-                _gram_idx(toks, 3),
+                gram_idx(toks, 3),
                 lambda i: F.concat_ws(
                     " ", F.element_at(toks, i), F.element_at(toks, i + 1), F.element_at(toks, i + 2)
                 ),
@@ -643,13 +643,13 @@ def test_split_leakage_repair_closes_leaks(spark):
     i.e. the op's fixpoint is leak-free."""
     from pyspark.sql import functions as F
 
-    from sparkml_spark.operators.llm_dedup import _corpus_with_dups, _norm
+    from sparkml_spark.operators.llm_dedup import _corpus_with_dups
     from sparkml_spark.operators.llm_pipeline import (
         _SPLIT_TRAIN,
         _SPLIT_VAL,
         pipeline_split_leakage,
     )
-    from sparkml_spark.registry import md5_chunk16
+    from sparkml_spark.registry import md5_chunk16, norm_hash
 
     from .conftest import SF_DIR
 
@@ -665,7 +665,7 @@ def test_split_leakage_repair_closes_leaks(spark):
         .otherwise("test")
     )
     assigned = corpus.select(
-        "doc_id", _norm().alias("content_hash"), split.alias("split")
+        "doc_id", norm_hash().alias("content_hash"), split.alias("split")
     )
     repaired = (
         assigned.join(

@@ -3,14 +3,17 @@
 is pinned, so `session.reap_registered` frees it DETERMINISTICALLY at a
 sweep boundary, and a reaped query recomputes correctly when re-built.
 
-The registry holds only the live application's entries: registering
-drops what a stopped SparkContext left behind.
+Every per-SparkContext registry (applied confs, table plans, memoized
+artifacts, pinned blocks) holds only the live application's entries:
+what a stopped SparkContext left behind is dropped.
 """
 
 from __future__ import annotations
 
 import ast
+import gc
 import os
+import weakref
 
 import pytest
 
@@ -67,29 +70,48 @@ def test_cache_blocks_register_and_reap(spark):
         assert sorted(df.collect()) == rows, qid
 
 
-def test_registries_drop_dead_app_entries(spark):
+class _Probe:
+    """A memoized artifact that can be watched with a weakref."""
+
+
+def test_registries_drop_dead_app_entries(spark, monkeypatch):
+    from pyspark import SparkContext
+
     from sparkml_spark import session
+    from sparkml_spark.sources.loader import load_table
 
     session.reap_registered(spark)
-    app = spark.sparkContext.applicationId
-    # entries a stopped SparkContext left behind
-    session._PINNED.append(("app-dead", 1))
-    session._PINNED.append(("app-dead", object()))
+    app = {"id": "app-dead"}
+    monkeypatch.setattr(SparkContext, "applicationId", property(lambda sc: app["id"]))
+
+    # a context that stops with entries in every registry
+    table = load_table(spark, SF_DIR, "region")
+    artifact = session.session_artifact(spark, ("dead-probe",), _Probe)
+    pinned = spark.range(2)
+    session.cache(pinned)
+    pinned.unpersist()
+    dead = [weakref.ref(x) for x in (table, artifact, pinned)]
+    del table, artifact, pinned
+
+    # the next context re-applies the confs and holds none of them
+    app["id"] = "app-next"
+    spark.conf.set("spark.sql.session.timeZone", "America/New_York")
+    load_table(spark, SF_DIR, "region")
+    assert spark.conf.get("spark.sql.session.timeZone") == "UTC"
+    gc.collect()
+    assert [r() is None for r in dead] == [True, True, True], "table, artifact, pin"
 
     session.checkpoint(spark.range(3))
     session.cache(spark.range(4))
-    assert [a for a, _ in session._PINNED] == [app, app]
     assert session.reap_registered(spark) == 2
 
     # the chain registers each generation as it creates it; a
     # generation the chain already freed is not counted again, and the
     # final one is reaped exactly once
-    session._PINNED.append(("app-dead", 2))
     chain = session.CheckpointChain(spark)
     chain.step(spark.range(5))
     chain.step(spark.range(6))
     chain.reap()
-    assert [a for a, _ in session._PINNED] == [app, app]
     assert session.reap_registered(spark) == 1
     chain.close()
     assert session.reap_registered(spark) == 0
