@@ -220,6 +220,7 @@ def probe_semdedup(spark, k: int, sf_dir: str) -> dict:
         sem_cells,
         semdedup_within_clusters,
     )
+    from sparkml_spark.registry import q8
     from sparkml_spark.sources.formats import load_table
 
     e = load_table(spark, sf_dir, "embeddings").select("vec_id", "embedding")
@@ -232,12 +233,7 @@ def probe_semdedup(spark, k: int, sf_dir: str) -> dict:
             .select(
                 ((F.col("vec_id") + F.col("rep") * n_base) * 8 + 3).alias("vec_id"),
                 F.lit(0).alias("label"),
-                F.transform(
-                    "embedding",
-                    lambda x: F.floor(
-                        x.cast("double") * F.lit(127.0) + F.lit(0.5)
-                    ).cast("long"),
-                ).alias("q8"),
+                q8("embedding").alias("q8"),
             )
             .repartition(32)
         )

@@ -7,7 +7,8 @@
 #
 # Usage: bash scripts/verify_all.sh [--quick]
 #   --quick: fit-memo pair, ALS, reaper, timing, case-mapping,
-#            weight-sum plan, text-convention and artifact-scale tests
+#            weight-sum plan, convention, vector-twin and artifact-scale
+#            tests
 #            + sf0.01 sim + bench only (skips the rest of pytest and the
 #            other scales)
 set -u
@@ -79,11 +80,13 @@ else
     tests/test_case_mapping.py \
     tests/test_plans.py::test_broadcast_weight_sums_are_long \
     -q -x -p no:cacheprovider
-  # Text conventions: no module but registry.py spells the tokenizer or
-  # the content hash (static); artifacts written at two scales in one
+  # Text and vector conventions: no module but registry.py spells the
+  # tokenizer, the content hash, the int8 grid or a vector product fold
+  # (static); each vector helper equals its DuckDB twin row for row
+  # (sf0.001 + hand-built ties); artifacts written at two scales in one
   # session never share a path (sf0.001 + sf0.01).
   run "conventions + artifact scale" timeout 600 python -m pytest \
-    tests/test_conventions.py \
+    tests/test_conventions.py tests/test_vector_twins.py \
     tests/test_operators.py::test_artifacts_are_keyed_by_scale \
     -q -x -p no:cacheprovider
 fi

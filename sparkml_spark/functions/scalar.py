@@ -12,7 +12,16 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sparkml_spark.registry import ZERO_VIOLATIONS, dsum, dsum_sql, query
+from sparkml_spark.registry import (
+    ZERO_VIOLATIONS,
+    dot,
+    dot_sql,
+    dsum,
+    dsum_sql,
+    query,
+    sqnorm,
+    sqnorm_sql,
+)
 from sparkml_spark.sources.loader import load_table
 
 
@@ -303,10 +312,9 @@ def fn_array(spark, sf_dir):
 @query(
     "fn_higher_order",
     section="2.H",
-    oracle="""
+    oracle=f"""
 SELECT vec_id,
-       round(list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 6)
-         AS norm_sq,
+       round({sqnorm_sql('embedding')}, 6) AS norm_sq,
        len(list_filter(embedding, x -> x > 0.1)) AS n_big,
        len(list_filter(embedding, x -> x > 0.9)) > 0 AS any_huge,
        len(list_filter(embedding, x -> x < 1.0)) = len(embedding) AS all_below_one
@@ -318,11 +326,9 @@ def fn_higher_order(spark, sf_dir):
     forall. Floats are cast to double BEFORE arithmetic and fold sums
     are rounded at 6 dp (fold order is engine-internal)."""
     e = load_table(spark, sf_dir, "embeddings")
-    dbl = F.transform("embedding", lambda x: x.cast("double") * x.cast("double"))
-    norm_sq = F.aggregate(dbl, F.lit(0.0), lambda acc, v: acc + v)
     return e.select(
         "vec_id",
-        F.round(norm_sq, 6).alias("norm_sq"),
+        F.round(sqnorm("embedding"), 6).alias("norm_sq"),
         F.size(F.filter("embedding", lambda x: x > 0.1)).alias("n_big"),
         F.exists("embedding", lambda x: x > 0.9).alias("any_huge"),
         F.forall("embedding", lambda x: x < 1.0).alias("all_below_one"),
@@ -420,46 +426,31 @@ def fn_json_struct(spark, sf_dir):
 @query(
     "fn_vector",
     section="2.H",
-    oracle="""
+    oracle=f"""
 SELECT a.vec_id AS vec_id,
-       round(list_sum(list_transform(a.embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 6)
-         AS norm_sq,
-       round(
-         list_sum(
-           list_transform(
-             list_zip(a.embedding, b.embedding),
-             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))),
-         6) AS dot_next,
+       round({sqnorm_sql('a.embedding')}, 6) AS norm_sq,
+       round({dot_sql('a.embedding', 'b.embedding')}, 6) AS dot_next,
        a.label AS label
 FROM embeddings a JOIN embeddings b ON b.vec_id = a.vec_id + 1
 """,
 )
 def fn_vector(spark, sf_dir):
     """Vector math as SQL expressions: squared L2 norm (≈1, unit
-    vectors) and dot product with the next vector. zip_with + fold stay
-    entirely in codegen — this is the scale path for similarity ops
-    (embeddings are unit-norm so dot ≡ cosine)."""
+    vectors) and dot product with the next vector, through
+    `registry.sqnorm`/`registry.dot` (embeddings are unit-norm so
+    dot ≡ cosine). The folds are built-in higher-order functions, not
+    UDFs, but they run interpreted (`CodegenFallback`, registry.py)."""
     e = load_table(spark, sf_dir, "embeddings")
     a = e.select(
         F.col("vec_id"), F.col("embedding").alias("emb_a"), F.col("label")
     )
     b = e.select((F.col("vec_id") - 1).alias("prev_id"), F.col("embedding").alias("emb_b"))
-    dot = F.aggregate(
-        F.zip_with("emb_a", "emb_b", lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    norm_sq = F.aggregate(
-        F.transform("emb_a", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     return (
         a.join(b, a.vec_id == b.prev_id)
         .select(
             "vec_id",
-            F.round(norm_sq, 6).alias("norm_sq"),
-            F.round(dot, 6).alias("dot_next"),
+            F.round(sqnorm("emb_a"), 6).alias("norm_sq"),
+            F.round(dot("emb_a", "emb_b"), 6).alias("dot_next"),
             "label",
         )
     )

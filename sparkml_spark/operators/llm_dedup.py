@@ -16,11 +16,25 @@ Scale design notes:
 
 from __future__ import annotations
 
+import math
+
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
 from sparkml_spark.registry import (
-    NORM_HASH_SQL, TOKENS_SQL, ZERO_VIOLATIONS, gram_idx, md5_chunk16, norm_hash, query, tokens
+    NORM_HASH_SQL,
+    Q8_SCALE,
+    TOKENS_SQL,
+    ZERO_VIOLATIONS,
+    dot_sql,
+    gram_idx,
+    idot_sql,
+    md5_chunk16,
+    norm_hash,
+    q8,
+    q8_sql,
+    query,
+    tokens,
 )
 from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
@@ -550,11 +564,9 @@ _EMB_BLOCKS = 8
     oracle=f"""
 WITH corpus AS ({_EMB_CORPUS_SQL})
 SELECT a.vec_id AS id_a, b.vec_id AS id_b,
-       round(list_sum(list_transform(list_zip(a.embedding, b.embedding),
-             p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))), 6) AS cosine
+       round({dot_sql('a.embedding', 'b.embedding')}, 6) AS cosine
 FROM corpus a JOIN corpus b ON a.vec_id < b.vec_id
-WHERE list_sum(list_transform(list_zip(a.embedding, b.embedding),
-      p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) > 0.9
+WHERE {dot_sql('a.embedding', 'b.embedding')} > 0.9
 """,
 )
 def dedup_embedding_cosine(spark, sf_dir):
@@ -1139,11 +1151,7 @@ def dedup_minhash_recall_bound(spark, sf_dir):
 #: 64-d unit vectors pair at cosine ~ N(0, 1/64) (sigma ~ 0.125), so
 #: 0.78 is > 6 sigma above chance — only the injected exact copies
 #: (cosine 1.0) clear it; no flaky near-threshold pairs.
-_SEM_QDOT_MIN = 12580  # floor(0.78 * 127 * 127) = floor(12580.62)
-
-_SEM_Q8_SQL = (
-    "list_transform(embedding, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 + 0.5) AS BIGINT))"
-)
+_SEM_QDOT_MIN = math.floor(0.78 * Q8_SCALE**2)  # floor(12580.62) = 12580
 
 #: Cluster-size cap (VERDICT r7 #3): clusters larger than this are
 #: split into ceil(size / cap) deterministic sub-cells before the
@@ -1164,12 +1172,11 @@ WITH corpus AS (
   SELECT vec_id + {_DUP_OFFSET} AS vec_id, label, embedding
   FROM embeddings WHERE vec_id % 25 = 0
 ), qz AS (
-  SELECT vec_id, label, {_SEM_Q8_SQL} AS q8 FROM corpus
+  SELECT vec_id, label, {q8_sql('embedding')} AS q8 FROM corpus
 ), dup AS (
   SELECT b.vec_id AS vec_id, MIN(a.vec_id) AS keeper_id
   FROM qz a JOIN qz b ON a.label = b.label AND a.vec_id < b.vec_id
-  WHERE list_sum(list_transform(list_zip(a.q8, b.q8), p -> p[1] * p[2]))
-        >= {_SEM_QDOT_MIN}
+  WHERE {idot_sql('a.q8', 'b.q8')} >= {_SEM_QDOT_MIN}
   GROUP BY b.vec_id
 )
 SELECT c.vec_id, c.label AS cluster, dup.keeper_id,
@@ -1219,14 +1226,7 @@ def dedup_semantic_semdedup(spark, sf_dir):
         (F.col("vec_id") + _DUP_OFFSET).alias("vec_id"), "label", "embedding"
     )
     corpus = e.select("vec_id", "label", "embedding").unionByName(dups)
-    qz = corpus.select(
-        "vec_id",
-        "label",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * F.lit(127.0) + F.lit(0.5)).cast("long"),
-        ).alias("q8"),
-    )
+    qz = corpus.select("vec_id", "label", q8("embedding").alias("q8"))
     return semdedup_within_clusters(qz)
 
 

@@ -18,26 +18,25 @@ from __future__ import annotations
 from pyspark.sql import Window
 from pyspark.sql import functions as F
 
-from sparkml_spark.registry import ZERO_VIOLATIONS, query
+from sparkml_spark.registry import (
+    ZERO_VIOLATIONS,
+    dot,
+    dot_sql,
+    idot,
+    idot_sql,
+    isqdist,
+    isqdist_sql,
+    q8,
+    q8_sql,
+    query,
+    sqnorm,
+    sqnorm_sql,
+)
 from sparkml_spark.session import artifact_path, cache
 from sparkml_spark.sources.loader import load_table
 
 _N_QUERIES = 10
 _K = 5
-
-
-def _dot(a: str, b: str):
-    return F.aggregate(
-        F.zip_with(a, b, lambda x, y: x.cast("double") * y.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-
-
-_DOT_SQL = (
-    "list_sum(list_transform(list_zip({a}, {b}), "
-    "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
-)
 
 
 @query(
@@ -47,10 +46,10 @@ _DOT_SQL = (
 WITH q AS (SELECT vec_id, embedding FROM embeddings WHERE vec_id < {_N_QUERIES}),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {_DOT_SQL.format(a='q.embedding', b='c.embedding')} AS dot,
+         {dot_sql('q.embedding', 'c.embedding')} AS dot,
          row_number() OVER (
            PARTITION BY q.vec_id
-           ORDER BY {_DOT_SQL.format(a='q.embedding', b='c.embedding')} DESC,
+           ORDER BY {dot_sql('q.embedding', 'c.embedding')} DESC,
                     c.vec_id ASC) AS rank
   FROM q JOIN embeddings c ON c.vec_id <> q.vec_id
 )
@@ -77,7 +76,7 @@ def sim_topk_bruteforce(spark, sf_dir):
     return (
         F.broadcast(q)
         .join(c, F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("dot", _dot("q_emb", "c_emb"))
+        .withColumn("dot", dot("q_emb", "c_emb"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _K)
         .select("query_id", "neighbor_id", F.round("dot", 6).alias("cosine"), "rank")
@@ -94,7 +93,7 @@ scored AS (
   SELECT q.vec_id AS query_id, c.label AS label,
          row_number() OVER (
            PARTITION BY q.vec_id
-           ORDER BY {_DOT_SQL.format(a='q.embedding', b='c.embedding')} DESC,
+           ORDER BY {dot_sql('q.embedding', 'c.embedding')} DESC,
                     c.vec_id ASC) AS rank
   FROM q JOIN c ON true
 ), votes AS (
@@ -134,7 +133,7 @@ def knn_label_vote(spark, sf_dir):
     return (
         F.broadcast(q)
         .crossJoin(c)
-        .withColumn("dot", _dot("q_emb", "c_emb"))
+        .withColumn("dot", dot("q_emb", "c_emb"))
         .withColumn("rank", F.row_number().over(w_rank))
         .filter(F.col("rank") <= 10)
         .groupBy("query_id", "label")
@@ -213,15 +212,10 @@ def ivf_probe_topk(assign, centroids, queries, k=_K, nprobe=4):
 
     At scale the posting lists are bucketed by cell so a probe touches
     nprobe/k of the data; centroids are parameter-sized (broadcast)."""
-    cdot = F.aggregate(
-        F.zip_with("q_emb", "centroid", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     w_probe = Window.partitionBy("query_id").orderBy(F.col("cdot").desc(), F.col("cell").asc())
     probes = (
         queries.crossJoin(F.broadcast(centroids))
-        .withColumn("cdot", cdot)
+        .withColumn("cdot", dot("q_emb", "centroid"))
         .withColumn("pr", F.row_number().over(w_probe))
         .filter(F.col("pr") <= nprobe)
         .select("query_id", "q_emb", "cell")
@@ -232,7 +226,7 @@ def ivf_probe_topk(assign, centroids, queries, k=_K, nprobe=4):
     ).filter(F.col("neighbor_id") != F.col("query_id"))
     w_rank = Window.partitionBy("query_id").orderBy(F.col("dot").desc(), F.col("neighbor_id").asc())
     return (
-        cands.withColumn("dot", _dot("q_emb", "c_emb"))
+        cands.withColumn("dot", dot("q_emb", "c_emb"))
         .withColumn("rank", F.row_number().over(w_rank))
         .filter(F.col("rank") <= k)
         .select("query_id", "neighbor_id", "dot", "rank")
@@ -264,11 +258,11 @@ def sim_ivf_ann(spark, sf_dir):
 @query(
     "multimodal_enrich",
     section="2.I",
-    oracle="""
+    oracle=f"""
 SELECT lang, label, COUNT(*) AS n_docs,
        CAST(SUM(CAST(n_chars AS DECIMAL(18,0))) AS DOUBLE) / COUNT(*) AS avg_chars,
        CAST(SUM(CAST(round(
-           list_sum(list_transform(embedding, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE))), 9)
+           {sqnorm_sql('embedding')}, 9)
            AS DECIMAL(14,9))) AS DOUBLE) / COUNT(*) AS avg_norm_sq
 FROM documents JOIN embeddings ON doc_id = vec_id
 GROUP BY lang, label
@@ -282,13 +276,8 @@ def multimodal_enrich(spark, sf_dir):
     is order-exact."""
     d = load_table(spark, sf_dir, "documents")
     e = load_table(spark, sf_dir, "embeddings")
-    norm_sq = F.aggregate(
-        F.transform("embedding", lambda x: x.cast("double") * x.cast("double")),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
     joined = d.join(e, d.doc_id == e.vec_id).withColumn(
-        "norm_q", F.round(norm_sq, 9).cast("decimal(14,9)")
+        "norm_q", F.round(sqnorm("embedding"), 9).cast("decimal(14,9)")
     )
     return joined.groupBy("lang", "label").agg(
         F.count(F.lit(1)).alias("n_docs"),
@@ -374,28 +363,20 @@ def sim_centroid_assign(spark, sf_dir):
     )
 
 
-_Q8_SQL = (
-    "list_transform({v}, x -> CAST(floor(CAST(x AS DOUBLE) * 127.0 + 0.5) AS BIGINT))"
-)
-_IDOT_SQL = (
-    "CAST(list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2])) AS BIGINT)"
-)
-
-
 @query(
     "sim_quantized_int8",
     section="2.I",
     oracle=f"""
 WITH qz AS (
-  SELECT vec_id, {_Q8_SQL.format(v='embedding')} AS q8 FROM embeddings
+  SELECT vec_id, {q8_sql('embedding')} AS q8 FROM embeddings
 ),
 q AS (SELECT vec_id, q8 FROM qz WHERE vec_id < {_N_QUERIES}),
 scored AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         {_IDOT_SQL.format(a='q.q8', b='c.q8')} AS qdot,
+         {idot_sql('q.q8', 'c.q8')} AS qdot,
          row_number() OVER (
            PARTITION BY q.vec_id
-           ORDER BY {_IDOT_SQL.format(a='q.q8', b='c.q8')} DESC,
+           ORDER BY {idot_sql('q.q8', 'c.q8')} DESC,
                     c.vec_id ASC) AS rank
   FROM q JOIN qz c ON c.vec_id <> q.vec_id
 )
@@ -405,40 +386,30 @@ FROM scored WHERE rank <= {_K}
 )
 def sim_quantized_int8(spark, sf_dir):
     """Scalar int8 quantization for similarity at scale: embeddings are
-    unit-norm, so each dim fits [-1,1] → round-half-up to an int8 grid
-    (x*127), then rank neighbors by INTEGER dot product. This is the
-    standard 4x memory/bandwidth reduction for billion-vector corpora
+    unit-norm, so each dim maps onto the int8 grid (`registry.q8`,
+    whose docstring states the rounding contract), then neighbors rank
+    by INTEGER dot product (`registry.idot`). This is the standard 4x
+    memory/bandwidth reduction for billion-vector corpora
     (float32→int8) — candidate generation runs on the quantized
     vectors, exact float rerank only on the short list (here the pin
     IS the quantized ranking, fully integer ⇒ exact cross-engine hash,
     no float drift by construction). Quantization and dot are
-    codegen'd higher-order expressions — no UDFs, columnar all the
-    way; the top-k is the same broadcast + window shape as
-    sim_topk_bruteforce."""
+    built-in higher-order expressions — no UDFs, though they run
+    interpreted (`CodegenFallback`, registry.py); the top-k is the same
+    broadcast + window shape as sim_topk_bruteforce."""
     e = load_table(spark, sf_dir, "embeddings")
-    qz = e.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * F.lit(127.0) + F.lit(0.5)).cast("long"),
-        ).alias("q8"),
-    )
+    qz = e.select("vec_id", q8("embedding").alias("q8"))
     q = qz.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("q8").alias("q_q8")
     )
     c = qz.select(F.col("vec_id").alias("neighbor_id"), F.col("q8").alias("c_q8"))
-    idot = F.aggregate(
-        F.zip_with("q_q8", "c_q8", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     w = Window.partitionBy("query_id").orderBy(
         F.col("qdot").desc(), F.col("neighbor_id").asc()
     )
     return (
         F.broadcast(q)
         .join(c, F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("qdot", idot)
+        .withColumn("qdot", idot("q_q8", "c_q8"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _K)
         .select("query_id", "neighbor_id", "qdot", "rank")
@@ -588,7 +559,7 @@ def sim_rrf_fusion(spark, sf_dir, ann: bool = False):
             e.filter(F.col("vec_id") != 0)
             .select("vec_id", "embedding")
             .crossJoin(q)
-            .withColumn("dot", _dot("embedding", "q_emb"))
+            .withColumn("dot", dot("embedding", "q_emb"))
             .orderBy(F.desc("dot"), F.asc("vec_id"))
             .limit(_RRF_TOPN)
             .withColumn(
@@ -625,7 +596,7 @@ lex_top AS (
 ),
 qv AS (SELECT embedding FROM embeddings WHERE vec_id = 0),
 vec_scored AS (
-  SELECT c.vec_id, {_DOT_SQL.format(a='c.embedding', b='qv.embedding')} AS dot
+  SELECT c.vec_id, {dot_sql('c.embedding', 'qv.embedding')} AS dot
   FROM embeddings c CROSS JOIN qv WHERE c.vec_id <> 0
 ),
 vec_lim AS (
@@ -673,7 +644,7 @@ def _mmr_candidates(e):
         e.filter(F.col("vec_id") != 0)
         .select("vec_id", "embedding")
         .crossJoin(q)
-        .withColumn("rel_micro", _micro(_dot("embedding", "q_emb")))
+        .withColumn("rel_micro", _micro(dot("embedding", "q_emb")))
         .orderBy(F.desc("rel_micro"), F.asc("vec_id"))
         .limit(_MMR_POOL)
         .select("vec_id", "embedding", "rel_micro")
@@ -694,7 +665,7 @@ def _mmr_result(spark, sf_dir):
         pdf = pdf.sort_values("vec_id").reset_index(drop=True)
         V = np.array(pdf["embedding"].tolist(), dtype=np.float64)
         # Pairwise dots with the SAME left-to-right sequential fold as
-        # _dot's F.aggregate — BLAS (V @ V.T) sums in blocked order and
+        # registry.dot's F.aggregate — BLAS (V @ V.T) sums in blocked order and
         # its last-ulp differences flip integer micros at rounding
         # boundaries, which sim_mmr_bound then flags (measured: 8
         # boundary flips on the sf0.01 pool before this fix).
@@ -815,7 +786,7 @@ def sim_mmr_bound(spark, sf_dir):
     ps = (
         cand.select(F.col("vec_id").alias("c_id"), F.col("embedding").alias("c_emb"))
         .crossJoin(F.broadcast(sel))
-        .select("c_id", "p_rank", _micro(_dot("c_emb", "p_emb")).alias("sim_micro"))
+        .select("c_id", "p_rank", _micro(dot("c_emb", "p_emb")).alias("sim_micro"))
     )
     steps = res.filter(F.col("mmr_rank") >= 2).select(
         F.col("mmr_rank").alias("r"),
@@ -1170,12 +1141,12 @@ def sim_rrf_fusion_ann_bound(spark, sf_dir):
 @query(
     "multimodal_caption_alignment",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH de AS (
   SELECT d.doc_id, d.lang, e.embedding
   FROM documents d JOIN embeddings e ON e.vec_id = d.doc_id
 ), comp AS (
-  SELECT lang, unnest(list_transform(embedding, (x, i) -> {'p': i, 'v': x})) AS u
+  SELECT lang, unnest(list_transform(embedding, (x, i) -> {{'p': i, 'v': x}})) AS u
   FROM de
 ), cent AS (
   SELECT lang, u.p AS pos,
@@ -1186,8 +1157,7 @@ WITH de AS (
   SELECT lang, list(c ORDER BY pos) AS centroid FROM cent GROUP BY lang
 ), scored AS (
   SELECT de.doc_id, de.lang,
-         CAST(round(list_sum(list_transform(list_zip(de.embedding, ca.centroid),
-              p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE))) * 1e6) AS BIGINT)
+         CAST(round({dot_sql('de.embedding', 'ca.centroid')} * 1e6) AS BIGINT)
            AS align_micro
   FROM de JOIN cent_arr ca ON de.lang = ca.lang
 ), thr AS (
@@ -1243,7 +1213,7 @@ def multimodal_caption_alignment(spark, sf_dir):
     scored = de.join(F.broadcast(cent_arr), "lang").select(
         "doc_id",
         "lang",
-        F.round(_dot("embedding", "centroid") * 1e6)
+        F.round(dot("embedding", "centroid") * 1e6)
         .cast("bigint")
         .alias("align_micro"),
     )
@@ -1285,7 +1255,7 @@ scored AS (
          c.vec_id AS neighbor_id, c.label AS c_label,
          row_number() OVER (
            PARTITION BY q.vec_id
-           ORDER BY {_DOT_SQL.format(a='q.embedding', b='c.embedding')} DESC,
+           ORDER BY {dot_sql('q.embedding', 'c.embedding')} DESC,
                     c.vec_id ASC) AS rank
   FROM q JOIN embeddings c ON c.vec_id <> q.vec_id
 ),
@@ -1355,7 +1325,7 @@ def sim_retrieval_metrics(spark, sf_dir):
     topk = (
         F.broadcast(q)
         .join(c, F.col("neighbor_id") != F.col("query_id"))
-        .withColumn("dot", _dot("q_emb", "c_emb"))
+        .withColumn("dot", dot("q_emb", "c_emb"))
         .withColumn("rank", F.row_number().over(w))
         .filter(F.col("rank") <= _EVAL_K)
         .withColumn("d", F.element_at(disc, F.col("rank")))
@@ -1423,18 +1393,10 @@ def _ivf_ingest_parts(spark, sf_dir):
     standing = e.filter(F.col("vec_id") % 5 != 4)
     arriving = e.filter(F.col("vec_id") % 5 == 4)
     assign0, centroids = build_ivf_index_from(spark, standing)
-    cdot = F.aggregate(
-        F.zip_with("embedding", "centroid", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cnorm2 = F.aggregate(
-        F.transform("centroid", lambda x: x * x), F.lit(0.0), lambda a, v: a + v
-    )
     w = Window.partitionBy("vec_id").orderBy(F.col("score").asc(), F.col("cell").asc())
     ingested = (
         arriving.crossJoin(F.broadcast(centroids))
-        .withColumn("score", cnorm2 - 2 * cdot)
+        .withColumn("score", sqnorm("centroid") - 2 * dot("embedding", "centroid"))
         .withColumn("rk", F.row_number().over(w))
         .filter(F.col("rk") == 1)
         .select("vec_id", "embedding", "cell")
@@ -1493,18 +1455,10 @@ def sim_ivf_ingest_bound(spark, sf_dir):
             ).alias("v_cover")
         )
     )
-    cdot = F.aggregate(
-        F.zip_with("embedding", "centroid", lambda x, y: x.cast("double") * y),
-        F.lit(0.0),
-        lambda acc, v: acc + v,
-    )
-    cnorm2 = F.aggregate(
-        F.transform("centroid", lambda x: x * x), F.lit(0.0), lambda a, v: a + v
-    )
     chosen = ingested.select("vec_id", "embedding", F.col("cell").alias("chosen"))
     rescored = (
         chosen.crossJoin(F.broadcast(centroids))
-        .withColumn("score", cnorm2 - 2 * cdot)
+        .withColumn("score", sqnorm("centroid") - 2 * dot("embedding", "centroid"))
     )
     chosen_score = rescored.filter(F.col("cell") == F.col("chosen")).select(
         "vec_id", F.col("score").alias("s_chosen")
@@ -1559,9 +1513,7 @@ _PQ_DIM = 16     # dims per subspace
 _PQ_SQL = f"""
 q8 AS (
   SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 127 + 0.5) AS BIGINT))
-           AS v
+         {q8_sql('embedding')} AS v
   FROM embeddings
 ), sub AS (
   SELECT vec_id, sp.s, q8.v[sp.s * {_PQ_DIM} + 1 : sp.s * {_PQ_DIM} + {_PQ_DIM}] AS sv
@@ -1570,11 +1522,8 @@ q8 AS (
   SELECT vec_id AS aid, s, sv AS av FROM sub WHERE vec_id < {_PQ_K}
 ), d2 AS (
   SELECT sub.vec_id, sub.s, asub.aid,
-         CAST(SUM((sub.sv[i.i] - asub.av[i.i]) * (sub.sv[i.i] - asub.av[i.i]))
-              AS BIGINT) AS d2
+         {isqdist_sql('sub.sv', 'asub.av')} AS d2
   FROM sub JOIN asub ON asub.s = sub.s
-  CROSS JOIN (SELECT unnest(range(1, {_PQ_DIM} + 1)) AS i) i
-  GROUP BY sub.vec_id, sub.s, asub.aid
 ), codes AS (
   SELECT vec_id, s, aid AS code FROM (
     SELECT vec_id, s, aid,
@@ -1599,21 +1548,13 @@ q8 AS (
 
 
 def _pq_parts(spark, sf_dir):
-    """Spark side of the shared PQ pipeline: returns (q8, d2, codes,
+    """Spark side of the shared PQ pipeline: returns (qz, d2, codes,
     pq_ranked) DataFrames mirroring the _PQ_SQL CTEs expression-for-
     expression. All arithmetic is integer (int8 grid squared
     distances), so cross-engine equality is exact by construction."""
     e = load_table(spark, sf_dir, "embeddings")
-    q8 = e.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * F.lit(127.0) + F.lit(0.5)).cast(
-                "long"
-            ),
-        ).alias("v"),
-    )
-    sub = q8.select(
+    qz = e.select("vec_id", q8("embedding").alias("v"))
+    sub = qz.select(
         "vec_id",
         F.explode(F.array(*[F.lit(i) for i in range(_PQ_M)])).alias("s"),
         "v",
@@ -1623,14 +1564,9 @@ def _pq_parts(spark, sf_dir):
     asub = sub.filter(F.col("vec_id") < _PQ_K).select(
         F.col("vec_id").alias("aid"), "s", F.col("sv").alias("av")
     )
-    d2expr = F.aggregate(
-        F.zip_with("sv", "av", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
     d2 = cache(
         sub.join(F.broadcast(asub), "s")
-        .select("vec_id", "s", "aid", d2expr.alias("d2"))
+        .select("vec_id", "s", "aid", isqdist("sv", "av").alias("d2"))
     )
     wcode = Window.partitionBy("vec_id", "s").orderBy(
         F.col("d2").asc(), F.col("aid").asc()
@@ -1656,7 +1592,7 @@ def _pq_parts(spark, sf_dir):
     pq_ranked = adc.withColumn(
         "rank", F.row_number().over(wrank).cast("long")
     )
-    return q8, d2, codes, pq_ranked
+    return qz, d2, codes, pq_ranked
 
 
 @query(
@@ -1699,11 +1635,9 @@ def sim_pq_adc(spark, sf_dir):
     oracle=f"""
 WITH {_PQ_SQL}, exact AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(SUM((q.v[i.i] - c.v[i.i]) * (q.v[i.i] - c.v[i.i])) AS BIGINT) AS d2f
+         {isqdist_sql('q.v', 'c.v')} AS d2f
   FROM q8 q JOIN q8 c ON c.vec_id != q.vec_id
-  CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
   WHERE q.vec_id < {_N_QUERIES}
-  GROUP BY q.vec_id, c.vec_id
 ), etop AS (
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id,
@@ -1735,19 +1669,14 @@ def sim_pq_recall(spark, sf_dir):
     join. Recall of anchor-sampled PQ is expected imperfect — the
     NUMBER is the evidence; the companion property test pins it
     against a plain-Python replay."""
-    q8, _, _, pq_ranked = _pq_parts(spark, sf_dir)
-    q = q8.filter(F.col("vec_id") < _N_QUERIES).select(
+    qz, _, _, pq_ranked = _pq_parts(spark, sf_dir)
+    q = qz.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    c = q8.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
-    d2f = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    c = qz.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
     exact = (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", "neighbor_id", d2f.alias("d2f"))
+        .select("query_id", "neighbor_id", isqdist("qv", "cv").alias("d2f"))
     )
     wex = Window.partitionBy("query_id").orderBy(
         F.col("d2f").asc(), F.col("neighbor_id").asc()
@@ -1777,19 +1706,14 @@ def sim_pq_recall(spark, sf_dir):
     oracle=f"""
 WITH q8 AS (
   SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 127 + 0.5) AS BIGINT))
-           AS v
+         {q8_sql('embedding')} AS v
   FROM embeddings
 ), dots AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(SUM(CASE WHEN i.i <= 16 THEN q.v[i.i] * c.v[i.i] ELSE 0 END)
-              AS BIGINT) AS dot16,
-         CAST(SUM(q.v[i.i] * c.v[i.i]) AS BIGINT) AS dot64
+         {idot_sql('q.v[1:16]', 'c.v[1:16]')} AS dot16,
+         {idot_sql('q.v', 'c.v')} AS dot64
   FROM q8 q JOIN q8 c ON c.vec_id != q.vec_id
-  CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
   WHERE q.vec_id < {_N_QUERIES}
-  GROUP BY q.vec_id, c.vec_id
 ), top16 AS (
   SELECT query_id, neighbor_id FROM (
     SELECT query_id, neighbor_id,
@@ -1825,33 +1749,15 @@ def sim_matryoshka_prefix_recall(spark, sf_dir):
 
     Scale: one broadcast of the 10 query vectors over the corpus
     computes BOTH dots in one pass (the prefix is a bounded slice of
-    the same zip_with), two TakeOrdered-class top-10s per query."""
+    the same fold), two TakeOrdered-class top-10s per query."""
     e = load_table(spark, sf_dir, "embeddings")
-    q8 = e.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * F.lit(127.0) + F.lit(0.5)).cast(
-                "long"
-            ),
-        ).alias("v"),
-    )
-    q = q8.filter(F.col("vec_id") < _N_QUERIES).select(
+    qz = e.select("vec_id", q8("embedding").alias("v"))
+    q = qz.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    c = q8.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
-    dot64 = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: x * y),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
-    dot16 = F.aggregate(
-        F.zip_with(
-            F.slice("qv", 1, 16), F.slice("cv", 1, 16), lambda x, y: x * y
-        ),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    c = qz.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
+    dot64 = idot("qv", "cv")
+    dot16 = idot(F.slice("qv", 1, 16), F.slice("cv", 1, 16))
     dots = cache(
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
         .select("query_id", "neighbor_id", dot16.alias("dot16"), dot64.alias("dot64"))
@@ -1893,17 +1799,13 @@ def sim_matryoshka_prefix_recall(spark, sf_dir):
     oracle=f"""
 WITH q8 AS (
   SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 127 + 0.5) AS BIGINT))
-           AS v
+         {q8_sql('embedding')} AS v
   FROM embeddings
 ), d2 AS (
   SELECT q.vec_id AS query_id, c.vec_id AS neighbor_id,
-         CAST(SUM((q.v[i.i] - c.v[i.i]) * (q.v[i.i] - c.v[i.i])) AS BIGINT) AS d2f
+         {isqdist_sql('q.v', 'c.v')} AS d2f
   FROM q8 q JOIN q8 c ON c.vec_id != q.vec_id
-  CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
   WHERE q.vec_id < {_N_QUERIES}
-  GROUP BY q.vec_id, c.vec_id
 )
 SELECT query_id,
        CAST(COUNT(CASE WHEN d2f <= 28000 THEN 1 END) AS BIGINT) AS n_in_radius,
@@ -1914,9 +1816,11 @@ FROM d2 GROUP BY query_id
 def sim_radius_search(spark, sf_dir):
     """Radius (range) similarity search — the kNN complement every
     vector store exposes: per query, how many corpus vectors lie
-    within a fixed L2 ball (integer threshold 28000 on the int8-grid
-    squared distance ≈ cosine ≈ 0.13 for unit vectors at grid scale),
-    plus the exact nearest distance. Radius queries are the dedup /
+    within a fixed L2 ball, plus the exact nearest distance. The
+    distance is `registry.isqdist` on the `q8` grid (rounding contract
+    in `registry.q8`), which scales squared distances by 127²: for
+    unit vectors ‖a − b‖² = 2 − 2·cos, so the threshold 28000 ≈
+    1.74 · 127² is cosine ≈ 0.13. Radius queries are the dedup /
     near-duplicate primitive (is there ANYTHING this close?) where
     top-k is the retrieval primitive; both now pinned. Integer
     distances ⇒ exact hash, the sim_pq_recall posture.
@@ -1926,27 +1830,14 @@ def sim_radius_search(spark, sf_dir):
     the LSH/IVF index twins (bucket, then range-filter within the
     bucket) — this op pins the semantics those must converge to."""
     e = load_table(spark, sf_dir, "embeddings")
-    q8 = e.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * F.lit(127.0) + F.lit(0.5)).cast(
-                "long"
-            ),
-        ).alias("v"),
-    )
-    q = q8.filter(F.col("vec_id") < _N_QUERIES).select(
+    qz = e.select("vec_id", q8("embedding").alias("v"))
+    q = qz.filter(F.col("vec_id") < _N_QUERIES).select(
         F.col("vec_id").alias("query_id"), F.col("v").alias("qv")
     )
-    c = q8.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
-    d2f = F.aggregate(
-        F.zip_with("qv", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, v: acc + v,
-    )
+    c = qz.select(F.col("vec_id").alias("neighbor_id"), F.col("v").alias("cv"))
     return (
         c.join(F.broadcast(q), F.col("neighbor_id") != F.col("query_id"))
-        .select("query_id", d2f.alias("d2f"))
+        .select("query_id", isqdist("qv", "cv").alias("d2f"))
         .groupBy("query_id")
         .agg(
             F.count(F.when(F.col("d2f") <= 28000, 1)).cast("long").alias("n_in_radius"),
@@ -1962,12 +1853,10 @@ def sim_radius_search(spark, sf_dir):
 @query(
     "sim_prototype_selection",
     section="2.I",
-    oracle="""
+    oracle=f"""
 WITH q8 AS (
   SELECT vec_id, label,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 127 + 0.5) AS BIGINT))
-           AS v
+         {q8_sql('embedding')} AS v
   FROM embeddings
 ), dims AS (
   SELECT vec_id, label, i.i AS d, q8.v[i.i] AS x
@@ -2007,17 +1896,8 @@ def sim_prototype_selection(spark, sf_dir):
     from pyspark.sql import Window
 
     e = load_table(spark, sf_dir, "embeddings")
-    q8 = e.select(
-        "vec_id",
-        "label",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * F.lit(127.0) + F.lit(0.5)).cast(
-                "long"
-            ),
-        ).alias("v"),
-    )
-    dims = q8.select(
+    qz = e.select("vec_id", "label", q8("embedding").alias("v"))
+    dims = qz.select(
         "vec_id", "label", F.posexplode("v").alias("d0", "x")
     ).select("vec_id", "label", (F.col("d0") + 1).alias("d"), "x")
     stats = dims.groupBy("label", "d").agg(

@@ -1666,7 +1666,8 @@ def quality_langid_confusion(spark, sf_dir):
     docstring owns the marker-quality caveat).
 
     Scale: one scan scoring each doc against 5 constant marker lists
-    (codegen'd higher-order functions), then a ≤25-cell histogram."""
+    (built-in higher-order functions, which run interpreted:
+    `CodegenFallback`, see registry.py), then a ≤25-cell histogram."""
     d = load_table(spark, sf_dir, "documents")
     toks = tokens()
     scores = {k: _marker_score_spark(toks, v) for k, v in LANG_MARKERS.items()}

@@ -21,7 +21,18 @@ from __future__ import annotations
 
 from pyspark.sql import functions as F
 
-from sparkml_spark.registry import TOKENS_SQL, ZERO_VIOLATIONS, nano, nano_sum, query, tokens
+from sparkml_spark.registry import (
+    TOKENS_SQL,
+    ZERO_VIOLATIONS,
+    isqdist,
+    isqdist_sql,
+    nano,
+    nano_sum,
+    q8,
+    q8_sql,
+    query,
+    tokens,
+)
 from sparkml_spark.session import cache, checkpoint
 from sparkml_spark.sources.loader import load_table
 
@@ -1912,22 +1923,15 @@ def ml_lift_gain_table(spark, sf_dir):
 @query(
     "ml_kmeans_step_exact",
     section="2.J",
-    oracle="""
+    oracle=f"""
 WITH q8 AS (
-  SELECT vec_id,
-         list_transform(embedding,
-                        x -> CAST(floor(CAST(x AS DOUBLE) * 127 + 0.5) AS BIGINT))
-           AS v
+  SELECT vec_id, {q8_sql('embedding')} AS v
   FROM embeddings
 ), seeds AS (
   SELECT vec_id AS cid, v AS cv FROM q8 WHERE vec_id < 10
 ), d2 AS (
-  SELECT q8.vec_id, seeds.cid,
-         CAST(SUM((q8.v[i.i] - seeds.cv[i.i]) * (q8.v[i.i] - seeds.cv[i.i]))
-              AS BIGINT) AS d2
+  SELECT q8.vec_id, seeds.cid, {isqdist_sql('q8.v', 'seeds.cv')} AS d2
   FROM q8 CROSS JOIN seeds
-  CROSS JOIN (SELECT unnest(range(1, 65)) AS i) i
-  GROUP BY q8.vec_id, seeds.cid
 ), assign AS (
   SELECT vec_id, cid, d2 FROM (
     SELECT vec_id, cid, d2,
@@ -1968,25 +1972,12 @@ def ml_kmeans_step_exact(spark, sf_dir):
     # substitutes an InMemoryRelation into THAT query's plan, killing
     # its pushdown (caught by test_quantized_sim_plan_shape when both
     # ran in one session). Cross-query plan hygiene > a 2x local reuse.
-    q8 = e.select(
-        "vec_id",
-        F.transform(
-            "embedding",
-            lambda x: F.floor(x.cast("double") * F.lit(127.0) + F.lit(0.5)).cast(
-                "long"
-            ),
-        ).alias("v"),
-    )
-    seeds = q8.filter(F.col("vec_id") < 10).select(
+    qz = e.select("vec_id", q8("embedding").alias("v"))
+    seeds = qz.filter(F.col("vec_id") < 10).select(
         F.col("vec_id").alias("cid"), F.col("v").alias("cv")
     )
-    d2 = F.aggregate(
-        F.zip_with("v", "cv", lambda x, y: (x - y) * (x - y)),
-        F.lit(0).cast("long"),
-        lambda acc, vv: acc + vv,
-    )
-    dd = q8.crossJoin(F.broadcast(seeds)).select(
-        "vec_id", "cid", d2.alias("d2")
+    dd = qz.crossJoin(F.broadcast(seeds)).select(
+        "vec_id", "cid", isqdist("v", "cv").alias("d2")
     )
     w = Window.partitionBy("vec_id").orderBy(F.col("d2").asc(), F.col("cid").asc())
     assign = (
@@ -1994,7 +1985,7 @@ def ml_kmeans_step_exact(spark, sf_dir):
         .filter(F.col("rn") == 1)
         .select("vec_id", "cid", "d2")
     )
-    mass = q8.select(
+    mass = qz.select(
         "vec_id",
         F.aggregate(
             "v", F.lit(0).cast("long"), lambda acc, x: acc + x

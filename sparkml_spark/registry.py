@@ -19,9 +19,13 @@ means (`dsum`, `lsum`, `davg` and their `_sql` twins; `nano`/`nano_sum`
 for 9dp weights), the md5 hex-slice bucket (`md5_chunk16`), the
 whitespace tokenizer (`tokens`/`TOKENS_SQL`), the duplicate-detection
 content hash (`norm_hash`/`NORM_HASH_SQL`), n-gram start positions
-(`gram_idx`), window-free global ranks (`rank_two_phase`,
-`ntile_two_phase`) and the `*_bound` pin (`ZERO_VIOLATIONS`). No other
-module spells the tokenizer or the content hash (tests/test_conventions.py).
+(`gram_idx`), the vector conventions (the int8 grid `q8` with its
+rounding contract, the exact int64 folds `idot` and `isqdist`, the
+double folds `dot` and `sqnorm`, each with an `_sql` twin),
+window-free global ranks (`rank_two_phase`, `ntile_two_phase`) and the
+`*_bound` pin (`ZERO_VIOLATIONS`). No other module spells the
+tokenizer, the content hash, the int8 grid or a vector product fold
+(tests/test_conventions.py).
 """
 
 from __future__ import annotations
@@ -128,6 +132,113 @@ def norm_hash() -> Column:
 
 #: DuckDB twin of `norm_hash`.
 NORM_HASH_SQL = "md5(lower(trim(regexp_replace(text, '\\s+', ' ', 'g'))))"
+
+
+# ---------------------------------------------------------------------------
+# Vector conventions: the int8 grid and the per-row folds over arrays.
+#
+# Spark's helpers are higher-order functions. `ArrayTransform`,
+# `ZipWith` and `ArrayAggregate` all implement `CodegenFallback` in
+# spark-catalyst 4.1.2, so each runs interpreted inside an otherwise
+# codegen'd stage: a 64-d zip_with + aggregate fold measured ~21 µs
+# per pair (dedup_embedding_cosine / SemDeDup, r13), which is why the
+# all-pairs paths score blocks in one Arrow call instead. The DuckDB
+# twins are list folds (`list_transform` / `list_zip` / `list_sum`).
+# Pairwise folds need arrays of equal length: on unequal lengths Spark's
+# fold is NULL while DuckDB's list_sum skips the zip's NULL padding.
+# ---------------------------------------------------------------------------
+
+#: The int8 grid: a unit-vector component x maps to floor(x*127 + 0.5).
+Q8_SCALE = 127
+
+
+def q8(col: Column | str) -> Column:
+    """THE int8 grid of a float vector: each component x becomes
+    `floor(double(x) * 127 + 0.5)` as a long. DuckDB twin: `q8_sql`.
+
+    Rounding contract (every integer vector op rests on it):
+    - round half up on the DOUBLE: x is widened to double first, and
+      IEEE multiply, add and floor are identical in both engines, so
+      a tie x*127 = k.5 lands on k+1 in both (-k.5 on -k);
+    - unit vectors have |x| <= 1, so components lie in [-127, 127]
+      and a 64-d dot or squared distance is far inside int64;
+    - int64 products and sums are exact and independent of order, so
+      `idot`/`isqdist` need no decimal accumulator and their DuckDB
+      twins stay plain list sums."""
+    return F.transform(
+        col,
+        lambda x: F.floor(x.cast("double") * F.lit(float(Q8_SCALE)) + F.lit(0.5)).cast(
+            "long"
+        ),
+    )
+
+
+def q8_sql(v: str) -> str:
+    """DuckDB twin of `q8`."""
+    return (
+        f"list_transform({v}, x -> CAST(floor(CAST(x AS DOUBLE) * {float(Q8_SCALE)} "
+        "+ 0.5) AS BIGINT))"
+    )
+
+
+def _fold(a: Column | str, b: Column | str, term, zero: Column) -> Column:
+    return F.aggregate(F.zip_with(a, b, term), zero, lambda acc, v: acc + v)
+
+
+def idot(a: Column | str, b: Column | str) -> Column:
+    """Exact int64 dot product of two `q8` vectors (or equal-length
+    slices of them). DuckDB twin: `idot_sql`."""
+    return _fold(a, b, lambda x, y: x * y, F.lit(0).cast("long"))
+
+
+def idot_sql(a: str, b: str) -> str:
+    """DuckDB twin of `idot`."""
+    return f"CAST(list_sum(list_transform(list_zip({a}, {b}), p -> p[1] * p[2])) AS BIGINT)"
+
+
+def isqdist(a: Column | str, b: Column | str) -> Column:
+    """Exact int64 squared L2 distance of two `q8` vectors. DuckDB
+    twin: `isqdist_sql`."""
+    return _fold(a, b, lambda x, y: (x - y) * (x - y), F.lit(0).cast("long"))
+
+
+def isqdist_sql(a: str, b: str) -> str:
+    """DuckDB twin of `isqdist`."""
+    return (
+        f"CAST(list_sum(list_transform(list_zip({a}, {b}), "
+        "p -> (p[1] - p[2]) * (p[1] - p[2]))) AS BIGINT)"
+    )
+
+
+def dot(a: Column | str, b: Column | str) -> Column:
+    """Double dot product: each component widened to double, the
+    products added left to right from 0.0. DuckDB twin: `dot_sql`,
+    the same per-row operation sequence. Callers round the result
+    (6 dp, or integer micros) before hashing or ranking on it."""
+    return _fold(a, b, lambda x, y: x.cast("double") * y.cast("double"), F.lit(0.0))
+
+
+def dot_sql(a: str, b: str) -> str:
+    """DuckDB twin of `dot`."""
+    return (
+        f"list_sum(list_transform(list_zip({a}, {b}), "
+        "p -> CAST(p[1] AS DOUBLE) * CAST(p[2] AS DOUBLE)))"
+    )
+
+
+def sqnorm(v: Column | str) -> Column:
+    """Double squared L2 norm, built like `dot`. DuckDB twin:
+    `sqnorm_sql`."""
+    return F.aggregate(
+        F.transform(v, lambda x: x.cast("double") * x.cast("double")),
+        F.lit(0.0),
+        lambda acc, s: acc + s,
+    )
+
+
+def sqnorm_sql(v: str) -> str:
+    """DuckDB twin of `sqnorm`."""
+    return f"list_sum(list_transform({v}, x -> CAST(x AS DOUBLE) * CAST(x AS DOUBLE)))"
 
 
 def gram_idx(toks: Column, n: int) -> Column:
